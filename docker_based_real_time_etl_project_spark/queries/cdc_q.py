@@ -23,6 +23,7 @@ from docker_based_real_time_etl_project_spark.cdc import (
 from docker_based_real_time_etl_project_spark.queries.registry import (
     dsum, register, sql_dsum, table,
 )
+from docker_based_real_time_etl_project_spark.streaming.pipelines import await_drained
 
 ROW_SCHEMA = T.StructType(
     [
@@ -111,7 +112,7 @@ def q_cdc_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(600)
+    await_drained(q)
     return read_state(spark, state_dir).select(
         "user_id", F.col("value").alias("current_value")
     )
@@ -429,7 +430,7 @@ def q_stream_cdc_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(600)
+    await_drained(q)
     return (
         spark.read.option("pathGlobFilter", "*.parquet").parquet(lake)
         .filter(~F.col("deleted"))
@@ -569,7 +570,7 @@ def _cdc_snap_pipeline(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(600)
+    await_drained(q)
     return lake
 
 
@@ -1313,7 +1314,7 @@ def run_scd2_pipeline(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(600)
+    await_drained(q)
     return lake
 
 

@@ -19,6 +19,7 @@ from docker_based_real_time_etl_project_spark.queries.materialize import (
     table_fingerprint,
 )
 from docker_based_real_time_etl_project_spark.queries.registry import register, table
+from docker_based_real_time_etl_project_spark.streaming.pipelines import await_drained
 
 
 @register(
@@ -1116,7 +1117,7 @@ def _lsh_index_stream_lake(spark: SparkSession, sf_dir: str) -> str:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
+        await_drained(q)
         return lake
 
     return materialize_once(

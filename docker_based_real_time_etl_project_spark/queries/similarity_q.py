@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from docker_based_real_time_etl_project_spark.operators.similarity import brute_force_topk, hyperplanes, lsh_topk
 from docker_based_real_time_etl_project_spark.queries.registry import register, table
+from docker_based_real_time_etl_project_spark.streaming.pipelines import await_drained
 
 # fixed query set: every 100th vector -- deterministic, scales with
 # corpus; kept at 5 points so the headline bench workload (q_cosine_topk)
@@ -518,7 +519,7 @@ def _ivf_stream_lake(spark: SparkSession, sf_dir: str) -> str:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
+        await_drained(q)
         return lake
 
     return materialize_once(

@@ -1550,9 +1550,6 @@ def q_stream_tick_imbalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "value",
         F.get_json_object("props", "$.k").cast("bigint").alias("vol"),
-        F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias(
-            "hour"
-        ),
     )
     out = run_to_memory(
         tick_imbalance_stream(st), output_mode="append", state_partitions=5
@@ -1901,7 +1898,6 @@ def q_stream_roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
         "value",
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
     )
     out = run_to_memory(
         roll_stream(st), output_mode="append", state_partitions=5

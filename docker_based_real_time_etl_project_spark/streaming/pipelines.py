@@ -15,6 +15,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 
 def _value_sum(exact_cents: bool):
@@ -149,6 +150,24 @@ def _fast_tmp() -> str | None:
     return "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 
+STREAM_TIMEOUT_S = 600
+
+
+def await_drained(q: StreamingQuery) -> None:
+    """Wait for a finite (``availableNow``) query to finish. A query
+    still running after ``STREAM_TIMEOUT_S`` is stopped and raises
+    ``TimeoutError``, so a stalled stream never hands back a partial
+    sink; a query that failed re-raises its exception."""
+    if not q.awaitTermination(STREAM_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream {q.name or q.id} did not finish within {STREAM_TIMEOUT_S} s"
+        )
+    err = q.exception()
+    if err is not None:
+        raise err
+
+
 # Observability for scale evidence: after each run_to_memory drain,
 # this holds the drained stream's per-micro-batch state-operator row
 # counts (from StreamingQuery.recentProgress). Peak state rows is THE
@@ -208,7 +227,7 @@ def run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
+        await_drained(q)
         global LAST_PROGRESS
         per_batch = [
             sum(op.get("numRowsTotal", 0) for op in (p.get("stateOperators") or []))

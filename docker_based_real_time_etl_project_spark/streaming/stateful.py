@@ -1,18 +1,30 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``
+"""Custom stateful streaming operators on ``applyInPandasWithState``
 (the engine's answer to "arbitrary per-key streaming state" -- the
 reference has no equivalent; its only state is Connect offset tracking,
 docker-compose.yml:52-54).
 
-Running per-user totals: state = (n_events, value_cents). The value
-sum is accumulated in integer cents (the testdata's ``value`` has two
-decimals), so the running total is exactly associative -- emitted
-totals are bit-identical however micro-batches split, which is what
-lets the final row per key be SQL-oracled instead of rows-only.
+Two kinds live here:
+
+* Twelve streaming indicator families (EWMA, RSI, Bollinger, MACD,
+  tick imbalance, CUSUM, volume bars, Kyle lambda, Roll spread, ACF,
+  max drawdown, realized variance). Each is ONE fold over a key's
+  (ts, event_id)-sorted rows, ``fold(carry, arrays) -> (carry, out)``,
+  plus its carry and output schemas. The single combinator
+  :func:`_fold_stream` turns a fold into an in-order stream or, behind
+  a watermark-delayed re-sort buffer, an out-of-order (OOO) one; the
+  ``*_stream`` / ``*_stream_ooo`` builders only pick the fold.
+* Operators whose state is not a fold over sorted rows: running
+  totals, the as-of attach, content dedup, top-k, interval
+  concurrency and the deadline funnel.
+
+Integer-cent arithmetic throughout keeps every emitted partial
+bit-identical however micro-batches split, which is what lets the
+drained streams be hash-checked against the batch oracle.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
+from typing import Any, Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -21,6 +33,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+_DAY_US = 86_400_000_000
+_HOUR_US = 3_600_000_000
+
+_TYPES = {
+    "long": T.LongType(),
+    "double": T.DoubleType(),
+    "string": T.StringType(),
+    "long[]": T.ArrayType(T.LongType()),
+}
+
+
+def _schema(spec: str) -> T.StructType:
+    """``"n long, ewma double"`` -> StructType (nullable fields)."""
+    return T.StructType(
+        [T.StructField(n, _TYPES[t]) for n, t in (f.split() for f in spec.split(","))]
+    )
+
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -54,7 +84,9 @@ def running_totals_stream(events: DataFrame, watermark: str = "4 hours") -> Data
     """Per-user running (n_events, value_sum), one emitted row per key
     per micro-batch it appears in; the row with the largest n_events per
     key is the final total. Arrow-batched state function -- the Python
-    boundary processes whole batches, never row-at-a-time."""
+    boundary processes whole batches, never row-at-a-time. The value
+    sum is carried in integer cents, so emitted totals are exact however
+    micro-batches split."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy("user_id")
@@ -105,8 +137,6 @@ def _make_attach_asof(tolerance_us: int | None):
     def _attach_asof(
         key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         q_id, q_val, q_ts = state.get if state.exists else (None, None, None)
         pdf = pd.concat(list(pdfs), ignore_index=True)
         # deterministic event order inside the batch: quotes before trades
@@ -341,23 +371,8 @@ def topk_per_group_stream(orders: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming EWMA: sequential-recursion state carried across micro-batches
+# The fold combinator: one stateful-operator skeleton for every indicator
 # ---------------------------------------------------------------------------
-
-_EWMA_OUT = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("day", T.StringType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("ewma", T.DoubleType()),
-    ]
-)
-_EWMA_STATE = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("ewma", T.DoubleType()),
-    ]
-)
 
 
 def _ts_us(series: pd.Series) -> "np.ndarray":
@@ -366,84 +381,254 @@ def _ts_us(series: pd.Series) -> "np.ndarray":
     Arrow can hand applyInPandasWithState folds tz-aware timestamps;
     numpy's tz-aware->datetime64 parse is deprecated (future pandas
     raises). The session tz is pinned UTC, so converting to UTC and
-    stripping the zone is value-identical. Shared by every stateful
-    fold that needs integer event time (round-8 advice: the guard
-    originally lived only in the asof fold)."""
+    stripping the zone is value-identical."""
     if getattr(series.dtype, "tz", None) is not None:
         series = series.dt.tz_convert("UTC").dt.tz_localize(None)
     return series.to_numpy().astype("datetime64[us]").astype("int64")
 
 
-def _concat_sorted(pdfs: Iterable[pd.DataFrame]) -> pd.DataFrame:
-    """ALL of a group's Arrow chunks for this micro-batch, concatenated
-    BEFORE the (ts, event_id) sort. applyInPandasWithState splits a
-    group's batch into multiple chunks past
+def _fmt_us(us: "np.ndarray", fmt: str) -> "np.ndarray":
+    """UTC rendering of microsecond ints, identical to the engine's
+    date_format under the session's pinned UTC timezone."""
+    return pd.Series(us.astype("datetime64[us]")).dt.strftime(fmt).to_numpy()
+
+
+def _load(pdfs: Iterable[pd.DataFrame], cols: tuple[str, ...]):
+    """A group's rows for this micro-batch as parallel arrays
+    ``(ts_us, event_id, *cols)`` in arrival order, or None if it has
+    none. ``"cents"`` is ``value`` scaled to integer cents; any other
+    name is that column as-is.
+
+    ALL of the group's Arrow chunks are concatenated first:
+    applyInPandasWithState splits a group's batch into chunks past
     spark.sql.execution.arrow.maxRecordsPerBatch (~10k) with no
-    cross-chunk ordering guarantee — sorting each chunk independently
-    (the pre-round-8 code) would fold a hot key out of order and
-    silently diverge from the batch oracle. One concat restores the
-    total (ts, event_id) order whatever the chunking."""
-    chunks = list(pdfs)
+    cross-chunk ordering guarantee, so only the whole batch can be
+    sorted."""
+    chunks = [p for p in pdfs if len(p)]
     if not chunks:
-        return pd.DataFrame()
+        return None
     pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    return pdf.sort_values(["ts", "event_id"], kind="mergesort").reset_index(
-        drop=True
+    return (_ts_us(pdf["ts"]), pdf["event_id"].to_numpy().astype("int64")) + tuple(
+        pdf["value"].mul(100).round().astype("int64").to_numpy()
+        if c == "cents"
+        else pdf[c].to_numpy()
+        for c in cols
     )
 
 
-def _ewma_fold(
-    n: int, ewma: float | None, values: "np.ndarray"
-) -> tuple[int, float | None]:
-    """Sequential EWMA recursion over already-ordered values. A plain
-    Python float loop ON PURPOSE: the batch engine folds
-    acc*0.8 + 0.2*x in exactly this operation order, and Python floats
-    are the same IEEE-754 doubles — so the streaming result is
-    BIT-identical to the batch fold, which pandas' ewm()
-    (adjust/init semantics differ) would not give. EWMA is
-    non-associative, so unlike RSI/Bollinger this fold cannot be
-    vectorized without changing the operation sequence."""
-    for x in values:
-        x = float(x)
+def _sort_rows(rows: tuple["np.ndarray", ...]) -> tuple["np.ndarray", ...]:
+    """Parallel arrays reordered by (ts, event_id), stably."""
+    order = np.lexsort((rows[1], rows[0]))
+    return tuple(a[order] for a in rows)
+
+
+def _buffer_release(
+    state: GroupState,
+    buf: tuple["np.ndarray", ...],
+    new: tuple["np.ndarray", ...] | None,
+) -> tuple[tuple["np.ndarray", ...], tuple["np.ndarray", ...]]:
+    """Merge new rows into the reorder buffer, split at the watermark.
+    ``buf``/``new`` are parallel (ts_us, event_id, ...) arrays; returns
+    (released sorted by (ts, event_id), kept).
+
+    Arrivals BELOW the current watermark are dropped here, explicitly:
+    applyInPandasWithState does not pre-filter late rows the way
+    windowed aggregations do (verified empirically —
+    tests/test_streaming.py::test_ooo_late_beyond_watermark_is_dropped
+    fails without this filter), and folding such a row would mean
+    emitting it AFTER later-ts rows already released in earlier
+    batches."""
+    wm_us = state.getCurrentWatermarkMs() * 1000
+    if new is not None:
+        fresh = new[0] >= wm_us
+        if not fresh.all():
+            new = tuple(a[fresh] for a in new)
+        buf = tuple(np.concatenate((b, x)) for b, x in zip(buf, new))
+    rel = buf[0] < wm_us
+    return _sort_rows(tuple(a[rel] for a in buf)), tuple(a[~rel] for a in buf)
+
+
+Fold = Callable[[tuple | None, tuple], tuple[tuple, pd.DataFrame | None]]
+
+
+def _fold_update(
+    keys: tuple[str, ...],
+    fold: Fold,
+    cols: tuple[str, ...],
+    dtypes: tuple[type, ...],
+    n_carry: int,
+    ooo: bool,
+):
+    """The applyInPandasWithState function behind :func:`_fold_stream`
+    (``dtypes``: the numpy dtype of each buffered column, used only
+    when ``ooo``)."""
+    n_buf = len(dtypes) if ooo else 0
+
+    def update(
+        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            st = state.get
+            buf, carry = st[:n_buf], st[n_buf:]
+            if all(v is None for v in carry):
+                carry = None
+        else:
+            buf, carry = ([],) * n_buf, None
+        if ooo:
+            new = None if state.hasTimedOut else _load(pdfs, cols)
+            rows, kept = _buffer_release(
+                state, tuple(np.asarray(b, d) for b, d in zip(buf, dtypes)), new
+            )
+        else:
+            rows = _load(pdfs, cols)
+            if rows is None:
+                return
+            rows = _sort_rows(rows)
+        out = None
+        if len(rows[0]):
+            carry, out = fold(carry, rows)
+        if ooo:
+            state.update(tuple(a.tolist() for a in kept) + (carry or (None,) * n_carry))
+            if len(kept[0]):
+                wm_ms = state.getCurrentWatermarkMs()
+                state.setTimeoutTimestamp(max(wm_ms + 1, int(kept[0].max()) // 1000 + 1))
+        else:
+            state.update(carry)
+        if out is not None and len(out):
+            for i, k in enumerate(keys):
+                out.insert(i, k, key[i])
+            yield out
+
+    return update
+
+
+def _fold_stream(
+    events: DataFrame,
+    keys: tuple[str, ...],
+    fold: Fold,
+    carry_schema: T.StructType,
+    out_schema: T.StructType,
+    cols: tuple[str, ...],
+    ooo: bool,
+    watermark: str,
+    mode: str = "append",
+) -> DataFrame:
+    """Run ``fold`` as a per-``keys`` streaming operator.
+
+    ``fold(carry, rows) -> (carry, out)`` sees a key's rows as parallel
+    numpy arrays ``(ts_us, event_id, *cols)`` sorted by (ts, event_id)
+    (see :func:`_load` for ``cols``), never an empty run. ``carry`` is
+    the tuple it returned last time (fields laid out by
+    ``carry_schema``; any may be None), or None for a fresh key. ``out``
+    is a pandas frame with ``out_schema``'s columns, or None; the key
+    columns are prepended here and empty output is skipped.
+
+    In order (``ooo=False``): each micro-batch's rows are sorted and
+    folded at once. Correct only if every key's rows arrive in
+    (ts, event_id) order ACROSS batches (the availableNow replay
+    slicer cuts on ts value boundaries, so equal timestamps never
+    straddle batches); no timeout.
+
+    Out of order (``ooo=True``): a per-key reorder buffer fronts the
+    fold. State is the buffer (one array per column, schema derived
+    from ``cols``) followed by the carry. Each call:
+
+    1. drops arrivals with ts below the current event-time watermark
+       (beyond the lateness bound: discarded, never misordered);
+    2. releases every buffered row with ts strictly below the
+       watermark, sorted by (ts, event_id). Batch k releases
+       [wm_{k-1}, wm_k), so releases are totally ordered across
+       batches and the fold sees exactly the in-order sequence
+       however shuffled the arrival was;
+    3. folds the release, keeps the rest buffered, and, while rows
+       stay buffered, re-arms an EventTimeTimeout at
+       ``max(wm + 1, max_kept_ms + 1)`` so tail rows flush once the
+       watermark passes them without new data for the key (the replay
+       harness appends a max-ts sentinel to push it past the end).
+
+    State per key is the carry plus the rows inside the delay window:
+    the irreducible price of lateness tolerance (Flink's event-time
+    sort pays the same)."""
+    dtypes = (np.int64, np.int64) + tuple(
+        np.float64
+        if c != "cents" and isinstance(events.schema[c].dataType, T.DoubleType)
+        else np.int64
+        for c in cols
+    )
+    state_schema = carry_schema
+    if ooo:
+        state_schema = T.StructType(
+            [
+                T.StructField(
+                    f"buf_{c}",
+                    T.ArrayType(T.DoubleType() if d is np.float64 else T.LongType()),
+                )
+                for c, d in zip(("ts", "eid", *cols), dtypes)
+            ]
+            + carry_schema.fields
+        )
+    return (
+        events.withWatermark("ts", watermark)
+        .groupBy(*keys)
+        .applyInPandasWithState(
+            _fold_update(keys, fold, cols, dtypes, len(carry_schema), ooo),
+            outputStructType=T.StructType(
+                [T.StructField(k, events.schema[k].dataType) for k in keys]
+                + out_schema.fields
+            ),
+            stateStructType=state_schema,
+            outputMode=mode,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout
+            if ooo
+            else GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# EWMA: the non-associative recursion
+# ---------------------------------------------------------------------------
+
+_EWMA_OUT = _schema("n_events long, ewma double")
+_EWMA_CARRY = _schema("n long, ewma double")
+
+
+def _ewma_fold(carry, rows):
+    """Sequential EWMA recursion (alpha = 0.2). A plain Python float
+    loop ON PURPOSE: the batch engine folds acc*0.8 + 0.2*x in exactly
+    this operation order, and Python floats are the same IEEE-754
+    doubles — so the streaming result is BIT-identical to the batch
+    fold, which pandas' ewm() (adjust/init semantics differ) would not
+    give. EWMA is non-associative, so unlike RSI/Bollinger this fold
+    cannot be vectorized without changing the operation sequence."""
+    n, ewma = carry or (0, None)
+    vals = rows[2].tolist()
+    for x in vals:
         ewma = x if ewma is None else ewma * 0.8 + 0.2 * x
-        n += 1
-    return n, ewma
+    n += len(vals)
+    return (n, ewma), pd.DataFrame({"n_events": [n], "ewma": [ewma]})
 
 
-def _update_ewma(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Fold the batch's rows (ordered across ALL chunks) into the
-    carried EWMA. Groups are one (event_type, day) — bounded by the
-    grain, never the corpus."""
-    n, ewma = state.get if state.exists else (0, None)
-    pdf = _concat_sorted(pdfs)
-    if len(pdf):
-        n, ewma = _ewma_fold(n, ewma, pdf["value"].to_numpy(dtype="float64"))
-    state.update((n, ewma))
-    yield pd.DataFrame(
-        {"event_type": [key[0]], "day": [key[1]], "n_events": [n], "ewma": [ewma]}
-    )
+def _by_day(events: DataFrame) -> DataFrame:
+    return events.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
 
 
 def ewma_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
-    """Per-(event_type, day) streaming EWMA (alpha = 0.2). Correct
-    ONLY under in-order replay per key (the availableNow slicer cuts
-    on ts VALUE boundaries, so equal timestamps never straddle
-    batches and cross-batch order extends the within-batch
-    (ts, event_id) sort); a production deployment fronts this with
-    the same ordering guarantee or a watermark-delayed re-sort."""
-    return (
-        events.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
-        .withWatermark("ts", watermark)
-        .groupBy("event_type", "day")
-        .applyInPandasWithState(
-            _update_ewma,
-            outputStructType=_EWMA_OUT,
-            stateStructType=_EWMA_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    """Per-(event_type, day) streaming EWMA, one updated row per key
+    per batch; in-order replay per key (see :func:`_fold_stream`)."""
+    return _fold_stream(
+        _by_day(events), ("event_type", "day"), _ewma_fold, _EWMA_CARRY,
+        _EWMA_OUT, ("value",), False, watermark, mode="update",
+    )
+
+
+def ewma_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
+    """EWMA over an OUT-OF-ORDER stream: any arrival order whose
+    lateness stays within ``watermark`` hash-matches the in-order run
+    bit for bit."""
+    return _fold_stream(
+        _by_day(events), ("event_type", "day"), _ewma_fold, _EWMA_CARRY,
+        _EWMA_OUT, ("value",), True, watermark, mode="update",
     )
 
 
@@ -458,46 +643,28 @@ def final_ewma(emitted: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming RSI: a sliding integer window carried across micro-batches
+# RSI and Bollinger: sliding integer windows carried as rings
 # ---------------------------------------------------------------------------
 
-_RSI_OUT = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        # int64 epoch-micros: string rendering happens ENGINE-side after
-        # the drain (JVM date_format in whole-stage codegen) — pandas
-        # strftime over every emitted row was the hottest per-row cost
-        # left in the fold path
-        T.StructField("ts_us", T.LongType()),
-        T.StructField("rsi_micro", T.LongType()),
-    ]
-)
-# ring of the last 14 price deltas (integer cents) + last price + count
-_RSI_STATE = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("last_cents", T.LongType()),
-        T.StructField("diffs", T.ArrayType(T.LongType())),
-    ]
-)
+# ts_us is int64 epoch-micros: string rendering happens ENGINE-side
+# after the drain (JVM date_format in whole-stage codegen)
+_RSI_OUT = _schema("ts_us long, rsi_micro long")
+# count, last price (integer cents) and the ring of the last 14 deltas
+_RSI_CARRY = _schema("n long, last_cents long, diffs long[]")
 
 
-def _rsi_fold(
-    n: int,
-    last: int | None,
-    diffs: list[int],
-    cents: "np.ndarray",
-    ts_us: "np.ndarray",
-) -> tuple[int, int, list[int], pd.DataFrame]:
-    """Vectorized Cutler-RSI fold over one ordered run of prices.
+def _rsi_fold(carry, rows):
+    """Vectorized Cutler-RSI (14-period) fold: every qualifying row
+    (>= 15th of its key) emits RSI from the exact integer window.
 
-    Integer arithmetic is associative, so the per-row Python loop the
-    pre-round-8 code ran is replaced by numpy int64 cumsum window
-    differences — bit-identical outputs (every quantity is an exact
-    int64: 14·|Δcents| ≤ ~1e8, ×1e8 ≤ 1e16 < 2^63), ~100× less
-    interpreter cost per batch, which matters because state is keyed
-    by event_type (few keys) so all of a key's rows funnel through
-    one task."""
+    Integer arithmetic is associative, so the window sums are numpy
+    int64 cumsum differences — bit-identical to a per-row loop (every
+    quantity is an exact int64: 14·|Δcents| ≤ ~1e8, ×1e8 ≤ 1e16 <
+    2^63), at ~100× less interpreter cost per batch, which matters
+    because state is keyed by event_type (few keys) so all of a key's
+    rows funnel through one task."""
+    ts_us, _, cents = rows
+    n, last, diffs = carry or (0, None, [])
     m = len(cents)
     ring = np.asarray(diffs, dtype=np.int64)
     if last is None:
@@ -509,8 +676,7 @@ def _rsi_fold(
     full = np.concatenate((ring, d_new))
     gains = np.concatenate(([0], np.cumsum(np.where(full > 0, full, 0))))
     losses = np.concatenate(([0], np.cumsum(np.where(full < 0, -full, 0))))
-    rows = np.arange(m)
-    emit = np.flatnonzero(n + rows + 1 >= 15)
+    emit = np.flatnonzero(n + np.arange(m) + 1 >= 15)
     # index in `full` of the delta ending at row i; emission implies at
     # least 14 deltas end there, so the [j-13, j] window is always full
     j = len(ring) + emit - first_delta_row
@@ -521,94 +687,57 @@ def _rsi_fold(
     out = pd.DataFrame(
         {
             "ts_us": ts_us[emit],
-            "rsi_micro": pd.arrays.IntegerArray(
-                rsi.astype("int64"), mask=(tot == 0)
-            ),
+            "rsi_micro": pd.arrays.IntegerArray(rsi.astype("int64"), mask=(tot == 0)),
         }
     )
-    new_last = int(cents[-1]) if m else last
-    new_ring = full[-14:].astype("int64").tolist() if len(full) else list(diffs)
-    return n + m, new_last, new_ring, out
-
-
-def _update_rsi(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Carry (n, last price, last-14 deltas) per event_type; every
-    qualifying row (>= 15th of its key) emits Cutler RSI from the
-    exact integer window. The window ring is 14 longs: state is O(1)
-    per key; the in-batch fold is vectorized (_rsi_fold)."""
-    n, last, diffs = state.get if state.exists else (0, None, [])
-    pdf = _concat_sorted(pdfs)
-    if not len(pdf):
-        state.update((n, last, list(diffs)))
-        return
-    cents = pdf["value"].mul(100).round().astype("int64").to_numpy()
-    ts_us = _ts_us(pdf["ts"])
-    n, last, diffs, out = _rsi_fold(n, last, list(diffs), cents, ts_us)
-    state.update((n, last, diffs))
-    out.insert(0, "event_type", key[0])
-    yield out
+    return (n + m, int(cents[-1]), full[-14:].tolist()), out
 
 
 def rsi_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
-    """Per-event_type streaming 14-period RSI; in-order-per-key replay
-    guaranteed as for ewma_stream (ts-value slice boundaries)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_rsi,
-            outputStructType=_RSI_OUT,
-            stateStructType=_RSI_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    """Per-event_type streaming 14-period RSI; in-order replay per key
+    (see :func:`_fold_stream`). State is O(1) per key."""
+    return _fold_stream(
+        events, ("event_type",), _rsi_fold, _RSI_CARRY, _RSI_OUT, ("cents",),
+        False, watermark,
     )
 
 
-# ---------------------------------------------------------------------------
-# Streaming Bollinger: 20-price integer ring carried across micro-batches
-# ---------------------------------------------------------------------------
-
-_BOLL_OUT = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("ts_us", T.LongType()),
-        T.StructField("mean_micro", T.LongType()),
-        # raw double: the half-away micro rounding happens engine-side
-        # after the drain (Python round() is half-EVEN — a divergence
-        # trap this schema dodges by construction)
-        T.StructField("sd_raw", T.DoubleType()),
-    ]
-)
-_BOLL_STATE = T.StructType(
-    [
-        T.StructField("ring", T.ArrayType(T.LongType())),
-    ]
-)
+def rsi_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
+    """14-period RSI over an OUT-OF-ORDER stream; emits append-mode
+    rows identical to the in-order twin whenever lateness stays within
+    ``watermark``."""
+    return _fold_stream(
+        events, ("event_type",), _rsi_fold, _RSI_CARRY, _RSI_OUT, ("cents",),
+        True, watermark,
+    )
 
 
-def _boll_fold(
-    ring: list[int], cents: "np.ndarray", ts_us: "np.ndarray"
-) -> tuple[list[int], pd.DataFrame]:
-    """Vectorized 20-period Bollinger fold over one ordered run.
+# sd_raw is a raw double: the half-away micro rounding happens
+# engine-side after the drain (Python round() is half-EVEN — a
+# divergence trap this schema dodges by construction)
+_BOLL_OUT = _schema("ts_us long, mean_micro long, sd_raw double")
+_BOLL_CARRY = _schema("ring long[]")
 
-    Same vectorization argument as _rsi_fold: the sliding Σc and Σc²
-    are exact int64 cumsum differences (c ≤ ~1e6 cents → c² ≤ 1e12;
-    a key's batch would need ~9e6 rows before the Σc² cumsum itself
-    neared 2^63), and σ touches float exactly once — np.sqrt of an
-    exactly-representable integer (20·Σc²−(Σc)² ≤ ~4e14 < 2^53) is
-    the same correctly-rounded IEEE double math.sqrt produced, then
-    /20*10000 in the identical operation order. Bit-identical to the
-    per-row loop it replaces."""
-    m = len(cents)
-    r0 = len(ring)
-    full = np.concatenate((np.asarray(ring, dtype=np.int64), cents))
+
+def _boll_fold(carry, rows):
+    """Vectorized 20-period Bollinger fold over the last 20 prices
+    (integer cents): each row once the ring is full emits the rolling
+    mean (integer division) and population stddev.
+
+    The sliding Σc and Σc² are exact int64 cumsum differences
+    (c ≤ ~1e6 cents → c² ≤ 1e12; a key's batch would need ~9e6 rows
+    before the Σc² cumsum itself neared 2^63), and σ touches float
+    exactly once — np.sqrt of an exactly-representable integer
+    (20·Σc²−(Σc)² ≤ ~4e14 < 2^53) is the same correctly-rounded IEEE
+    double math.sqrt produces, then /20*10000 in the identical
+    operation order. Bit-identical to the batch engines'."""
+    ts_us, _, cents = rows
+    ring = np.asarray(carry[0] if carry else [], dtype=np.int64)
+    full = np.concatenate((ring, cents))
     c1 = np.concatenate(([0], np.cumsum(full)))
     c2 = np.concatenate(([0], np.cumsum(full * full)))
-    emit = np.flatnonzero(r0 + np.arange(m) + 1 >= 20)
-    e = r0 + emit  # window [e-19, e] in `full` is always full at emission
+    emit = np.flatnonzero(len(ring) + np.arange(len(cents)) + 1 >= 20)
+    e = len(ring) + emit  # window [e-19, e] in `full` is always full at emission
     s = c1[e + 1] - c1[e - 19]
     s2 = c2[e + 1] - c2[e - 19]
     out = pd.DataFrame(
@@ -618,271 +747,39 @@ def _boll_fold(
             "sd_raw": np.sqrt((20 * s2 - s * s).astype("float64")) / 20 * 10000,
         }
     )
-    return full[-20:].astype("int64").tolist(), out
-
-
-def _update_bollinger(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Carry the last 20 prices (integer cents) per event_type; each
-    row once the ring is full emits the rolling mean (integer
-    division) and population stddev (one correctly-rounded sqrt of an
-    exact integer — bit-identical to the batch engines'). O(1) state;
-    in-batch fold vectorized (_boll_fold)."""
-    (ring,) = state.get if state.exists else ([],)
-    pdf = _concat_sorted(pdfs)
-    if not len(pdf):
-        state.update((list(ring),))
-        return
-    cents = pdf["value"].mul(100).round().astype("int64").to_numpy()
-    ts_us = _ts_us(pdf["ts"])
-    ring, out = _boll_fold(list(ring), cents, ts_us)
-    state.update((ring,))
-    out.insert(0, "event_type", key[0])
-    yield out
+    return (full[-20:].tolist(),), out
 
 
 def bollinger_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
     """Per-event_type streaming 20-period Bollinger stats; in-order
-    replay per key as for ewma_stream/rsi_stream."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_bollinger,
-            outputStructType=_BOLL_OUT,
-            stateStructType=_BOLL_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    replay per key (see :func:`_fold_stream`)."""
+    return _fold_stream(
+        events, ("event_type",), _boll_fold, _BOLL_CARRY, _BOLL_OUT, ("cents",),
+        False, watermark,
+    )
+
+
+def bollinger_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
+    """20-period Bollinger stats over an OUT-OF-ORDER stream;
+    bit-identical to the in-order twin whenever lateness stays within
+    ``watermark``."""
+    return _fold_stream(
+        events, ("event_type",), _boll_fold, _BOLL_CARRY, _BOLL_OUT, ("cents",),
+        True, watermark,
     )
 
 
 # ---------------------------------------------------------------------------
-# Watermark-delayed re-sort: out-of-order-tolerant indicator streams
-# ---------------------------------------------------------------------------
-#
-# The in-order indicator twins above are correct only under in-order
-# replay per key. These variants front the SAME fold cores with a
-# per-key reorder buffer: arriving rows are buffered in state, and only
-# rows with ts strictly BELOW the current event-time watermark are
-# released — sorted by (ts, event_id) — into the fold. Release sets are
-# totally ordered across micro-batches (batch k releases (wm_{k-1},
-# wm_k); the operator itself drops arrivals older than wm —
-# applyInPandasWithState does no late-row pre-filtering, unlike
-# windowed aggregations), so the fold sees exactly the batch engine's
-# order however
-# shuffled the arrival was, as long as lateness stays within the
-# watermark delay. State per key = fold state + the buffered rows
-# inside the delay window: O(rows-per-delay-window), the irreducible
-# price of out-of-order tolerance (Flink's event-time sort pays the
-# same). An EventTimeTimeout is re-armed while the buffer is non-empty
-# so tail rows flush once the watermark finally passes them (the replay
-# harness appends a max-ts sentinel to push it past the end).
-
-
-def _buffer_release(
-    state: GroupState,
-    buf: tuple["np.ndarray", ...],
-    new: tuple["np.ndarray", ...] | None,
-) -> tuple[tuple["np.ndarray", ...], tuple["np.ndarray", ...]]:
-    """Merge new rows into the buffer, split at the watermark.
-    ``buf``/``new`` are parallel (ts_us, event_id, value) arrays;
-    returns (released sorted by (ts, event_id), kept).
-
-    Arrivals BELOW the current watermark are dropped here, explicitly:
-    applyInPandasWithState does not pre-filter late rows the way
-    windowed aggregations do (verified empirically —
-    tests/test_streaming.py::test_ooo_late_beyond_watermark_is_dropped
-    fails without this filter), and folding such a row would mean
-    emitting it AFTER later-ts rows already released in earlier
-    batches. Dropping at the watermark is exactly the contract every
-    watermarked Spark operator advertises: lateness within the delay
-    is invisible, beyond it the row is discarded — never misordered."""
-    wm_us = state.getCurrentWatermarkMs() * 1000
-    if new is not None:
-        fresh = new[0] >= wm_us
-        if not fresh.all():
-            new = tuple(a[fresh] for a in new)
-        buf = tuple(np.concatenate((b, x)) for b, x in zip(buf, new))
-    rel = buf[0] < wm_us
-    released = tuple(a[rel] for a in buf)
-    kept = tuple(a[~rel] for a in buf)
-    order = np.lexsort((released[1], released[0]))
-    return tuple(a[order] for a in released), kept
-
-
-def _rearm_or_clear(state: GroupState, kept_ts_us: "np.ndarray", new_state) -> None:
-    state.update(new_state)
-    if len(kept_ts_us):
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(wm_ms + 1, int(kept_ts_us.max()) // 1000 + 1))
-
-
-def _new_rows(pdfs: Iterable[pd.DataFrame], value_dtype: str | None):
-    """(ts_us, event_id[, value]) arrays from a batch's chunks; the
-    value column is omitted when ``value_dtype`` is None (folds keyed
-    on time/id alone), carried as float64, or scaled to integer cents
-    otherwise."""
-    chunks = [p for p in pdfs if len(p)]
-    if not chunks:
-        return None
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    base = (_ts_us(pdf["ts"]), pdf["event_id"].to_numpy().astype("int64"))
-    if value_dtype is None:
-        return base
-    return base + (
-        pdf["value"].to_numpy().astype(value_dtype)
-        if value_dtype == "float64"
-        else pdf["value"].mul(100).round().astype("int64").to_numpy(),
-    )
-
-
-_EWMA_OOO_STATE = T.StructType(
-    [
-        T.StructField("buf_ts", T.ArrayType(T.LongType())),
-        T.StructField("buf_eid", T.ArrayType(T.LongType())),
-        T.StructField("buf_val", T.ArrayType(T.DoubleType())),
-        T.StructField("n", T.LongType()),
-        T.StructField("ewma", T.DoubleType()),
-    ]
-)
-
-
-def _update_ewma_ooo(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        bts, beid, bval, n, ewma = state.get
-        buf = (
-            np.asarray(bts, np.int64),
-            np.asarray(beid, np.int64),
-            np.asarray(bval, np.float64),
-        )
-    else:
-        buf = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64))
-        n, ewma = 0, None
-    new = None if state.hasTimedOut else _new_rows(pdfs, "float64")
-    released, kept = _buffer_release(state, buf, new)
-    if len(released[0]):
-        n, ewma = _ewma_fold(n, ewma, released[2])
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "day": [key[1]],
-                "n_events": [n],
-                "ewma": [ewma],
-            }
-        )
-    _rearm_or_clear(
-        state, kept[0], (kept[0].tolist(), kept[1].tolist(), kept[2].tolist(), n, ewma)
-    )
-
-
-def ewma_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
-    """EWMA over an OUT-OF-ORDER stream: the watermark-delayed re-sort
-    feeds _ewma_fold, so any arrival order whose lateness stays within
-    ``watermark`` hash-matches the in-order run bit for bit."""
-    return (
-        events.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
-        .withWatermark("ts", watermark)
-        .groupBy("event_type", "day")
-        .applyInPandasWithState(
-            _update_ewma_ooo,
-            outputStructType=_EWMA_OUT,
-            stateStructType=_EWMA_OOO_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-_RSI_OOO_STATE = T.StructType(
-    [
-        T.StructField("buf_ts", T.ArrayType(T.LongType())),
-        T.StructField("buf_eid", T.ArrayType(T.LongType())),
-        T.StructField("buf_cents", T.ArrayType(T.LongType())),
-        T.StructField("n", T.LongType()),
-        T.StructField("last_cents", T.LongType()),
-        T.StructField("diffs", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def _update_rsi_ooo(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        bts, beid, bc, n, last, diffs = state.get
-        buf = (
-            np.asarray(bts, np.int64),
-            np.asarray(beid, np.int64),
-            np.asarray(bc, np.int64),
-        )
-        last = None if n == 0 else last
-        diffs = list(diffs)
-    else:
-        buf = (np.empty(0, np.int64),) * 3
-        n, last, diffs = 0, None, []
-    new = None if state.hasTimedOut else _new_rows(pdfs, "int64")
-    released, kept = _buffer_release(state, buf, new)
-    if len(released[0]):
-        n, last, diffs, out = _rsi_fold(
-            n, last, diffs, released[2], released[0]
-        )
-        if len(out):
-            out.insert(0, "event_type", key[0])
-            yield out
-    _rearm_or_clear(
-        state,
-        kept[0],
-        (
-            kept[0].tolist(),
-            kept[1].tolist(),
-            kept[2].tolist(),
-            n,
-            last if last is not None else 0,
-            diffs,
-        ),
-    )
-
-
-def rsi_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
-    """14-period RSI over an OUT-OF-ORDER stream via the same
-    watermark-delayed re-sort; emits append-mode rows identical to the
-    in-order twin whenever lateness stays within ``watermark``."""
-    return events.withWatermark("ts", watermark).groupBy("event_type").applyInPandasWithState(
-        _update_rsi_ooo,
-        outputStructType=_RSI_OUT,
-        stateStructType=_RSI_OOO_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming MACD: daily-close EMA-12/EMA-26 state carried across batches
+# MACD: daily-close EMA-12/EMA-26
 # ---------------------------------------------------------------------------
 
-_MACD_OUT = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("n_days", T.LongType()),
-        # raw double: the half-away micro snap happens engine-side after
-        # the drain (same rounding-trap dodge as the Bollinger twin)
-        T.StructField("macd_raw", T.DoubleType()),
-        T.StructField("upd", T.LongType()),
-    ]
-)
-_MACD_STATE = T.StructType(
-    [
-        T.StructField("n_rows", T.LongType()),
-        T.StructField("n_days", T.LongType()),
-        T.StructField("e12", T.DoubleType()),
-        T.StructField("e26", T.DoubleType()),
-        T.StructField("last_day", T.StringType()),
-        T.StructField("close", T.DoubleType()),
-    ]
+# macd_raw is a raw double: the half-away micro snap happens
+# engine-side after the drain (same rounding-trap dodge as Bollinger)
+_MACD_OUT = _schema("n_days long, macd_raw double, upd long")
+# e12/e26 are null until a day completes; last_day (UTC day number)
+# and close are null until the first row
+_MACD_CARRY = _schema(
+    "n_rows long, n_days long, e12 double, e26 double, last_day long, close double"
 )
 
 _A12 = 2.0 / 13.0
@@ -895,153 +792,20 @@ def _ema_step(e: float | None, a: float, c: float) -> float:
     return c if e is None else e * (1.0 - a) + a * c
 
 
-def _update_macd(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Carry (EMA-12, EMA-26 over completed daily closes, the running
-    day and its latest value) per event_type. Each batch folds the days
-    it COMPLETES into the EMAs (a Python loop over the handful of
-    calendar days a batch spans — bounded by the calendar, not rows;
-    the per-row work of finding day boundaries is vectorized) and emits
+def _macd_fold(carry, rows):
+    """Fold rows into the EMA-12/26 of completed daily closes and emit
     the provisional MACD as if the stream ended now: one extra EMA step
-    on the running close, the exact operation the batch engine performs
-    on its final array element. The last emission per key (max upd) is
-    therefore BIT-identical to the batch q_macd fold."""
-    if state.exists:
-        n_rows, n_days, e12, e26, last_day, close = state.get
-    else:
-        n_rows, n_days, e12, e26, last_day, close = 0, 0, None, None, None, None
-    pdf = _concat_sorted(pdfs)
-    if len(pdf):
-        days = pdf["ts"].dt.strftime("%Y-%m-%d").to_numpy()
-        vals = pdf["value"].to_numpy(dtype="float64")
-        # last row index of each day-run within the batch
-        ends = np.flatnonzero(
-            np.concatenate((days[1:] != days[:-1], [True]))
-        )
-        n_rows += len(pdf)
-        for e in ends:
-            d, c = days[e], float(vals[e])
-            if d == last_day:
-                close = c
-            else:
-                if last_day is not None:
-                    e12 = _ema_step(e12, _A12, close)
-                    e26 = _ema_step(e26, _A26, close)
-                last_day, close = d, c
-                n_days += 1
-    state.update((n_rows, n_days, e12, e26, last_day, close))
-    if last_day is None:
-        return
-    p12 = _ema_step(e12, _A12, close)
-    p26 = _ema_step(e26, _A26, close)
-    yield pd.DataFrame(
-        {
-            "event_type": [key[0]],
-            "n_days": [n_days],
-            "macd_raw": [p12 - p26],
-            "upd": [n_rows],
-        }
-    )
+    on the running close, the exact operation the batch engine
+    performs on its final array element. The last emission per key
+    (max upd) is therefore BIT-identical to the batch q_macd fold.
 
-
-def macd_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
-    """Per-event_type streaming MACD line (EMA-12 − EMA-26 of daily
-    closes); in-order replay per key as for ewma_stream. State is six
-    scalars per key — O(grain), however long the stream runs."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_macd,
-            outputStructType=_MACD_OUT,
-            stateStructType=_MACD_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-_BOLL_OOO_STATE = T.StructType(
-    [
-        T.StructField("buf_ts", T.ArrayType(T.LongType())),
-        T.StructField("buf_eid", T.ArrayType(T.LongType())),
-        T.StructField("buf_cents", T.ArrayType(T.LongType())),
-        T.StructField("ring", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def _update_bollinger_ooo(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        bts, beid, bc, ring = state.get
-        buf = (
-            np.asarray(bts, np.int64),
-            np.asarray(beid, np.int64),
-            np.asarray(bc, np.int64),
-        )
-        ring = list(ring)
-    else:
-        buf = (np.empty(0, np.int64),) * 3
-        ring = []
-    new = None if state.hasTimedOut else _new_rows(pdfs, "int64")
-    released, kept = _buffer_release(state, buf, new)
-    if len(released[0]):
-        ring, out = _boll_fold(ring, released[2], released[0])
-        if len(out):
-            out.insert(0, "event_type", key[0])
-            yield out
-    _rearm_or_clear(
-        state,
-        kept[0],
-        (kept[0].tolist(), kept[1].tolist(), kept[2].tolist(), ring),
-    )
-
-
-def bollinger_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
-    """20-period Bollinger stats over an OUT-OF-ORDER stream via the
-    same watermark-delayed re-sort as rsi_stream_ooo; bit-identical to
-    the in-order twin whenever lateness stays within ``watermark``."""
-    return events.withWatermark("ts", watermark).groupBy("event_type").applyInPandasWithState(
-        _update_bollinger_ooo,
-        outputStructType=_BOLL_OUT,
-        stateStructType=_BOLL_OOO_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-_MACD_OOO_STATE = T.StructType(
-    [
-        T.StructField("buf_ts", T.ArrayType(T.LongType())),
-        T.StructField("buf_eid", T.ArrayType(T.LongType())),
-        T.StructField("buf_val", T.ArrayType(T.DoubleType())),
-        T.StructField("n_rows", T.LongType()),
-        T.StructField("n_days", T.LongType()),
-        T.StructField("e12", T.DoubleType()),
-        T.StructField("e26", T.DoubleType()),
-        # UTC day number (ts_us // 86_400e6); -1 encodes "no day yet".
-        # e12/e26 are None iff n_days <= 1 (no day completed), close/
-        # last_day None iff n_days == 0 — both recoverable from n_days,
-        # so plain placeholders round-trip the optional scalars.
-        T.StructField("last_day", T.LongType()),
-        T.StructField("close", T.DoubleType()),
-    ]
-)
-
-_US_PER_DAY = 86_400_000_000
-
-
-def _macd_fold(n_days, e12, e26, last_day, close, ts_us, vals):
-    """Fold released (ts, value) rows — already in exact (ts, event_id)
-    order — into the daily-close EMA-12/26 state. Day identity is the
-    UTC day number, identical to the batch date_trunc('day') under the
-    session's UTC timezone. Python loop is over day-run boundaries
-    within the release (bounded by the calendar, not rows); run ends
-    are found vectorized."""
-    day_idx = ts_us // _US_PER_DAY
+    Day identity is the UTC day number, identical to the batch
+    date_trunc('day') under the session's UTC timezone. The Python
+    loop is over day-run boundaries (bounded by the calendar, not
+    rows); run ends are found vectorized."""
+    ts_us, _, vals = rows
+    n_rows, n_days, e12, e26, last_day, close = carry or (0, 0, None, None, None, None)
+    day_idx = ts_us // _DAY_US
     ends = np.flatnonzero(np.concatenate((day_idx[1:] != day_idx[:-1], [True])))
     for e in ends:
         d, c = int(day_idx[e]), float(vals[e])
@@ -1053,138 +817,87 @@ def _macd_fold(n_days, e12, e26, last_day, close, ts_us, vals):
                 e26 = _ema_step(e26, _A26, close)
             last_day, close = d, c
             n_days += 1
-    return n_days, e12, e26, last_day, close
+    n_rows += len(ts_us)
+    macd = _ema_step(e12, _A12, close) - _ema_step(e26, _A26, close)
+    return (n_rows, n_days, e12, e26, last_day, close), pd.DataFrame(
+        {"n_days": [n_days], "macd_raw": [macd], "upd": [n_rows]}
+    )
 
 
-def _update_macd_ooo(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        bts, beid, bval, n_rows, n_days, e12, e26, last_day, close = state.get
-        buf = (
-            np.asarray(bts, np.int64),
-            np.asarray(beid, np.int64),
-            np.asarray(bval, np.float64),
-        )
-        if n_days == 0:
-            last_day, close = None, None
-        if n_days <= 1:
-            e12, e26 = None, None
-    else:
-        buf = (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64))
-        n_rows, n_days, e12, e26, last_day, close = 0, 0, None, None, None, None
-    new = None if state.hasTimedOut else _new_rows(pdfs, "float64")
-    released, kept = _buffer_release(state, buf, new)
-    if len(released[0]):
-        n_rows += len(released[0])
-        n_days, e12, e26, last_day, close = _macd_fold(
-            n_days, e12, e26, last_day, close, released[0], released[2]
-        )
-        # provisional MACD as if the stream ended now: one extra EMA
-        # step on the running close — the exact operation the batch
-        # fold applies to its final array element, so the max-upd
-        # emission is bit-identical to batch q_macd.
-        p12 = _ema_step(e12, _A12, close)
-        p26 = _ema_step(e26, _A26, close)
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_days": [n_days],
-                "macd_raw": [p12 - p26],
-                "upd": [n_rows],
-            }
-        )
-    _rearm_or_clear(
-        state,
-        kept[0],
-        (
-            kept[0].tolist(),
-            kept[1].tolist(),
-            kept[2].tolist(),
-            n_rows,
-            n_days,
-            e12 if e12 is not None else 0.0,
-            e26 if e26 is not None else 0.0,
-            last_day if last_day is not None else -1,
-            close if close is not None else 0.0,
-        ),
+def macd_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
+    """Per-event_type streaming MACD line (EMA-12 − EMA-26 of daily
+    closes); in-order replay per key (see :func:`_fold_stream`). State
+    is six scalars per key — O(grain), however long the stream runs."""
+    return _fold_stream(
+        events, ("event_type",), _macd_fold, _MACD_CARRY, _MACD_OUT, ("value",),
+        False, watermark, mode="update",
     )
 
 
 def macd_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
-    """Streaming MACD over an OUT-OF-ORDER stream: the watermark-delayed
-    re-sort feeds the same daily-close EMA fold as macd_stream, so the
-    final (max-upd) emission per key hash-matches the batch q_macd
-    oracle for any arrival order whose lateness stays within
-    ``watermark``. Completes the out-of-order matrix: all four
-    order-sensitive indicator twins (EWMA/RSI/Bollinger/MACD) now have
-    lateness-tolerant forms; VWAP needs none (associative integer
-    sums — arrival order cannot change it)."""
-    return events.withWatermark("ts", watermark).groupBy("event_type").applyInPandasWithState(
-        _update_macd_ooo,
-        outputStructType=_MACD_OUT,
-        stateStructType=_MACD_OOO_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    """Streaming MACD over an OUT-OF-ORDER stream: the final (max-upd)
+    emission per key hash-matches the batch q_macd oracle for any
+    arrival order whose lateness stays within ``watermark``. VWAP
+    needs no such twin (associative integer sums — arrival order
+    cannot change it)."""
+    return _fold_stream(
+        events, ("event_type",), _macd_fold, _MACD_CARRY, _MACD_OUT, ("value",),
+        True, watermark, mode="update",
     )
 
 
 # ---------------------------------------------------------------------------
-# Streaming tick-rule order-flow imbalance: (last price, last sign) state
+# Tick rule: tick imbalance, Kyle lambda, Roll spread
 # ---------------------------------------------------------------------------
 
-_TICKIMB_OUT = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("hour", T.StringType()),
-        T.StructField("buy_vol", T.LongType()),
-        T.StructField("sell_vol", T.LongType()),
-        T.StructField("signed_vol", T.LongType()),
-        T.StructField("n_buys", T.LongType()),
-        T.StructField("n_sells", T.LongType()),
-    ]
+# rows seen, last price (cents), last non-zero tick sign (0 = none yet)
+_TICK_CARRY = _schema("n long, last_cents long, last_sign long")
+_TICKIMB_OUT = _schema(
+    "hour string, buy_vol long, sell_vol long, signed_vol long, n_buys long, n_sells long"
 )
-# n rows seen, last price (cents), last non-zero tick sign (0 = none yet)
-_TICKIMB_STATE = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("last_cents", T.LongType()),
-        T.StructField("last_sign", T.LongType()),
-    ]
-)
+_KYLE_OUT = _schema("n_obs long, sxy long, sx long, sy long, sx2 long")
+# rows seen, last price, last delta (valid iff rows seen >= 2)
+_ROLL_CARRY = _schema("n long, last_cents long, last_d long")
+_ROLL_OUT = _schema("day string, n_pairs long, sxy long, sx long, sy long")
 
 
-def _tick_sign_fold(
-    n: int, last: int, last_sign: int, cents: "np.ndarray"
-) -> tuple[int, int, int, "np.ndarray"]:
-    """Vectorized tick-rule signing of one ordered run of prices,
-    seeded by the carried (row count, last price, last non-zero sign).
-    Sign of the delta chain, zero ticks forward-filled from the last
-    non-zero sign by an index maximum-accumulate. Returns the updated
-    carry, the per-row effective signs, and the per-row deltas (row 0
-    of a FRESH key has no predecessor; its delta is reported as 0 and
-    must be excluded by consumers that need true deltas, exactly as
-    the batch operators drop the first NULL lag)."""
+def _deltas(n: int, last: int, cents: "np.ndarray") -> "np.ndarray":
+    """Price deltas of one ordered run, seeded by the carried last
+    price. Row 0 of a FRESH key (n == 0) has no predecessor; its delta
+    is reported as 0 and must be excluded by consumers that need true
+    deltas, exactly as the batch operators drop the first NULL lag."""
     if n == 0:
-        d = np.concatenate((np.zeros(1, np.int64), np.diff(cents)))
-    else:
-        d = np.diff(np.concatenate((np.asarray([last], np.int64), cents)))
+        return np.concatenate((np.zeros(1, np.int64), np.diff(cents)))
+    return np.diff(np.concatenate((np.asarray([last], np.int64), cents)))
+
+
+def _tick_sign(carry, cents: "np.ndarray"):
+    """Vectorized tick-rule signing of one ordered run: sign of the
+    delta chain, zero ticks forward-filled from the last non-zero sign
+    by an index maximum-accumulate. Returns the updated carry, the
+    per-row effective signs and the per-row deltas (see _deltas)."""
+    n, last, last_sign = carry or (0, 0, 0)
+    d = _deltas(n, last, cents)
     raw = np.sign(d).astype(np.int64)
     idx = np.where(raw != 0, np.arange(len(raw)), -1)
     np.maximum.accumulate(idx, out=idx)
     eff = np.where(idx >= 0, raw[np.maximum(idx, 0)], np.int64(last_sign))
     new_sign = int(eff[-1]) if eff[-1] else last_sign
-    return n + len(cents), int(cents[-1]), new_sign, eff, d
+    return (n + len(cents), int(cents[-1]), new_sign), eff, d
 
 
-def _tick_partials(hour: "np.ndarray", eff: "np.ndarray", vol: "np.ndarray") -> pd.DataFrame:
-    """Per-hour integer PARTIAL sums for one signed run. Partials are
-    associative, so the post-drain groupBy-sum hash-matches the batch
-    oracle exactly no matter how micro-batches split hours."""
-    return (
+def _tick_imbalance_fold(carry, rows):
+    """Per-hour integer PARTIAL sums of tick-signed volume. Partials
+    are associative, so the post-drain groupBy-sum hash-matches the
+    batch oracle exactly however micro-batches split hours. Hours come
+    from the rows' own timestamps, so nothing order-dependent leaves
+    the fold."""
+    ts_us, _, cents, vol = rows
+    carry, eff, _ = _tick_sign(carry, cents)
+    part = (
         pd.DataFrame(
             {
-                "hour": hour,
+                "hour": ts_us // _HOUR_US,
                 "buy_vol": np.where(eff == 1, vol, 0),
                 "sell_vol": np.where(eff == -1, vol, 0),
                 "signed_vol": eff * vol,
@@ -1195,120 +908,160 @@ def _tick_partials(hour: "np.ndarray", eff: "np.ndarray", vol: "np.ndarray") -> 
         .groupby("hour", as_index=False, sort=False)
         .sum()
     )
+    part["hour"] = _fmt_us(part["hour"].to_numpy() * _HOUR_US, "%Y-%m-%d %H:%M:%S")
+    return carry, part
 
 
-def _update_tick_imbalance(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Tick-rule signing with 3 longs of state per key; the in-batch
-    fold is _tick_sign_fold (vectorized)."""
-    n, last, last_sign = state.get if state.exists else (0, 0, 0)
-    pdf = _concat_sorted(pdfs)
-    if not len(pdf):
-        state.update((n, last, last_sign))
-        return
-    cents = pdf["value"].mul(100).round().astype("int64").to_numpy()
-    n, last, last_sign, eff, _ = _tick_sign_fold(n, last, last_sign, cents)
-    part = _tick_partials(
-        pdf["hour"].to_numpy(), eff, pdf["vol"].to_numpy(dtype="int64")
+def _kyle_fold(carry, rows):
+    """Online price-impact regression: the five OLS sums are
+    associative, so each batch emits one int64 PARTIAL row (y = price
+    delta, x = tick-signed volume; the first row of a fresh key has no
+    delta and is excluded, matching the batch operator's NULL-lag
+    drop). The slope itself is computed post-drain in DECIMAL(38,0),
+    where the cross terms outgrow int64."""
+    _, _, cents, vol = rows
+    skip = 1 if carry is None else 0
+    carry, eff, d = _tick_sign(carry, cents)
+    x, y = (eff * vol)[skip:], d[skip:]
+    if not len(x):
+        return carry, None
+    return carry, pd.DataFrame(
+        {
+            "n_obs": [len(x)],
+            "sxy": [int((x * y).sum())],
+            "sx": [int(x.sum())],
+            "sy": [int(y.sum())],
+            "sx2": [int((x * x).sum())],
+        }
     )
-    state.update((n, last, last_sign))
-    part.insert(0, "event_type", key[0])
-    yield part
+
+
+def _roll_fold(carry, rows):
+    """Per-day serial-covariance PARTIALS (n, Σd₁d₀, Σd₁, Σd₀) for the
+    Roll estimator: the delta chain is seeded by the carried last
+    price, the lagged delta by the carried last delta, and a row
+    contributes iff its GLOBAL index ≥ 2 (both deltas defined —
+    exactly the batch operator's double-NULL-lag drop). Integer
+    partials are associative; the spread's sqrt happens post-drain."""
+    ts_us, _, cents = rows
+    n, last_c, last_d = carry or (0, 0, 0)
+    d = _deltas(n, last_c, cents)
+    d0 = np.concatenate((np.asarray([last_d], np.int64), d[:-1]))
+    valid = (n + np.arange(len(cents))) >= 2
+    carry = (n + len(cents), int(cents[-1]), int(d[-1]))
+    if not valid.any():
+        return carry, None
+    part = (
+        pd.DataFrame(
+            {
+                "day": ts_us[valid] // _DAY_US,
+                "n_pairs": np.ones(int(valid.sum()), np.int64),
+                "sxy": (d * d0)[valid],
+                "sx": d[valid],
+                "sy": d0[valid],
+            }
+        )
+        .groupby("day", as_index=False, sort=False)
+        .sum()
+    )
+    part["day"] = _fmt_us(part["day"].to_numpy() * _DAY_US, "%Y-%m-%d")
+    return carry, part
+
+
+def _vol_filled(events: DataFrame) -> DataFrame:
+    # sentinel flush rows carry no volume (null), and they must flow
+    # THROUGH the state op (a pre-stateful filter gets pushed below the
+    # watermark node and would stop the sentinel from advancing it);
+    # their emissions are dropped post-drain by key
+    return events.fillna(0, subset=["vol"])
 
 
 def tick_imbalance_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
-    """Per-event_type streaming tick-rule imbalance; in-order-per-key
-    replay guaranteed as for ewma_stream (ts-value slice boundaries).
-    Expects the caller to have attached integer ``vol`` and formatted
-    ``hour`` columns (JVM-side expressions — nothing string-heavy runs
-    in the fold)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_tick_imbalance,
-            outputStructType=_TICKIMB_OUT,
-            stateStructType=_TICKIMB_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    """Per-event_type streaming tick-rule imbalance with 3 longs of
+    state per key; in-order replay per key (see :func:`_fold_stream`).
+    Expects an integer ``vol`` column attached JVM-side."""
+    return _fold_stream(
+        events, ("event_type",), _tick_imbalance_fold, _TICK_CARRY, _TICKIMB_OUT,
+        ("cents", "vol"), False, watermark,
+    )
+
+
+def tick_imbalance_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
+    """Tick-rule imbalance over an OUT-OF-ORDER stream: any arrival
+    order whose lateness stays within ``watermark`` emits partials
+    that sum to the in-order (= batch-oracle) result exactly."""
+    return _fold_stream(
+        _vol_filled(events), ("event_type",), _tick_imbalance_fold, _TICK_CARRY,
+        _TICKIMB_OUT, ("cents", "vol"), True, watermark,
+    )
+
+
+def kyle_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
+    """Per-event_type streaming Kyle-lambda partials over the 3-long
+    tick-sign carry; in-order replay per key (see
+    :func:`_fold_stream`). Expects an integer ``vol`` column attached
+    JVM-side."""
+    return _fold_stream(
+        events, ("event_type",), _kyle_fold, _TICK_CARRY, _KYLE_OUT,
+        ("cents", "vol"), False, watermark,
+    )
+
+
+def roll_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
+    """Per-(event_type, UTC day) streaming Roll-spread partials over 3
+    longs of state; in-order replay per key (see
+    :func:`_fold_stream`)."""
+    return _fold_stream(
+        events, ("event_type",), _roll_fold, _ROLL_CARRY, _ROLL_OUT, ("cents",),
+        False, watermark,
     )
 
 
 # ---------------------------------------------------------------------------
-# Streaming CUSUM: the drawup identity as 3 longs of state per key
+# CUSUM: the drawup identity as 3 longs of state per key
 # ---------------------------------------------------------------------------
 
-_CUSUM_OUT = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("ts_us", T.LongType()),
-        T.StructField("s_value", T.LongType()),
-    ]
-)
+_CUSUM_OUT = _schema("ts_us long, s_value long")
 # cumulative deviation walk, its running minimum, and the previous S
-_CUSUM_STATE = T.StructType(
-    [
-        T.StructField("cum", T.LongType()),
-        T.StructField("runmin", T.LongType()),
-        T.StructField("prev_s", T.LongType()),
-    ]
-)
+_CUSUM_CARRY = _schema("cum long, runmin long, prev_s long")
 
 
-def make_cusum_update(targets: dict, k_cents: int, h_cents: int):
-    """Build the CUSUM state function around a per-key reference map
-    (symbol -> target cents). The reference is TRAINED offline (here:
-    one batch aggregate over the static table, O(keys) rows collected)
-    exactly as a production monitor pins its in-control mean before
-    watching the live stream; the closure ships it to executors with
-    the serialized function."""
+def _cusum_fold(k_cents: int, h_cents: int):
+    """Drawup-identity CUSUM: S_i = max(0, S_{i-1} + dev_i) as
+    cum - min(0, running min), via integer cumsum and
+    minimum-accumulate; alarms on each h-upcrossing. Each row carries
+    its key's trained reference in ``target``."""
 
-    def _update(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        cum, runmin, prev_s = state.get if state.exists else (0, 0, 0)
-        pdf = _concat_sorted(pdfs)
-        if not len(pdf):
-            state.update((cum, runmin, prev_s))
-            return
-        cents = pdf["value"].mul(100).round().astype("int64").to_numpy()
-        ts_us = _ts_us(pdf["ts"])
-        new_state, out = _cusum_fold(
-            (cum, runmin, prev_s), cents, ts_us,
-            targets.get(key[0], 0), k_cents, h_cents,
+    def fold(carry, rows):
+        ts_us, _, cents, target = rows
+        cum, runmin, prev_s = carry or (0, 0, 0)
+        dev = cents - target - np.int64(k_cents)
+        cums = np.int64(cum) + np.cumsum(dev)
+        rm = np.minimum(np.minimum.accumulate(cums), np.int64(runmin))
+        s = cums - np.minimum(np.int64(0), rm)
+        prev = np.concatenate((np.asarray([prev_s], np.int64), s[:-1]))
+        alarm = (s > h_cents) & (prev <= h_cents)
+        carry = (int(cums[-1]), int(rm[-1]), int(s[-1]))
+        if not alarm.any():
+            return carry, None
+        return carry, pd.DataFrame({"ts_us": ts_us[alarm], "s_value": s[alarm]})
+
+    return fold
+
+
+def _with_target(events: DataFrame, targets: dict) -> DataFrame:
+    """Attach each row's reference (symbol -> target cents, 0 for a key
+    without one). The reference is TRAINED offline (one batch
+    aggregate over the static table, O(keys) rows collected) exactly
+    as a production monitor pins its in-control mean before watching
+    the live stream."""
+    target = F.lit(0).cast("long")
+    if targets:
+        ref = F.create_map(
+            *[c for k, v in targets.items() for c in (F.lit(k), F.lit(int(v)).cast("long"))]
         )
-        state.update(new_state)
-        if out is not None:
-            out.insert(0, "event_type", key[0])
-            yield out
-
-    return _update
-
-
-def _cusum_fold(
-    carry: tuple[int, int, int],
-    cents: "np.ndarray",
-    ts_us: "np.ndarray",
-    target: int,
-    k_cents: int,
-    h_cents: int,
-) -> tuple[tuple[int, int, int], pd.DataFrame | None]:
-    """Drawup-identity CUSUM over one ordered run: integer cumsum +
-    running minimum, alarms on each h-upcrossing. Returns the updated
-    (cum, runmin, prev_s) carry and the alarm rows (None if none)."""
-    cum, runmin, prev_s = carry
-    dev = cents - np.int64(target) - np.int64(k_cents)
-    cums = np.int64(cum) + np.cumsum(dev)
-    rm = np.minimum(np.minimum.accumulate(cums), np.int64(runmin))
-    s = cums - np.minimum(np.int64(0), rm)
-    prev = np.concatenate((np.asarray([prev_s], np.int64), s[:-1]))
-    alarm = (s > h_cents) & (prev <= h_cents)
-    new_state = (int(cums[-1]), int(rm[-1]), int(s[-1]))
-    if not alarm.any():
-        return new_state, None
-    return new_state, pd.DataFrame({"ts_us": ts_us[alarm], "s_value": s[alarm]})
+        target = F.coalesce(ref[F.col("event_type")], target)
+    return events.withColumn("target", target)
 
 
 def cusum_stream(
@@ -1319,192 +1072,14 @@ def cusum_stream(
     watermark: str = "4 hours",
 ) -> DataFrame:
     """One-sided CUSUM upcrossing alarms per event_type as a streaming
-    state machine: S_i = max(0, S_{i-1} + dev_i) maintained via the
-    same drawup identity the batch q_cusum uses (cum - min(0, running
-    min)), carried across micro-batches in THREE longs — no buffering,
-    O(keys) total state on an unbounded stream. The in-batch fold is
-    numpy cumsum / minimum-accumulate (integer, associative-safe), and
-    alarms emit append-mode. In-order-per-key replay contract as for
-    ewma_stream."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            make_cusum_update(targets, k_cents, h_cents),
-            outputStructType=_CUSUM_OUT,
-            stateStructType=_CUSUM_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    state machine carried across micro-batches in THREE longs — no
+    buffering, O(keys) total state on an unbounded stream; alarms emit
+    append-mode. In-order replay per key (see :func:`_fold_stream`)."""
+    return _fold_stream(
+        _with_target(events, targets), ("event_type",),
+        _cusum_fold(k_cents, h_cents), _CUSUM_CARRY, _CUSUM_OUT,
+        ("cents", "target"), False, watermark,
     )
-
-
-# ---------------------------------------------------------------------------
-# OOO microstructure twins: re-sort buffer in front of the same folds
-# ---------------------------------------------------------------------------
-
-_TICKIMB_OOO_STATE = T.StructType(
-    [
-        T.StructField("buf_ts", T.ArrayType(T.LongType())),
-        T.StructField("buf_eid", T.ArrayType(T.LongType())),
-        T.StructField("buf_cents", T.ArrayType(T.LongType())),
-        T.StructField("buf_vol", T.ArrayType(T.LongType())),
-        T.StructField("n", T.LongType()),
-        T.StructField("last_cents", T.LongType()),
-        T.StructField("last_sign", T.LongType()),
-    ]
-)
-
-
-def _new_rows_priced(pdfs: Iterable[pd.DataFrame], with_vol: bool):
-    """(ts_us, event_id, cents[, vol]) arrays from a batch's chunks."""
-    chunks = [p for p in pdfs if len(p)]
-    if not chunks:
-        return None
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    cols = [
-        _ts_us(pdf["ts"]),
-        pdf["event_id"].to_numpy().astype("int64"),
-        pdf["value"].mul(100).round().astype("int64").to_numpy(),
-    ]
-    if with_vol:
-        # sentinel flush rows carry no volume (null), and they must flow
-        # THROUGH the state op (a pre-stateful filter gets pushed below
-        # the watermark node and would stop the sentinel from advancing
-        # it); their emissions are dropped post-drain by key
-        cols.append(pdf["vol"].fillna(0).astype("int64").to_numpy())
-    return tuple(cols)
-
-
-def _hour_str_from_us(ts_us: "np.ndarray") -> "np.ndarray":
-    """UTC hour-floor rendering identical to the engine's
-    date_format(date_trunc('hour', ts)) under the session's pinned UTC
-    timezone: pure calendar arithmetic on naive microsecond ints, no
-    locale, no zone database."""
-    return (
-        pd.Series(ts_us.astype("datetime64[us]"))
-        .dt.floor("h")
-        .dt.strftime("%Y-%m-%d %H:%M:%S")
-        .to_numpy()
-    )
-
-
-def _update_tick_imbalance_ooo(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        bts, beid, bc, bv, n, last, last_sign = state.get
-        buf = (
-            np.asarray(bts, np.int64),
-            np.asarray(beid, np.int64),
-            np.asarray(bc, np.int64),
-            np.asarray(bv, np.int64),
-        )
-    else:
-        buf = (np.empty(0, np.int64),) * 4
-        n, last, last_sign = 0, 0, 0
-    new = None if state.hasTimedOut else _new_rows_priced(pdfs, with_vol=True)
-    released, kept = _buffer_release(state, buf, new)
-    if len(released[0]):
-        n, last, last_sign, eff, _ = _tick_sign_fold(
-            n, last, last_sign, released[2]
-        )
-        part = _tick_partials(_hour_str_from_us(released[0]), eff, released[3])
-        part.insert(0, "event_type", key[0])
-        yield part
-    _rearm_or_clear(
-        state,
-        kept[0],
-        (
-            kept[0].tolist(),
-            kept[1].tolist(),
-            kept[2].tolist(),
-            kept[3].tolist(),
-            n,
-            last,
-            last_sign,
-        ),
-    )
-
-
-def tick_imbalance_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
-    """Tick-rule imbalance over an OUT-OF-ORDER stream: the
-    watermark-delayed re-sort feeds _tick_sign_fold, so any arrival
-    order whose lateness stays within ``watermark`` emits partials
-    that sum to the in-order (= batch-oracle) result exactly. Hour
-    keys are derived from the released rows' own timestamps (pure UTC
-    calendar arithmetic), so nothing order-dependent leaves the
-    fold."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_tick_imbalance_ooo,
-            outputStructType=_TICKIMB_OUT,
-            stateStructType=_TICKIMB_OOO_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-_CUSUM_OOO_STATE = T.StructType(
-    [
-        T.StructField("buf_ts", T.ArrayType(T.LongType())),
-        T.StructField("buf_eid", T.ArrayType(T.LongType())),
-        T.StructField("buf_cents", T.ArrayType(T.LongType())),
-        T.StructField("cum", T.LongType()),
-        T.StructField("runmin", T.LongType()),
-        T.StructField("prev_s", T.LongType()),
-    ]
-)
-
-
-def make_cusum_update_ooo(targets: dict, k_cents: int, h_cents: int):
-    """OOO CUSUM state function: same trained reference map as
-    make_cusum_update, fronted by the per-key re-sort buffer."""
-
-    def _update(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bts, beid, bc, cum, runmin, prev_s = state.get
-            buf = (
-                np.asarray(bts, np.int64),
-                np.asarray(beid, np.int64),
-                np.asarray(bc, np.int64),
-            )
-        else:
-            buf = (np.empty(0, np.int64),) * 3
-            cum, runmin, prev_s = 0, 0, 0
-        new = None if state.hasTimedOut else _new_rows_priced(pdfs, with_vol=False)
-        released, kept = _buffer_release(state, buf, new)
-        if len(released[0]):
-            (cum, runmin, prev_s), out = _cusum_fold(
-                (cum, runmin, prev_s),
-                released[2],
-                released[0],
-                targets.get(key[0], 0),
-                k_cents,
-                h_cents,
-            )
-            if out is not None:
-                out.insert(0, "event_type", key[0])
-                yield out
-        _rearm_or_clear(
-            state,
-            kept[0],
-            (
-                kept[0].tolist(),
-                kept[1].tolist(),
-                kept[2].tolist(),
-                cum,
-                runmin,
-                prev_s,
-            ),
-        )
-
-    return _update
 
 
 def cusum_stream_ooo(
@@ -1514,168 +1089,48 @@ def cusum_stream_ooo(
     h_cents: int,
     watermark: str,
 ) -> DataFrame:
-    """CUSUM alarms over an OUT-OF-ORDER stream via the
-    watermark-delayed re-sort; hash-matches the batch q_cusum oracle
-    whenever lateness stays within ``watermark``."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            make_cusum_update_ooo(targets, k_cents, h_cents),
-            outputStructType=_CUSUM_OUT,
-            stateStructType=_CUSUM_OOO_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    """CUSUM alarms over an OUT-OF-ORDER stream; hash-matches the
+    batch q_cusum oracle whenever lateness stays within
+    ``watermark``."""
+    return _fold_stream(
+        _with_target(events, targets), ("event_type",),
+        _cusum_fold(k_cents, h_cents), _CUSUM_CARRY, _CUSUM_OUT,
+        ("cents", "target"), True, watermark,
     )
 
 
 # ---------------------------------------------------------------------------
-# Streaming volume bars: the subordinated clock as 2 longs of state
+# Volume bars: the subordinated clock as 2 longs of state
 # ---------------------------------------------------------------------------
 
-_VBAR_OUT = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("bar_id", T.LongType()),
-        T.StructField("n_trades", T.LongType()),
-        T.StructField("bar_vol", T.LongType()),
-        T.StructField("o_ts", T.LongType()),
-        T.StructField("o_eid", T.LongType()),
-        T.StructField("o_c", T.LongType()),
-        T.StructField("c_ts", T.LongType()),
-        T.StructField("c_eid", T.LongType()),
-        T.StructField("c_c", T.LongType()),
-        T.StructField("hi", T.LongType()),
-        T.StructField("lo", T.LongType()),
-        T.StructField("start_us", T.LongType()),
-        T.StructField("end_us", T.LongType()),
-    ]
+_VBAR_OUT = _schema(
+    "bar_id long, n_trades long, bar_vol long, o_ts long, o_eid long, o_c long,"
+    " c_ts long, c_eid long, c_c long, hi long, lo long, start_us long, end_us long"
 )
 # rows seen + cumulative volume: the whole volume clock
-_VBAR_STATE = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("cum_vol", T.LongType()),
-    ]
-)
+_VBAR_CARRY = _schema("n long, cum_vol long")
 
 
-def _update_volume_bars_factory(bar_volume: int):
-    def _update(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, cum = state.get if state.exists else (0, 0)
-        pdf = _concat_sorted(pdfs)
-        if not len(pdf):
-            state.update((n, cum))
-            return
-        vol = pdf["vol"].to_numpy(dtype="int64")
-        cents = pdf["value"].mul(100).round().astype("int64").to_numpy()
-        ts_us = _ts_us(pdf["ts"])
-        eid = pdf["event_id"].to_numpy().astype("int64")
+def _vbar_fold(bar_volume: int):
+    """Assign rows to bars by an exclusive-prefix cumsum of volume
+    seeded from the carried total, and emit per-bar integer partials.
+    Rows are (ts, eid)-sorted, so positional first/last ARE the bar's
+    open/close and min/max ts its bounds; the partials carry their
+    (ts, event_id), so bars that straddle micro-batches combine
+    associatively post-drain via struct min/max."""
+
+    def fold(carry, rows):
+        ts_us, eid, cents, vol = rows
+        n, cum = carry or (0, 0)
         pre = np.int64(cum) + np.concatenate(
             (np.zeros(1, np.int64), np.cumsum(vol)[:-1])
         )
-        bar = pre // bar_volume
-        g = pd.DataFrame(
-            {"bar_id": bar, "vol": vol, "c": cents, "ts": ts_us, "eid": eid}
-        ).groupby("bar_id", as_index=False, sort=False)
-        # rows are (ts, eid)-sorted, so positional first/last ARE the
-        # bar's open/close and min/max ts its bounds — the partials
-        # combine associatively post-drain via struct min/max
-        part = g.agg(
-            n_trades=("c", "size"),
-            bar_vol=("vol", "sum"),
-            o_ts=("ts", "first"),
-            o_eid=("eid", "first"),
-            o_c=("c", "first"),
-            c_ts=("ts", "last"),
-            c_eid=("eid", "last"),
-            c_c=("c", "last"),
-            hi=("c", "max"),
-            lo=("c", "min"),
-            start_us=("ts", "first"),
-            end_us=("ts", "last"),
-        )
-        state.update((n + len(vol), int(cum + vol.sum())))
-        part.insert(0, "event_type", key[0])
-        yield part
-
-    return _update
-
-
-def volume_bars_stream(
-    events: DataFrame, bar_volume: int, watermark: str = "4 hours"
-) -> DataFrame:
-    """Event-driven VOLUME bars built in-stream: the whole
-    subordinated clock is TWO longs of state per key (rows seen,
-    cumulative volume); each micro-batch assigns its rows to bars by
-    an exclusive-prefix cumsum seeded from the carried total and
-    emits per-bar integer partials (counts, sums, positional
-    open/close carrying their (ts, event_id) for deterministic
-    struct-min/max combination). Bars that straddle micro-batches
-    emit one partial per batch; the post-drain combine is associative,
-    so the drained result hash-matches the batch q_volume_bars oracle
-    exactly. In-order-per-key replay contract as for ewma_stream.
-    Expects integer ``vol`` attached JVM-side."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_volume_bars_factory(bar_volume),
-            outputStructType=_VBAR_OUT,
-            stateStructType=_VBAR_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-_VBAR_OOO_STATE = T.StructType(
-    [
-        T.StructField("buf_ts", T.ArrayType(T.LongType())),
-        T.StructField("buf_eid", T.ArrayType(T.LongType())),
-        T.StructField("buf_cents", T.ArrayType(T.LongType())),
-        T.StructField("buf_vol", T.ArrayType(T.LongType())),
-        T.StructField("n", T.LongType()),
-        T.StructField("cum_vol", T.LongType()),
-    ]
-)
-
-
-def _update_volume_bars_ooo_factory(bar_volume: int):
-    def _update(
-        key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bts, beid, bc, bv, n, cum = state.get
-            buf = (
-                np.asarray(bts, np.int64),
-                np.asarray(beid, np.int64),
-                np.asarray(bc, np.int64),
-                np.asarray(bv, np.int64),
+        part = (
+            pd.DataFrame(
+                {"bar_id": pre // bar_volume, "vol": vol, "c": cents, "ts": ts_us, "eid": eid}
             )
-        else:
-            buf = (np.empty(0, np.int64),) * 4
-            n, cum = 0, 0
-        new = None if state.hasTimedOut else _new_rows_priced(pdfs, with_vol=True)
-        released, kept = _buffer_release(state, buf, new)
-        if len(released[0]):
-            ts_us, eid, cents, vol = released
-            pre = np.int64(cum) + np.concatenate(
-                (np.zeros(1, np.int64), np.cumsum(vol)[:-1])
-            )
-            g = pd.DataFrame(
-                {
-                    "bar_id": pre // bar_volume,
-                    "vol": vol,
-                    "c": cents,
-                    "ts": ts_us,
-                    "eid": eid,
-                }
-            ).groupby("bar_id", as_index=False, sort=False)
-            part = g.agg(
+            .groupby("bar_id", as_index=False, sort=False)
+            .agg(
                 n_trades=("c", "size"),
                 bar_vol=("vol", "sum"),
                 o_ts=("ts", "first"),
@@ -1689,363 +1144,109 @@ def _update_volume_bars_ooo_factory(bar_volume: int):
                 start_us=("ts", "first"),
                 end_us=("ts", "last"),
             )
-            n, cum = n + len(vol), int(cum + vol.sum())
-            part.insert(0, "event_type", key[0])
-            yield part
-        _rearm_or_clear(
-            state,
-            kept[0],
-            (
-                kept[0].tolist(),
-                kept[1].tolist(),
-                kept[2].tolist(),
-                kept[3].tolist(),
-                n,
-                cum,
-            ),
         )
+        return (n + len(vol), int(cum + vol.sum())), part
 
-    return _update
+    return fold
+
+
+def volume_bars_stream(
+    events: DataFrame, bar_volume: int, watermark: str = "4 hours"
+) -> DataFrame:
+    """Event-driven VOLUME bars built in-stream: the whole
+    subordinated clock is TWO longs of state per key (rows seen,
+    cumulative volume); the drained partials hash-match the batch
+    q_volume_bars oracle exactly. In-order replay per key (see
+    :func:`_fold_stream`). Expects an integer ``vol`` column attached
+    JVM-side."""
+    return _fold_stream(
+        events, ("event_type",), _vbar_fold(bar_volume), _VBAR_CARRY, _VBAR_OUT,
+        ("cents", "vol"), False, watermark,
+    )
 
 
 def volume_bars_stream_ooo(
     events: DataFrame, bar_volume: int, watermark: str
 ) -> DataFrame:
     """Volume bars over an OUT-OF-ORDER stream: bar assignment is a
-    prefix sum of volume, i.e. fully order-defined, so the re-sort
-    buffer fronts the same positional-partial emission as the in-order
-    twin — shuffled arrival yields the identical bar set. Sentinel
-    rows flow through (post-drain key filter) so the flush watermark
-    advances."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_volume_bars_ooo_factory(bar_volume),
-            outputStructType=_VBAR_OUT,
-            stateStructType=_VBAR_OOO_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    prefix sum of volume, i.e. fully order-defined, so shuffled
+    arrival within ``watermark`` yields the identical bar set."""
+    return _fold_stream(
+        _vol_filled(events), ("event_type",), _vbar_fold(bar_volume), _VBAR_CARRY,
+        _VBAR_OUT, ("cents", "vol"), True, watermark,
     )
 
 
 # ---------------------------------------------------------------------------
-# Streaming Kyle lambda: the online regression as five integer partials
+# Autocorrelation: lag-1..3 ACF partials over a 3-value tail
 # ---------------------------------------------------------------------------
 
-_KYLE_OUT = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("n_obs", T.LongType()),
-        T.StructField("sxy", T.LongType()),
-        T.StructField("sx", T.LongType()),
-        T.StructField("sy", T.LongType()),
-        T.StructField("sx2", T.LongType()),
-    ]
+_ACF_OUT = _schema(
+    "n long, s long, ss long, "
+    + ", ".join(f"{c}{k} long" for k in (1, 2, 3) for c in "pmht")
 )
+_ACF_CARRY = _schema("n long, tail long[]")
 
 
-def _update_kyle(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Online price-impact regression: the five OLS sums are
-    associative, so each batch emits one int64 PARTIAL row per key
-    (y = price delta from the carried last price, x = tick-signed
-    volume; the first row of a fresh key has no delta and is excluded,
-    matching the batch operator's NULL-lag drop). State stays the
-    tick-sign carry — 3 longs. The slope itself is computed post-drain
-    in DECIMAL(38,0), where the cross terms outgrow int64."""
-    n, last, last_sign = state.get if state.exists else (0, 0, 0)
-    pdf = _concat_sorted(pdfs)
-    if not len(pdf):
-        state.update((n, last, last_sign))
-        return
-    fresh = n == 0
-    cents = pdf["value"].mul(100).round().astype("int64").to_numpy()
-    n, last, last_sign, eff, d = _tick_sign_fold(n, last, last_sign, cents)
-    x = eff * pdf["vol"].to_numpy(dtype="int64")
-    y = d
-    if fresh:
-        x, y = x[1:], y[1:]
-    if not len(x):
-        state.update((n, last, last_sign))
-        return
-    state.update((n, last, last_sign))
-    yield pd.DataFrame(
-        {
-            "event_type": [key[0]],
-            "n_obs": [len(x)],
-            "sxy": [int((x * y).sum())],
-            "sx": [int(x.sum())],
-            "sy": [int(y.sum())],
-            "sx2": [int((x * x).sum())],
-        }
-    )
-
-
-def kyle_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
-    """Per-event_type streaming Kyle-lambda partials;
-    in-order-per-key replay contract as for ewma_stream. Expects
-    integer ``vol`` attached JVM-side."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_kyle,
-            outputStructType=_KYLE_OUT,
-            stateStructType=_TICKIMB_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming Roll spread: serial-covariance partials over 3 longs of state
-# ---------------------------------------------------------------------------
-
-_ROLL_OUT = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("day", T.StringType()),
-        T.StructField("n_pairs", T.LongType()),
-        T.StructField("sxy", T.LongType()),
-        T.StructField("sx", T.LongType()),
-        T.StructField("sy", T.LongType()),
-    ]
-)
-# rows seen, last price, last delta (valid iff rows seen >= 2)
-_ROLL_STATE = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("last_cents", T.LongType()),
-        T.StructField("last_d", T.LongType()),
-    ]
-)
-
-
-def _update_roll(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-(key, day) serial-covariance PARTIALS (n, Σd₁d₀, Σd₁, Σd₀)
-    for the Roll estimator: the delta chain is seeded by the carried
-    last price, the lagged delta by the carried last delta, and a row
-    contributes iff its GLOBAL index ≥ 2 (both deltas defined —
-    exactly the batch operator's double-NULL-lag drop). Integer
-    partials are associative; the spread's sqrt happens post-drain."""
-    n, last_c, last_d = state.get if state.exists else (0, 0, 0)
-    pdf = _concat_sorted(pdfs)
-    if not len(pdf):
-        state.update((n, last_c, last_d))
-        return
-    cents = pdf["value"].mul(100).round().astype("int64").to_numpy()
-    m = len(cents)
-    if n == 0:
-        d = np.concatenate((np.zeros(1, np.int64), np.diff(cents)))
-    else:
-        d = np.diff(np.concatenate((np.asarray([last_c], np.int64), cents)))
-    d0 = np.concatenate((np.asarray([last_d], np.int64), d[:-1]))
-    valid = (n + np.arange(m)) >= 2
-    state.update((n + m, int(cents[-1]), int(d[-1])))
-    if not valid.any():
-        return
-    part = (
-        pd.DataFrame(
-            {
-                "day": pdf["day"].to_numpy()[valid],
-                "n_pairs": np.ones(int(valid.sum()), np.int64),
-                "sxy": (d * d0)[valid],
-                "sx": d[valid],
-                "sy": d0[valid],
-            }
-        )
-        .groupby("day", as_index=False, sort=False)
-        .sum()
-    )
-    part.insert(0, "event_type", key[0])
-    yield part
-
-
-def roll_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
-    """Per-event_type streaming Roll-spread partials; in-order-per-key
-    replay contract as for ewma_stream. Expects a formatted ``day``
-    column attached JVM-side."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_roll,
-            outputStructType=_ROLL_OUT,
-            stateStructType=_ROLL_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming autocorrelation: lag-1..3 ACF partials over a 3-value tail
-# ---------------------------------------------------------------------------
-
-_ACF_OUT = T.StructType(
-    [T.StructField("event_type", T.StringType())]
-    + [T.StructField(c, T.LongType()) for c in ("n", "s", "ss")]
-    + [
-        T.StructField(f"{c}{k}", T.LongType())
-        for k in (1, 2, 3)
-        for c in ("p", "m", "h", "t")
-    ]
-)
-
-_ACF_STATE = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("tail", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def _acf_fold(n: int, tail: list, v: "np.ndarray"):
-    """One batch of ordered cents into the ACF partial row; returns
-    (new n, new 3-value tail, partial dict). Shared by the in-order
-    and OOO folds so their algebra cannot drift."""
-    import numpy as np
-
+def _acf_fold(carry, rows):
+    """Online lag-1..3 ACF: every sum in the classical common-mean
+    estimator is associative over ordered (x_i, x_{i+k}) pairs, so the
+    only state a lag-K ACF needs is the last K values (the pairs that
+    straddle a batch boundary) plus the running count. Each batch
+    emits one int64 PARTIAL row (n, Σx, Σx² and per-lag Σx·x', pair
+    count, head/tail sums over the NEW pairs — those whose later
+    element arrived this batch); the estimator itself is assembled
+    post-drain in DECIMAL(38,0), where n²·Σxx outgrows int64.
+    Per-batch partials stay inside int64 up to ~10⁶ rows/key/batch at
+    10⁶-cent prices (documented bound)."""
+    n, tail = carry or (0, [])
+    v = rows[2]
     seq = np.concatenate([np.asarray(tail, np.int64), v])
-    nt = len(tail)
     row = {"n": len(v), "s": int(v.sum()), "ss": int((v * v).sum())}
     for k in (1, 2, 3):
-        j0 = max(k, nt)  # first pair whose LATER element is new
+        j0 = max(k, len(tail))  # first pair whose LATER element is new
         heads = seq[j0 - k : len(seq) - k]
         tails = seq[j0:]
         row[f"p{k}"] = int((heads * tails).sum())
         row[f"m{k}"] = len(tails)
         row[f"h{k}"] = int(heads.sum())
         row[f"t{k}"] = int(tails.sum())
-    return n + len(v), [int(x) for x in seq[-min(3, len(seq)):]], row
-
-
-def _update_acf(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Online lag-1..3 ACF: every sum in the classical common-mean
-    estimator is associative over ordered (x_i, x_{i+k}) pairs, so the
-    only state a lag-K ACF needs is the last K values (the pairs that
-    straddle a batch boundary) plus the running count — 1 long + a
-    3-long tail per key. Each batch emits one int64 PARTIAL row
-    (n, Σx, Σx² and per-lag Σx·x', pair count, head/tail sums over the
-    NEW pairs — those whose later element arrived this batch); the
-    estimator itself is assembled post-drain in DECIMAL(38,0), where
-    n²·Σxx outgrows int64. Per-batch partials stay inside int64 up to
-    ~10⁶ rows/key/batch at 10⁶-cent prices (documented bound)."""
-    import numpy as np
-
-    n, tail = state.get if state.exists else (0, [])
-    pdf = _concat_sorted(pdfs)
-    if not len(pdf):
-        state.update((n, list(tail)))
-        return
-    v = pdf["value"].mul(100).round().astype("int64").to_numpy()
-    n, tail, row = _acf_fold(n, list(tail), v)
-    state.update((n, tail))
-    yield pd.DataFrame([{"event_type": key[0], **row}])
+    return (n + len(v), seq[-3:].tolist()), pd.DataFrame([row])
 
 
 def acf_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
-    """Per-event_type streaming ACF partials; in-order-per-key replay
-    contract as for ewma_stream."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_acf,
-            outputStructType=_ACF_OUT,
-            stateStructType=_ACF_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-_ACF_OOO_STATE = T.StructType(
-    [
-        T.StructField("buf_ts", T.ArrayType(T.LongType())),
-        T.StructField("buf_eid", T.ArrayType(T.LongType())),
-        T.StructField("buf_cents", T.ArrayType(T.LongType())),
-        T.StructField("n", T.LongType()),
-        T.StructField("tail", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def _update_acf_ooo(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        bts, beid, bc, n, tail = state.get
-        buf = (
-            np.asarray(bts, np.int64),
-            np.asarray(beid, np.int64),
-            np.asarray(bc, np.int64),
-        )
-        tail = list(tail)
-    else:
-        buf = (np.empty(0, np.int64),) * 3
-        n, tail = 0, []
-    new = None if state.hasTimedOut else _new_rows(pdfs, "int64")
-    released, kept = _buffer_release(state, buf, new)
-    if len(released[0]):
-        n, tail, row = _acf_fold(n, tail, released[2])
-        yield pd.DataFrame([{"event_type": key[0], **row}])
-    _rearm_or_clear(
-        state, kept[0],
-        (kept[0].tolist(), kept[1].tolist(), kept[2].tolist(), n, tail),
+    """Per-event_type streaming ACF partials; in-order replay per key
+    (see :func:`_fold_stream`)."""
+    return _fold_stream(
+        events, ("event_type",), _acf_fold, _ACF_CARRY, _ACF_OUT, ("cents",),
+        False, watermark,
     )
 
 
 def acf_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
     """ACF partials over an OUT-OF-ORDER stream: pairing is
-    order-defined, so the watermark-delayed re-sort fronts the same
-    shared _acf_fold — shuffled arrival hash-matches the in-order run
-    and the batch oracle."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_acf_ooo,
-            outputStructType=_ACF_OUT,
-            stateStructType=_ACF_OOO_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    order-defined, so shuffled arrival within ``watermark``
+    hash-matches the in-order run and the batch oracle."""
+    return _fold_stream(
+        events, ("event_type",), _acf_fold, _ACF_CARRY, _ACF_OUT, ("cents",),
+        True, watermark,
     )
 
 
 # ---------------------------------------------------------------------------
-# Streaming max drawdown: the path-dependent risk fold as one long of state
+# Max drawdown: the path-dependent risk fold as one long of state
 # ---------------------------------------------------------------------------
 
-_MDD_OUT = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("dd", T.LongType()),
-        T.StructField("pk", T.LongType()),
-    ]
-)
-
-_MDD_STATE = T.StructType([T.StructField("peak", T.LongType())])
+_MDD_OUT = _schema("n long, dd long, pk long")
+_MDD_CARRY = _schema("peak long")
 
 
 def _mdd_fold(peak: int | None, v: "np.ndarray"):
     """One batch of ordered cents into the drawdown partial: the
     running peak is the ONLY carried state (drawdowns computed against
     the carried peak are exact, so per-batch maxima combine with a
-    plain max post-drain). Returns (new peak, partial dict). Shared by
-    the in-order and OOO folds."""
-    import numpy as np
-
+    plain sum/max/max post-drain — exactly q_max_drawdown's closed
+    form). Returns (new peak, partial dict)."""
     if peak is not None:
         pk = np.maximum.accumulate(
             np.concatenate([np.asarray([peak], np.int64), v])
@@ -2060,193 +1261,37 @@ def _mdd_fold(peak: int | None, v: "np.ndarray"):
     }
 
 
-def _update_mdd(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Online maximum drawdown: state is ONE long per key (the running
-    peak — max is associative, and every drawdown is measured against
-    the prefix peak, which the fold carries). Each batch emits one
-    int64 partial (rows, batch max drawdown, peak); the final combine
-    is sum/max/max — exactly q_max_drawdown's closed form, so the
-    stream hash-matches the batch oracle."""
-    peak = state.get[0] if state.exists else None
-    pdf = _concat_sorted(pdfs)
-    if not len(pdf):
-        if peak is not None:
-            state.update((peak,))
-        return
-    v = pdf["value"].mul(100).round().astype("int64").to_numpy()
-    peak, row = _mdd_fold(peak, v)
-    state.update((peak,))
-    yield pd.DataFrame([{"event_type": key[0], **row}])
+def _mdd_rows_fold(carry, rows):
+    peak, row = _mdd_fold(carry[0] if carry else None, rows[2])
+    return (peak,), pd.DataFrame([row])
 
 
 def mdd_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
-    """Per-event_type streaming max-drawdown partials; in-order-per-key
-    replay contract as for ewma_stream."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_mdd,
-            outputStructType=_MDD_OUT,
-            stateStructType=_MDD_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def tws_available() -> tuple[bool, str]:
-    """Capability probe for Spark 4's ``transformWithStateInPandas``
-    (the successor API to applyInPandasWithState: explicit
-    ValueState/ListState/MapState handles, event/processing-time
-    TIMERS, per-state TTL, schema evolution of state). The PLAN-side
-    API exists in this pyspark build, but the runtime protocol between
-    the JVM and the stateful-processor Python workers speaks protobuf
-    (`pyspark/sql/streaming/proto/StateMessage_pb2.py` imports
-    `google.protobuf`), and the `protobuf` package is not installed in
-    this environment — the TWS driver worker crashes in
-    validateAndMaybeEvolveStateSchema with
-    `ImportError: cannot import name 'descriptor' from 'google.protobuf'`
-    before the first micro-batch. Returns (usable, reason); the twin
-    query's test skips on the reason so the moment the environment
-    gains protobuf the hash-gate runs for real."""
-    try:
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-    except ImportError as e:  # pragma: no cover - present in 4.1
-        return False, f"StatefulProcessor API missing: {e}"
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        return False, (
-            "transformWithState runtime needs the protobuf package "
-            f"(StateMessage_pb2): {e}"
-        )
-    return True, "ok"
-
-
-def mdd_stream_tws(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
-    """The max-drawdown fold on ``transformWithStateInPandas`` — the
-    SAME ``_mdd_fold`` and the same one-long-per-key state, managed
-    through an explicit ValueState handle instead of the
-    applyInPandasWithState GroupState tuple, so the two APIs are
-    hash-comparable against the identical batch oracle. What the
-    migration buys at scale (once the runtime is usable, see
-    :func:`tws_available`): per-state TTL instead of hand-rolled
-    timeout folds, event-time TIMERS that would replace the OOO
-    variants' manual re-sort buffer re-arm logic, multiple independent
-    state variables per key (column families) instead of one packed
-    tuple, and in-place state schema evolution."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _MDDProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._peak = handle.getValueState("peak", _MDD_STATE)
-
-        def handleInputRows(self, key, rows, timerValues):
-            cur = self._peak.get()
-            peak = cur[0] if cur is not None else None
-            pdf = _concat_sorted(rows)
-            if not len(pdf):
-                return
-            v = pdf["value"].mul(100).round().astype("int64").to_numpy()
-            peak, row = _mdd_fold(peak, v)
-            self._peak.update((peak,))
-            yield pd.DataFrame([{"event_type": key[0], **row}])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .transformWithStateInPandas(
-            statefulProcessor=_MDDProcessor(),
-            outputStructType=_MDD_OUT,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
-_MDD_OOO_STATE = T.StructType(
-    [
-        T.StructField("buf_ts", T.ArrayType(T.LongType())),
-        T.StructField("buf_eid", T.ArrayType(T.LongType())),
-        T.StructField("buf_cents", T.ArrayType(T.LongType())),
-        T.StructField("peak", T.LongType()),
-    ]
-)
-
-
-def _update_mdd_ooo(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        bts, beid, bc, peak = state.get
-        buf = (
-            np.asarray(bts, np.int64),
-            np.asarray(beid, np.int64),
-            np.asarray(bc, np.int64),
-        )
-    else:
-        buf = (np.empty(0, np.int64),) * 3
-        peak = None
-    new = None if state.hasTimedOut else _new_rows(pdfs, "int64")
-    released, kept = _buffer_release(state, buf, new)
-    if len(released[0]):
-        peak, row = _mdd_fold(peak, released[2])
-        yield pd.DataFrame([{"event_type": key[0], **row}])
-    _rearm_or_clear(
-        state, kept[0],
-        (kept[0].tolist(), kept[1].tolist(), kept[2].tolist(), peak),
+    """Per-event_type streaming max-drawdown partials; in-order replay
+    per key (see :func:`_fold_stream`)."""
+    return _fold_stream(
+        events, ("event_type",), _mdd_rows_fold, _MDD_CARRY, _MDD_OUT, ("cents",),
+        False, watermark,
     )
 
 
 def mdd_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
     """Max-drawdown partials over an OUT-OF-ORDER stream: the drawdown
-    of a row depends on the peak of everything BEFORE it, so the
-    watermark-delayed re-sort fronts the same shared _mdd_fold —
-    shuffled arrival hash-matches the in-order run and the batch
-    oracle."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_mdd_ooo,
-            outputStructType=_MDD_OUT,
-            stateStructType=_MDD_OOO_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    of a row depends on the peak of everything BEFORE it, so it needs
+    the re-sort; shuffled arrival within ``watermark`` hash-matches the
+    in-order run and the batch oracle."""
+    return _fold_stream(
+        events, ("event_type",), _mdd_rows_fold, _MDD_CARRY, _MDD_OUT, ("cents",),
+        True, watermark,
     )
 
 
 # ---------------------------------------------------------------------------
-# Streaming realized volatility: per-(key, day) squared increments,
-# two longs of carried state
+# Realized volatility: per-(key, day) squared increments
 # ---------------------------------------------------------------------------
 
-_RV_OUT = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("day_ord", T.LongType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("rv", T.LongType()),
-    ]
-)
-
-_RV_STATE = T.StructType(
-    [
-        T.StructField("last_day", T.LongType()),
-        T.StructField("last_c", T.LongType()),
-    ]
-)
-
-_US_PER_DAY = 86_400_000_000
+_RV_OUT = _schema("day_ord long, n long, rv long")
+_RV_CARRY = _schema("last_day long, last_c long")
 
 
 def _rv_fold(last_day: int | None, last_c: int, days: "np.ndarray", v: "np.ndarray"):
@@ -2255,9 +1300,8 @@ def _rv_fold(last_day: int | None, last_c: int, days: "np.ndarray", v: "np.ndarr
     ticks of the SAME day (day boundaries restart the series — the
     overnight gap is not intraday variance), so the carried state is
     just the last (day, cents). Returns (new last_day, new last_c,
-    list of partial dicts). Shared by the in-order and OOO folds."""
-    import numpy as np
-
+    list of partial dicts); the final combine sums per (key, day) in
+    DECIMAL(38,0), so the whole path is integer-exact end to end."""
     sentinel = np.int64(-(1 << 62))
     prev_day = np.concatenate(
         [np.asarray([last_day if last_day is not None else sentinel], np.int64),
@@ -2297,101 +1341,29 @@ def _rv_fold(last_day: int | None, last_c: int, days: "np.ndarray", v: "np.ndarr
     return int(days[-1]), int(v[-1]), rows
 
 
-def _update_rv(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Online daily realized variance: squared same-day increments are
-    associative once the boundary tick is carried, so state is two
-    longs per key (last day ordinal, last cents) and each batch emits
-    one int64 partial per day it touched; the final combine sums
-    per (key, day) in DECIMAL(38,0), so the whole path is integer-
-    exact end to end."""
-    last_day, last_c = state.get if state.exists else (None, 0)
-    pdf = _concat_sorted(pdfs)
-    if not len(pdf):
-        if last_day is not None:
-            state.update((last_day, last_c))
-        return
-    days = _ts_us(pdf["ts"]) // _US_PER_DAY
-    v = pdf["value"].mul(100).round().astype("int64").to_numpy()
-    last_day, last_c, rows = _rv_fold(last_day, last_c, days, v)
-    state.update((last_day, last_c))
-    if rows:
-        yield pd.DataFrame([{"event_type": key[0], **r} for r in rows])
+def _rv_rows_fold(carry, rows):
+    last_day, last_c, parts = _rv_fold(*(carry or (None, 0)), rows[0] // _DAY_US, rows[2])
+    return (last_day, last_c), pd.DataFrame(parts) if parts else None
 
 
 def rv_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
-    """Per-event_type streaming realized-variance partials;
-    in-order-per-key replay contract as for ewma_stream."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_rv,
-            outputStructType=_RV_OUT,
-            stateStructType=_RV_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-_RV_OOO_STATE = T.StructType(
-    [
-        T.StructField("buf_ts", T.ArrayType(T.LongType())),
-        T.StructField("buf_eid", T.ArrayType(T.LongType())),
-        T.StructField("buf_cents", T.ArrayType(T.LongType())),
-        T.StructField("last_day", T.LongType()),
-        T.StructField("last_c", T.LongType()),
-    ]
-)
-
-
-def _update_rv_ooo(
-    key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        bts, beid, bc, last_day, last_c = state.get
-        buf = (
-            np.asarray(bts, np.int64),
-            np.asarray(beid, np.int64),
-            np.asarray(bc, np.int64),
-        )
-    else:
-        buf = (np.empty(0, np.int64),) * 3
-        last_day, last_c = None, 0
-    new = None if state.hasTimedOut else _new_rows(pdfs, "int64")
-    released, kept = _buffer_release(state, buf, new)
-    if len(released[0]):
-        days = released[0] // _US_PER_DAY
-        last_day, last_c, rows = _rv_fold(last_day, last_c, days, released[2])
-        if rows:
-            yield pd.DataFrame([{"event_type": key[0], **r} for r in rows])
-    _rearm_or_clear(
-        state, kept[0],
-        (kept[0].tolist(), kept[1].tolist(), kept[2].tolist(), last_day, last_c),
+    """Per-event_type streaming realized-variance partials; in-order
+    replay per key (see :func:`_fold_stream`)."""
+    return _fold_stream(
+        events, ("event_type",), _rv_rows_fold, _RV_CARRY, _RV_OUT, ("cents",),
+        False, watermark,
     )
 
 
 def rv_stream_ooo(events: DataFrame, watermark: str) -> DataFrame:
     """Realized-variance partials over an OUT-OF-ORDER stream: the
-    increment pairing is order-defined within each day, so the
-    watermark-delayed re-sort fronts the same shared _rv_fold —
-    shuffled arrival hash-matches the in-order run and the batch
-    oracle."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_rv_ooo,
-            outputStructType=_RV_OUT,
-            stateStructType=_RV_OOO_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    increment pairing is order-defined within each day, so shuffled
+    arrival within ``watermark`` hash-matches the in-order run and the
+    batch oracle."""
+    return _fold_stream(
+        events, ("event_type",), _rv_rows_fold, _RV_CARRY, _RV_OUT, ("cents",),
+        True, watermark,
     )
-
-
 # ---------------------------------------------------------------------------
 # Streaming sweep line: live per-day peak interval concurrency
 # ---------------------------------------------------------------------------
@@ -2414,8 +1386,6 @@ _CONC_STATE = T.StructType(
         T.StructField("cur_max", T.LongType()),
     ]
 )
-
-_DAY_US = 86_400_000_000
 
 
 def _day_str(day_idx: int) -> str:
@@ -2484,7 +1454,7 @@ def _update_interval_concurrency(
         buf = (np.empty(0, np.int64),) * 2
         pend = np.empty(0, np.int64)
         conc, cur_day, cur_max = 0, -1, 0
-    new = None if state.hasTimedOut else _new_rows(pdfs, None)
+    new = None if state.hasTimedOut else _load(pdfs, ())
     released, kept = _buffer_release(state, buf, new)
     ends_new = released[0] + (released[1] % 14 + 1) * 60_000_000
     pend = np.sort(np.concatenate((pend, ends_new)))
@@ -2512,7 +1482,7 @@ def _update_interval_concurrency(
             }
         )
     # Re-arm only while the key still holds work (buffered starts,
-    # pending ends, or an open day) — the _rearm_or_clear discipline.
+    # pending ends, or an open day), as _fold_stream does.
     # A fully drained key REMOVES its state row instead of persisting
     # an empty one: with no timeout armed an empty row would sit in
     # the store forever — a leak once the grouping key is
@@ -2592,14 +1562,11 @@ def make_funnel_deadline_update(click_us: int, buy_us: int):
         key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         v, c, p, n = state.get if state.exists else (None, None, None, 0)
-        pdf = _concat_sorted(pdfs)
-        if not len(pdf):
-            state.update((v, c, p, n))
+        rows = _load(pdfs, ("event_type",))
+        if rows is None:
             return
-        us = _ts_us(pdf["ts"])
-        kinds = pdf["event_type"].to_numpy()
-        for t, kind in zip(us, kinds):
-            t = int(t)
+        us, _, kinds = _sort_rows(rows)
+        for t, kind in zip(us.tolist(), kinds):
             if kind == "view":
                 if v is None:
                     v = t
@@ -2609,7 +1576,7 @@ def make_funnel_deadline_update(click_us: int, buy_us: int):
             elif kind == "purchase":
                 if c is not None and p is None and c < t <= c + buy_us:
                     p = t
-        n += len(pdf)
+        n += len(us)
         state.update((v, c, p, n))
         yield pd.DataFrame(
             {

@@ -10,6 +10,8 @@ import tempfile
 import uuid
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as hst
 from pyspark.sql import functions as F
 
 from docker_based_real_time_etl_project_spark.sources.parquet import load_table
@@ -394,6 +396,188 @@ def test_stream_asof_carry_is_exact_above_2_53():
     assert out2["quote_age_us"].tolist() == [2 * 60 * 1_000_000]
 
 
+class _WatermarkState:
+    """GroupState stub for an out-of-order fold: the StubState above
+    plus an event-time watermark the test advances, the timed-out flag
+    and the armed timeout."""
+
+    def __init__(self):
+        self.exists = False
+        self._v = None
+        self.wm_ms = 0
+        self.hasTimedOut = False
+        self.timeout_ms = None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self.exists = True
+        self._v = tuple(v)
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+    def setTimeoutTimestamp(self, ms):
+        assert ms > self.wm_ms  # Spark rejects a timeout below the watermark
+        self.timeout_ms = ms
+
+
+@given(data=hst.data())
+@settings(max_examples=60, deadline=None)
+def test_fold_stream_ooo_release_matches_in_order_fold(data):
+    """The fold combinator's out-of-order contract, without Spark.
+    Ticks arrive shuffled by less than the watermark delay, in batches
+    under an advancing watermark, plus injected rows: below the
+    watermark (late) or exactly at it (on time). The RSI and
+    max-drawdown folds behind the reorder buffer must emit exactly what
+    one in-order fold of the (ts, event_id)-sorted on-time rows emits,
+    and a fold that echoes its input must see exactly that sequence;
+    late rows must be dropped; the buffer must hold exactly the on-time
+    rows at or above the watermark; and the event-time timeout must be
+    armed at max(wm + 1, max_kept_ms + 1) exactly while rows stay
+    buffered."""
+    import numpy as np
+    import pandas as pd
+
+    from docker_based_real_time_etl_project_spark.streaming.stateful import (
+        _MDD_CARRY,
+        _RSI_CARRY,
+        _fold_update,
+        _mdd_fold,
+        _mdd_rows_fold,
+        _rsi_fold,
+    )
+
+    delay_ms = data.draw(hst.integers(1, 5_000), label="delay_ms")
+    # 50 ms ticks over 20 s: equal timestamps are common, so the
+    # event_id tiebreak of the release order is exercised
+    ticks = data.draw(
+        hst.lists(
+            hst.tuples(hst.integers(0, 400).map(lambda t: t * 50_000), hst.integers(1, 5_000)),
+            min_size=1,
+            max_size=60,
+        ),
+        label="ticks",
+    )
+    n = len(ticks)
+    eids = data.draw(hst.permutations(range(n)), label="eids")
+    rows = [(t, e, c) for (t, c), e in zip(ticks, eids)]
+    jitter = data.draw(
+        hst.lists(
+            hst.integers(0, delay_ms * 1000 - 1), min_size=n, max_size=n
+        ),
+        label="jitter",
+    )
+    arrival = [r for _, r in sorted(zip(jitter, rows), key=lambda p: p[1][0] + p[0])]
+    cuts = sorted(
+        data.draw(hst.sets(hst.integers(1, n - 1), max_size=6), label="cuts")
+    ) if n > 1 else []
+    batches = [arrival[a:b] for a, b in zip([0] + cuts, cuts + [n])]
+
+    def frame(batch):
+        return pd.DataFrame(
+            {
+                "ts": pd.to_datetime([r[0] for r in batch], unit="us"),
+                "event_id": np.asarray([r[1] for r in batch], np.int64),
+                "value": [r[2] / 100 for r in batch],
+            }
+        )
+
+    def release_order(carry, rows):
+        return (len(rows[0]),), pd.DataFrame({"ts": rows[0], "eid": rows[1]})
+
+    folds = {
+        "order": _fold_update(("event_type",), release_order, ("cents",),
+                              (np.int64,) * 3, 1, True),
+        "rsi": _fold_update(("event_type",), _rsi_fold, ("cents",),
+                            (np.int64,) * 3, len(_RSI_CARRY), True),
+        "mdd": _fold_update(("event_type",), _mdd_rows_fold, ("cents",),
+                            (np.int64,) * 3, len(_MDD_CARRY), True),
+    }
+    states = {k: _WatermarkState() for k in folds}
+    emitted = {k: [] for k in folds}
+
+    on_time = []  # every on-time row delivered so far
+
+    def call(batch, wm_ms, timed_out):
+        want_kept = sorted(r[0] for r in on_time if r[0] >= wm_ms * 1000)
+        for k, update in folds.items():
+            state = states[k]
+            state.wm_ms, state.hasTimedOut, state.timeout_ms = wm_ms, timed_out, None
+            pdfs = [] if timed_out else [frame(batch)]
+            emitted[k].extend(update(("K",), iter(pdfs), state))
+            kept = np.asarray(state.get[0], np.int64)
+            assert sorted(kept.tolist()) == want_kept
+            if len(kept):
+                assert state.timeout_ms == max(wm_ms + 1, int(kept.max()) // 1000 + 1)
+            else:
+                assert state.timeout_ms is None
+
+    wm_ms, seen_ms = 0, None
+    for i, batch in enumerate(batches):
+        if seen_ms is not None:
+            wm_ms = max(wm_ms, seen_ms - delay_ms)
+        on_time.extend(batch)
+        extra = []
+        inject = data.draw(hst.sampled_from(["none", "late", "at_wm"]), label="inject")
+        if wm_ms > 0 and inject == "late":
+            extra = [(data.draw(hst.integers(0, wm_ms * 1000 - 1)), -1 - i, 100)]
+        elif wm_ms > 0 and inject == "at_wm":
+            # on time by the watermark contract; later injections carry
+            # smaller event ids, so an early release would misorder them
+            extra = [(wm_ms * 1000, -1 - i, data.draw(hst.integers(1, 5_000)))]
+            on_time.extend(extra)
+        call(batch + extra, wm_ms, False)
+        top = max(r[0] for r in batch) // 1000
+        seen_ms = top if seen_ms is None else max(seen_ms, top)
+    # tail flush: the key's timeout fires once the watermark passes it
+    while states["rsi"].timeout_ms is not None:
+        wm_ms = states["rsi"].timeout_ms + 1
+        call([], wm_ms, True)
+    assert states["mdd"].timeout_ms is None
+
+    ts, eid, cents = (
+        np.asarray(c, np.int64) for c in zip(*sorted(on_time))
+    )
+    released = pd.concat(emitted["order"], ignore_index=True)
+    assert list(zip(released["ts"], released["eid"])) == list(zip(ts, eid))
+    _, want = _rsi_fold(None, (ts, eid, cents))
+    got = (
+        pd.concat(emitted["rsi"], ignore_index=True).drop(columns="event_type")
+        if emitted["rsi"]
+        else want.iloc[:0]
+    )
+    assert got.astype(object).values.tolist() == want.astype(object).values.tolist()
+    _, whole = _mdd_fold(None, cents)
+    parts = pd.concat(emitted["mdd"], ignore_index=True)
+    assert (parts["event_type"] == "K").all()
+    assert (int(parts["n"].sum()), int(parts["dd"].max()), int(parts["pk"].max())) == (
+        whole["n"], whole["dd"], whole["pk"]
+    )
+
+
+def test_await_drained_raises_on_timeout(spark, tmp_path, monkeypatch):
+    """A stream that cannot finish in time is stopped and raises,
+    instead of handing back whatever its sink holds so far."""
+    from docker_based_real_time_etl_project_spark.streaming import pipelines
+
+    monkeypatch.setattr(pipelines, "STREAM_TIMEOUT_S", 0.5)
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        with pytest.raises(TimeoutError):
+            pipelines.await_drained(q)
+        assert not q.isActive
+    finally:
+        q.stop()
+
+
 def test_stream_topk_is_arrival_order_independent(spark, tmp_path):
     """The leaderboard's defining property: top-k under a total order
     is a commutative, associative merge, so the final board must be
@@ -728,62 +912,6 @@ def test_rv_reorder_buffer_restart_from_checkpoint(spark, sf_dir):
     truth = REGISTRY["q_realized_vol"].fn(spark, sf_dir)
     assert partial is not None
     assert emitted.agg(F.sum("n")).first()[0] > partial
-    assert got.exceptAll(truth).count() == 0
-    assert truth.exceptAll(got).count() == 0
-
-
-def test_mdd_transform_with_state_twin(spark, sf_dir):
-    """Spark 4's transformWithStateInPandas twin of the drawdown fold:
-    same _mdd_fold, explicit ValueState handle. GATED on the runtime
-    capability probe — in this environment the TWS state-server
-    protocol needs the protobuf package (the driver worker crashes in
-    validateAndMaybeEvolveStateSchema importing google.protobuf), so
-    the test documents the blocker by skipping on the probe's reason;
-    where protobuf exists, the twin must hash-match the batch
-    q_max_drawdown truth exactly like the applyInPandasWithState
-    stream does."""
-    from docker_based_real_time_etl_project_spark.queries import REGISTRY
-    from docker_based_real_time_etl_project_spark.queries.streaming_q import (
-        _stream,
-    )
-    from docker_based_real_time_etl_project_spark.streaming.pipelines import (
-        run_to_memory,
-    )
-    from docker_based_real_time_etl_project_spark.streaming.stateful import (
-        mdd_stream_tws,
-        tws_available,
-    )
-
-    ok, reason = tws_available()
-    # plan-side construction must work regardless of the runtime gap
-    st = _stream(spark, sf_dir).select("event_type", "ts", "event_id", "value")
-    sdf = mdd_stream_tws(st)
-    assert sdf.isStreaming and set(sdf.columns) == {"event_type", "n", "dd", "pk"}
-    if not ok:
-        pytest.skip(f"transformWithState runtime unusable here: {reason}")
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_to_memory(sdf, output_mode="append", state_partitions=8)
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    got = out.groupBy("event_type").agg(
-        F.sum("n").cast("bigint").alias("n_obs"),
-        F.max("dd").cast("bigint").alias("max_dd_cents"),
-        F.max("pk").cast("bigint").alias("peak_cents"),
-    )
-    truth = REGISTRY["q_max_drawdown"].fn(spark, sf_dir)
     assert got.exceptAll(truth).count() == 0
     assert truth.exceptAll(got).count() == 0
 
