@@ -35,6 +35,22 @@ disjoint-partition commits with zero data rewrite, full re-merge when
 a competing commit overlapped (first committer wins) — so every
 history is equivalent to some serial writer order.
 
+The commit contract lives in two helpers that every write verb calls.
+:func:`_write_dir` writes one commit dir (clustered layout), indexes
+the new files' blooms when the table has a bloom index, and returns
+their manifest entries: footer stats when the table has a
+``stats_col``, and for MoR commits the commit's sequence number on
+data images and delete files (delete entries also record their row
+count). :func:`_next_manifest` builds version N+1 from the base: the
+table-level keys carry forward under the commit's overlays; the
+entries of partitions the commit did not rewrite carry verbatim (none
+for a full rewrite) ahead of the new ones; the base's delete entries
+survive only for those same partitions, followed by the commit's own.
+:func:`_commit` chains the two and publishes the result with the
+manifest CAS; ``snap_merge_concurrent`` calls the halves itself,
+because it writes once and may publish several times while it
+rebases.
+
 Reference parity: the reference keeps only latest state in row stores
 (etl.py:181-187); versioned history of an upserted table is what its
 operators (and any audit/backfill consumer) would need at lake scale.
@@ -100,6 +116,25 @@ def snap_versions(path: str) -> list[int]:
 def _read_manifest(path: str, version: int) -> dict:
     with open(_manifest_file(path, version)) as fh:
         return json.load(fh)
+
+
+def _pin(path: str, verb: str, version: int | None = None) -> tuple[int, dict]:
+    """(version, manifest) of ``version`` (default: latest). Raises
+    FileNotFoundError on an uninitialized table or an absent version —
+    the one error contract of every read and write verb."""
+    versions = snap_versions(path)
+    if not versions:
+        raise FileNotFoundError(f"{verb} on uninitialized table {path}")
+    v = versions[-1] if version is None else version
+    if v not in versions:
+        raise FileNotFoundError(f"snapshot version {v} not found at {path}")
+    return v, _read_manifest(path, v)
+
+
+def _is_mor(mode: str) -> bool:
+    if mode not in ("cow", "mor"):
+        raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
+    return mode == "mor"
 
 
 class CheckConstraintError(ValueError):
@@ -269,36 +304,27 @@ def snap_init(
             raise ValueError(f"bloom_col {bloom_col!r} not in {df.columns}")
     if check is not None:
         _enforce_check(df, {"check_expr": check}, "snap_init")
-    commit_rel = "c000001"
-    write_clustered(
-        df,
-        os.path.join(path, commit_rel),
-        partition_by=(partition_col,),
-        sort_by=tuple(sort_by),
-        target_rows_per_file=target_rows_per_file,
-    )
-    manifest = {
+    # a base with no "entries" key: nothing to carry, no delete entries
+    base = {
         **(meta or {}),
-        "version": 1,
+        "version": 0,
         "partition_col": partition_col,
         "stats_col": stats_col,
         "check_expr": check,
         "columns": list(df.columns),
         "schema_json": df.schema.json(),
-        "entries": _commit_entries(
-            path, commit_rel, partition_col, stats_col
-        ),
     }
     if bloom_col is not None:
-        manifest.update(
+        base.update(
             bloom_col=bloom_col,
             bloom_bits=int(bloom_bits),
             bloom_k=int(bloom_k),
             bloom_type=dict(df.dtypes)[bloom_col],
         )
-        _attach_blooms(spark, path, commit_rel, manifest)
-    _publish(path, manifest)
-    return 1
+    return _commit(
+        spark, path, base, data=df, rewritten=None, sort_by=sort_by,
+        target_rows_per_file=target_rows_per_file,
+    )
 
 
 def snap_read(
@@ -316,28 +342,43 @@ def snap_read(
     name. An EMPTY version (e.g. a DELETE that matched every row)
     reads as an empty DataFrame with the manifest-recorded schema —
     the table stays fully usable, it just has no rows."""
-    v = _resolve_version(path, version)
-    m = _read_manifest(path, v)
-    entries = m["entries"]
-    if not entries:
+    v, m = _pin(path, "snap_read", version)
+    if not m["entries"]:
         return _empty_version(spark, path, v, m)
+    entries = _select_entries(m, partitions, range_filter)
+    if not entries:
+        return snap_read(spark, path, version=v).limit(0)
+    return _read_with_deletes(spark, path, entries, m)
+
+
+def _select_entries(
+    m: dict, partitions: Sequence[str] | None, range_filter: tuple | None
+) -> list[dict]:
+    """The data entries a read of ``partitions`` / ``range_filter``
+    opens, pruned from the manifest alone. Range pruning uses the
+    manifest stats (Iceberg manifest pruning): files without stats are
+    kept, and the caller still applies the row-level predicate."""
+    entries = m["entries"]
     if partitions is not None:
         want = {str(p) for p in partitions}
         entries = [e for e in entries if str(e["partition"]) in want]
     if range_filter is not None:
-        # file-level skipping from MANIFEST stats alone — no footer
-        # reads for pruned files. Files without stats are kept (safe).
-        # The caller still applies the row-level predicate; this only
-        # shrinks the file set, exactly like Iceberg manifest pruning.
         lo, hi = range_filter
         entries = [
             e
             for e in entries
             if "stats" not in e or not (e["stats"][0] > hi or e["stats"][1] < lo)
         ]
-    if not entries:
-        return snap_read(spark, path, version=v).limit(0)
-    return _read_with_deletes(spark, path, entries, m)
+    return entries
+
+
+def _pending_deletes(m: dict, entries: list[dict]) -> list[dict]:
+    """The delete entries a read of ``entries`` must apply: those of
+    the partitions it reads, never the table's."""
+    read_parts = {str(e["partition"]) for e in entries}
+    return [
+        d for d in m.get("delete_entries") or [] if str(d["partition"]) in read_parts
+    ]
 
 
 def _read_entry_files(
@@ -396,44 +437,6 @@ def _read_entry_files(
 # ---------------------------------------------------------------------------
 
 
-def _parquet_rows(full: str) -> int:
-    import pyarrow.parquet as pq
-
-    return int(pq.ParquetFile(full).metadata.num_rows)
-
-
-def _delete_commit_entries(
-    path: str, commit_rel: str, partition_col: str, seq: int
-) -> list[dict]:
-    """Manifest delete-entries for one MoR delete commit: data-file
-    entries plus the footer row count (drives the reader's broadcast
-    decision without opening files at plan time) and the commit's
-    SEQUENCE NUMBER (the delete applies only to data files with a
-    strictly lower seq — see :func:`_entry_seq`)."""
-    out = []
-    for e in _commit_entries(path, commit_rel, partition_col):
-        out.append(
-            {
-                **e,
-                "rows": _parquet_rows(os.path.join(path, e["path"])),
-                "seq": int(seq),
-            }
-        )
-    return out
-
-
-def _carried_deletes(m: dict, rewritten_partitions: set[str] | None) -> list[dict]:
-    """Delete entries that survive a commit: drop the ones for
-    partitions the commit rewrites (their effect is materialized into
-    the new files — keeping them would cancel rows re-inserted later,
-    breaking the ordering invariant above). ``None`` = full-table
-    rewrite, drop everything."""
-    dels = m.get("delete_entries") or []
-    if rewritten_partitions is None:
-        return []
-    return [d for d in dels if str(d["partition"]) not in rewritten_partitions]
-
-
 _BROADCAST_DELETE_ROWS = 2_000_000
 
 
@@ -476,6 +479,139 @@ def _entry_seq(e: dict) -> int:
     return int(e.get("seq", -1))
 
 
+def _write_dir(
+    spark: SparkSession,
+    path: str,
+    m: dict,
+    df: DataFrame,
+    commit_rel: str,
+    seq: int | None = None,
+    deletes: bool = False,
+    sort_by: Sequence[str] = (),
+    target_rows_per_file: int | None = None,
+    n_partitions: int | None = None,
+) -> list[dict]:
+    """Write ``df`` as commit dir ``commit_rel`` under the layout of
+    manifest ``m`` and return the new files' manifest entries.
+
+    Data files get footer stats when ``m`` has a ``stats_col`` and a
+    bloom sidecar when it has a bloom index; ``seq`` stamps them as a
+    MoR commit's same-commit images. With ``deletes`` the files are
+    delete files: no stats or blooms, and each entry records its footer
+    row count (the reader's broadcast decision, without opening files
+    at plan time) and the commit's sequence number ``seq`` (the delete
+    applies only to data files with a strictly lower seq)."""
+    import pyarrow.parquet as pq
+
+    partition_col = m["partition_col"]
+    write_clustered(
+        df,
+        os.path.join(path, commit_rel),
+        partition_by=(partition_col,),
+        sort_by=tuple(sort_by),
+        target_rows_per_file=target_rows_per_file,
+        n_partitions=n_partitions,
+    )
+    if deletes:
+        return [
+            {
+                **e,
+                "rows": int(
+                    pq.ParquetFile(os.path.join(path, e["path"])).metadata.num_rows
+                ),
+                "seq": int(seq),
+            }
+            for e in _commit_entries(path, commit_rel, partition_col)
+        ]
+    _attach_blooms(spark, path, commit_rel, m)
+    entries = _commit_entries(path, commit_rel, partition_col, m.get("stats_col"))
+    return entries if seq is None else [{**e, "seq": seq} for e in entries]
+
+
+def _next_manifest(
+    base: dict,
+    version: int,
+    entries: list[dict] | None,
+    rewritten: set[str] | None = frozenset(),
+    deletes: Sequence[dict] = (),
+    drop: Sequence[str] = (),
+    changes: dict | None = None,
+) -> dict:
+    """Manifest of ``version`` built on ``base``: its table-level keys
+    minus ``drop``, overlaid by ``changes``. ``entries=None`` is a
+    metadata-only publish that keeps the base's file set and delete
+    entries as they are. Otherwise the base's entries and delete
+    entries of partitions not in ``rewritten`` carry ahead of the new
+    ``entries`` and ``deletes`` (``rewritten=None``: a full rewrite
+    carries none). A rewritten partition's deletes are materialized in
+    its new files; carrying them would cancel rows re-inserted later,
+    breaking the ordering invariant above. A base without entries is a
+    new table; its first version records no delete entries."""
+
+    def carried(es):
+        return [
+            e
+            for e in es
+            if rewritten is not None and str(e["partition"]) not in rewritten
+        ]
+
+    m = {k: v for k, v in base.items() if k not in drop}
+    m.update(changes or {})
+    m["version"] = version
+    if entries is not None:
+        m["entries"] = carried(base.get("entries", ())) + entries
+        if "entries" in base:
+            m["delete_entries"] = (
+                carried(base.get("delete_entries") or []) + list(deletes)
+            )
+    return m
+
+
+def _commit(
+    spark: SparkSession,
+    path: str,
+    base: dict,
+    data: DataFrame | None = None,
+    old_images: DataFrame | None = None,
+    rewritten: set[str] | None = frozenset(),
+    version: int | None = None,
+    entries: list[dict] | None = None,
+    deletes: Sequence[dict] = (),
+    drop: Sequence[str] = (),
+    changes: dict | None = None,
+    **layout,
+) -> int:
+    """Write and publish one version on top of manifest ``base``;
+    returns the version (default ``base``'s + 1).
+
+    ``data`` lands in ``c{V}``. ``old_images`` makes it a MoR commit:
+    those rows become delete files in ``c{V}d`` (``c{V}`` when the
+    commit writes no data), and the commit's sequence number stamps
+    both halves. The written entries, or the given ``entries`` /
+    ``deletes``, go through :func:`_next_manifest`; a commit that
+    writes nothing and is given no ``entries`` is metadata-only.
+    ``layout`` holds the write_clustered sizing (sort_by,
+    target_rows_per_file, n_partitions)."""
+    version = base["version"] + 1 if version is None else version
+    head = {k: v for k, v in base.items() if k not in drop} | (changes or {})
+    commit_rel = f"c{version:06d}"
+    seq = None
+    if old_images is not None:
+        seq = _commit_seq(base, version)
+        deletes = _write_dir(
+            spark, path, head, old_images,
+            commit_rel + ("d" if data is not None else ""), seq, deletes=True,
+            **layout,
+        )
+        entries = entries or []
+    if data is not None:
+        entries = _write_dir(spark, path, head, data, commit_rel, seq, **layout)
+    _publish(
+        path, _next_manifest(base, version, entries, rewritten, deletes, drop, changes)
+    )
+    return version
+
+
 def _read_with_deletes(
     spark: SparkSession,
     path: str,
@@ -490,9 +626,7 @@ def _read_with_deletes(
     never the table's. Small delete sets broadcast (the common case: a
     GDPR point delete is a handful of rows against a 100 TB scan);
     large ones fall back to a shuffled hash join."""
-    dels = manifest.get("delete_entries") or []
-    read_parts = {str(e["partition"]) for e in entries}
-    dels = [d for d in dels if str(d["partition"]) in read_parts]
+    dels = _pending_deletes(manifest, entries)
     if not dels:
         return _read_entry_files(spark, path, entries, manifest)
 
@@ -553,141 +687,25 @@ def snap_merge(
     exactly as for MoR deletes/updates; snap_compact promotes. This is
     what a high-rate CDC apply wants: per-batch write cost tracks the
     changelog, not the partitions it touches."""
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"snap_merge on uninitialized table {path}")
-    base_v = versions[-1]
-    cur = _read_manifest(path, base_v)
-    _enforce_check(
-        updates if delete_col is None else updates.filter(~F.col(delete_col)),
-        cur,
-        "snap_merge batch",
+    mor = _is_mor(mode)
+    base_v, cur = _pin(path, "snap_merge")
+    matched, incoming, merged, touched = _plan_merge(
+        spark, path, base_v, cur, updates, key_cols, delete_col, "snap_merge",
+        "left_semi" if mor else "left_anti",
     )
-    if mode == "mor":
-        return _merge_mor(
-            spark, path, base_v, cur, updates, key_cols, delete_col,
-            sort_by, target_rows_per_file, meta,
-        )
-    merged, touched = _plan_merge(
-        spark, path, base_v, cur, updates, key_cols, delete_col
-    )
-    new_version = base_v + 1
-    commit_rel = f"c{new_version:06d}"
-    write_clustered(
-        merged,
-        os.path.join(path, commit_rel),
-        partition_by=(cur["partition_col"],),
-        sort_by=tuple(sort_by),
-        target_rows_per_file=target_rows_per_file,
-    )
-    carried = [e for e in cur["entries"] if str(e["partition"]) not in touched]
-    _attach_blooms(spark, path, commit_rel, cur)
-    _publish(
-        path,
-        {
-            **{k: v for k, v in cur.items() if k != "entries"},
+    return _commit(
+        spark, path, cur,
+        data=incoming if mor else merged,
+        old_images=matched if mor else None,
+        rewritten=frozenset() if mor else touched,
+        changes={
             **(meta or {}),
-            "version": new_version,
             "columns": list(merged.columns),
             "schema_json": merged.schema.json(),
-            "entries": carried
-            + _commit_entries(
-                path, commit_rel, cur["partition_col"], cur.get("stats_col")
-            ),
-            "delete_entries": _carried_deletes(cur, touched),
         },
-    )
-    return new_version
-
-
-def _merge_mor(
-    spark: SparkSession,
-    path: str,
-    base_v: int,
-    cur: dict,
-    updates: DataFrame,
-    key_cols: Sequence[str],
-    delete_col: str | None,
-    sort_by: Sequence[str],
-    target_rows_per_file: int | None,
-    meta: dict | None,
-) -> int:
-    """The merge-on-read MERGE body (see snap_merge(mode='mor')):
-    old images of matched keys -> delete files in ``c{V}d``, incoming
-    non-tombstone rows -> seq-stamped data files in ``c{V}``, every
-    base entry carried verbatim. Shares _plan_merge's full-row /
-    additive-evolution contract checks so CoW and MoR cannot drift."""
-    partition_col = cur["partition_col"]
-    key_cols = list(key_cols)
-    touched = {
-        str(r[0]) for r in updates.select(partition_col).distinct().collect()
-    }
-    base = snap_read(spark, path, base_v, partitions=sorted(touched))
-    incoming_cols = [c for c in updates.columns if c != delete_col]
-    missing = [c for c in base.columns if c not in incoming_cols]
-    if missing:
-        raise ValueError(
-            f"merge updates must carry full rows; missing base columns {missing} "
-            "(schema evolution is additive-only)"
-        )
-    upd_keys = updates.select(*key_cols).distinct()
-    # null-safe like _plan_merge's survivor anti-join: a NULL-keyed
-    # update's old image must land in the delete file too
-    old_images = base.alias("_b").join(
-        F.broadcast(upd_keys.alias("_u")),
-        on=[F.col(f"_b.{k}").eqNullSafe(F.col(f"_u.{k}")) for k in key_cols],
-        how="left_semi",
-    )
-    incoming = updates
-    if delete_col is not None:
-        incoming = updates.filter(~F.col(delete_col)).drop(delete_col)
-    new_version = base_v + 1
-    seq = _commit_seq(cur, new_version)
-    del_rel = f"c{new_version:06d}d"
-    write_clustered(
-        old_images,
-        os.path.join(path, del_rel),
-        partition_by=(partition_col,),
-        sort_by=tuple(sort_by),
+        sort_by=sort_by,
         target_rows_per_file=target_rows_per_file,
     )
-    data_rel = f"c{new_version:06d}"
-    write_clustered(
-        incoming,
-        os.path.join(path, data_rel),
-        partition_by=(partition_col,),
-        sort_by=tuple(sort_by),
-        target_rows_per_file=target_rows_per_file,
-    )
-    _attach_blooms(spark, path, data_rel, cur)
-    new_cols = list(base.columns) + [
-        c for c in incoming_cols if c not in base.columns
-    ]
-    evolved = base.unionByName(incoming, allowMissingColumns=True).select(
-        *new_cols
-    )
-    new_entries = [
-        {**e, "seq": seq}
-        for e in _commit_entries(
-            path, data_rel, partition_col, cur.get("stats_col")
-        )
-    ]
-    _publish(
-        path,
-        {
-            **{k: v for k, v in cur.items() if k != "entries"},
-            **(meta or {}),
-            "version": new_version,
-            "columns": new_cols,
-            "schema_json": evolved.schema.json(),
-            "entries": cur["entries"] + new_entries,
-            "delete_entries": (cur.get("delete_entries") or [])
-            + _delete_commit_entries(path, del_rel, partition_col, seq),
-        },
-    )
-    return new_version
 
 
 def _plan_merge(
@@ -698,17 +716,29 @@ def _plan_merge(
     updates: DataFrame,
     key_cols: Sequence[str],
     delete_col: str | None,
-) -> tuple[DataFrame, set[str]]:
-    """The merge plan against a pinned base version: (merged rows for
-    the touched partitions, touched partition set). Shared by the
-    single-writer and optimistic-concurrent merge paths so their
-    row-level semantics cannot drift.
+    verb: str,
+    how: str = "left_anti",
+) -> tuple[DataFrame, DataFrame, DataFrame, set[str]]:
+    """The merge plan against a pinned base version: (base rows of the
+    touched partitions joined ``how`` on the keys, incoming
+    non-tombstone rows, their union, touched partition set). CoW takes
+    the ``left_anti`` survivors and rewrites the union; MoR takes the
+    ``left_semi`` old images as delete files and appends the incoming
+    rows. Shared by every merge path so their row-level semantics
+    cannot drift; the union's schema is the merged table schema either
+    way.
 
     SCHEMA EVOLUTION (additive, the Delta/Iceberg default): ``updates``
     must carry every base column (full-row upserts — a missing base
     column is an error, not an implicit null overwrite) and may carry
     NEW columns; surviving base rows take NULL for those, the same
-    back-fill untouched partitions' old files get at read time."""
+    back-fill untouched partitions' old files get at read time. The
+    incoming rows must pass the base's CHECK constraint."""
+    _enforce_check(
+        updates if delete_col is None else updates.filter(~F.col(delete_col)),
+        cur,
+        f"{verb} batch",
+    )
     partition_col = cur["partition_col"]
     key_cols = list(key_cols)
     touched = {
@@ -726,16 +756,16 @@ def _plan_merge(
     # NULL-SAFE key match: a NULL-keyed base row must be replaced (not
     # duplicated) by a NULL-keyed update — eqNullSafe stays an equi-join
     # key for the broadcast hash join, so the plan shape is unchanged.
-    survivors = base.alias("_b").join(
+    matched = base.alias("_b").join(
         F.broadcast(upd_keys.alias("_u")),
         on=[F.col(f"_b.{k}").eqNullSafe(F.col(f"_u.{k}")) for k in key_cols],
-        how="left_anti",
+        how=how,
     )
     incoming = updates
     if delete_col is not None:
         incoming = updates.filter(~F.col(delete_col)).drop(delete_col)
-    merged = survivors.unionByName(incoming, allowMissingColumns=True)
-    return merged, touched
+    merged = matched.unionByName(incoming, allowMissingColumns=True)
+    return matched, incoming, merged, touched
 
 
 def _manifest_meta_fp(m: dict) -> dict:
@@ -833,74 +863,35 @@ def snap_merge_concurrent(
     import uuid
 
     token = writer_id or uuid.uuid4().hex[:8]
-    if not snap_versions(path):
-        raise FileNotFoundError(f"snap_merge_concurrent on uninitialized table {path}")
     for attempt in range(max_attempts):
-        versions = snap_versions(path)
-        base_v = versions[-1]
-        cur = _read_manifest(path, base_v)
-        # enforced per attempt, against the PINNED base manifest: a
-        # re-execution after a metadata conflict must honor the check
-        # constraint the intervening commit may have introduced
-        _enforce_check(
-            updates if delete_col is None else updates.filter(~F.col(delete_col)),
-            cur,
-            "snap_merge_concurrent batch",
-        )
-        partition_col = cur["partition_col"]
-        stats_col = cur.get("stats_col")
-        merged, touched = _plan_merge(
-            spark, path, base_v, cur, updates, key_cols, delete_col
+        # the CHECK constraint is enforced per attempt, against the
+        # pinned base: a re-execution after a metadata conflict honors
+        # a constraint the intervening commit may have introduced
+        base_v, cur = _pin(path, "snap_merge_concurrent")
+        _, _, merged, touched = _plan_merge(
+            spark, path, base_v, cur, updates, key_cols, delete_col,
+            "snap_merge_concurrent",
         )
         commit_rel = f"c{base_v + 1:06d}w{token}a{attempt}"
-        write_clustered(
-            merged,
-            os.path.join(path, commit_rel),
-            partition_by=(partition_col,),
-            sort_by=tuple(sort_by),
+        new_entries = _write_dir(
+            spark, path, cur, merged, commit_rel, sort_by=sort_by,
             target_rows_per_file=target_rows_per_file,
         )
-        new_entries = _commit_entries(path, commit_rel, partition_col, stats_col)
-        _attach_blooms(spark, path, commit_rel, cur)
         if _before_publish is not None:
             hook, _before_publish = _before_publish, None
             hook()
-        # CAS loop: rebase over disjoint commits without rewriting data
-        carried_manifest = cur
-        target_v = base_v + 1
-        stale = False
-        while True:
-            carried = [
-                e
-                for e in carried_manifest["entries"]
-                if str(e["partition"]) not in touched
-            ]
-            ok = _try_publish(
-                path,
-                {
-                    **{k: v for k, v in cur.items() if k != "entries"},
-                    "version": target_v,
-                    "columns": list(merged.columns),
-                    "schema_json": merged.schema.json(),
-                    "entries": carried + new_entries,
-                    # deletes re-derived from the manifest whose entries
-                    # we carry (the rebase base), minus our rewritten
-                    # partitions — read-through already materialized them
-                    "delete_entries": _carried_deletes(
-                        carried_manifest, touched
-                    ),
-                },
+        changes = {"columns": list(merged.columns), "schema_json": merged.schema.json()}
+        # CAS loop: rebase over disjoint commits without rewriting data.
+        # Entries and deletes carry from the rebase base; its table-level
+        # keys equal the pinned base's, or the rebase is a conflict.
+        rebase_m, target_v = cur, base_v + 1
+        while not _try_publish(
+            path, _next_manifest(rebase_m, target_v, new_entries, touched, changes=changes)
+        ):
+            latest_v, latest_m = _pin(path, "snap_merge_concurrent")
+            footprints = (
+                _touched_partitions(path, v) for v in range(target_v, latest_v + 1)
             )
-            if ok:
-                return target_v
-            latest_v = snap_versions(path)[-1]
-            latest_m = _read_manifest(path, latest_v)
-            conflict = False
-            for v in range(target_v, latest_v + 1):
-                tp = _touched_partitions(path, v)
-                if tp is None or tp & touched:
-                    conflict = True
-                    break
             # Metadata changes are commit conflicts too (Delta/Iceberg
             # semantics): a rebase republishes the BASE manifest's
             # table-level metadata, so an intervening commit that
@@ -910,20 +901,16 @@ def snap_merge_concurrent(
             # vanish from reads even though its files are carried.
             # Re-execute against the new base instead, which picks the
             # evolved metadata up through _plan_merge/snap_read.
-            if not conflict and _manifest_meta_fp(cur) != _manifest_meta_fp(
-                latest_m
+            if any(tp is None or tp & touched for tp in footprints) or (
+                _manifest_meta_fp(cur) != _manifest_meta_fp(latest_m)
             ):
-                conflict = True
-            if conflict:
                 # our merged files (or carried metadata) no longer
                 # reflect the new base — first committer wins, we redo
-                stale = True
+                shutil.rmtree(os.path.join(path, commit_rel), ignore_errors=True)
                 break
-            carried_manifest = latest_m
-            target_v = latest_v + 1
-        if stale:
-            shutil.rmtree(os.path.join(path, commit_rel), ignore_errors=True)
-            continue
+            rebase_m, target_v = latest_m, latest_v + 1
+        else:
+            return target_v
     raise SnapshotConflictError(
         f"merge on {path} lost {max_attempts} optimistic attempts — "
         "contention too high for optimistic concurrency"
@@ -1044,28 +1031,11 @@ def snap_files(
     would open — metadata-only (audit/test helper for the pruning
     contracts). Mirrors snap_read's error contract: FileNotFoundError
     on an uninitialized table or an absent version."""
-    v = _resolve_version(path, version)
-    m = _read_manifest(path, v)
-    entries = m["entries"]
-    if partitions is not None:
-        want = {str(p) for p in partitions}
-        entries = [e for e in entries if str(e["partition"]) in want]
-    if range_filter is not None:
-        lo, hi = range_filter
-        entries = [
-            e
-            for e in entries
-            if "stats" not in e or not (e["stats"][0] > hi or e["stats"][1] < lo)
-        ]
+    _, m = _pin(path, "snap_files", version)
+    entries = _select_entries(m, partitions, range_filter)
     # a MoR table's read also opens the delete files of the partitions
     # it scans — listing them keeps the O(deletes) I/O contract auditable
-    read_parts = {str(e["partition"]) for e in entries}
-    dels = [
-        d
-        for d in m.get("delete_entries") or []
-        if str(d["partition"]) in read_parts
-    ]
-    return [e["path"] for e in entries] + [d["path"] for d in dels]
+    return [e["path"] for e in entries + _pending_deletes(m, entries)]
 
 
 def snap_compact(
@@ -1083,37 +1053,33 @@ def snap_compact(
     publish, and the small-file debris disappears for good when
     retention vacuums the pre-compaction versions. This is exactly
     Iceberg/Delta ``rewrite_data_files`` / OPTIMIZE."""
+    return _compact(spark, path, "snap_compact", None, target_rows_per_file, sort_by)
+
+
+def _compact(
+    spark: SparkSession,
+    path: str,
+    verb: str,
+    partitions: Sequence[str] | None,
+    target_rows_per_file: int,
+    sort_by: Sequence[str],
+) -> int:
+    """Rewrite ``partitions`` (``None``: the whole table) of the latest
+    version into target-sized files as one commit. The rewrite reads
+    through pending deletes and retires them: this is the MoR
+    promotion path (Iceberg rewrite_data_files)."""
     import math
 
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"snap_compact on uninitialized table {path}")
-    cur = _read_manifest(path, versions[-1])
-    partition_col, stats_col = cur["partition_col"], cur.get("stats_col")
-    df = snap_read(spark, path, versions[-1])
-    rows = df.count()
-    new_version = versions[-1] + 1
-    commit_rel = f"c{new_version:06d}"
-    write_clustered(
-        df,
-        os.path.join(path, commit_rel),
-        partition_by=(partition_col,),
-        sort_by=tuple(sort_by),
+    base_v, cur = _pin(path, verb)
+    touched = None if partitions is None else {str(p) for p in partitions}
+    df = snap_read(
+        spark, path, base_v, partitions=None if touched is None else sorted(touched)
+    )
+    return _commit(
+        spark, path, cur, data=df, rewritten=touched, sort_by=sort_by,
         target_rows_per_file=target_rows_per_file,
-        n_partitions=max(1, math.ceil(rows / target_rows_per_file)),
+        n_partitions=max(1, math.ceil(df.count() / target_rows_per_file)),
     )
-    _attach_blooms(spark, path, commit_rel, cur)
-    _publish(
-        path,
-        {
-            **{k: v for k, v in cur.items() if k != "entries"},
-            "version": new_version,
-            "entries": _commit_entries(path, commit_rel, partition_col, stats_col),
-            # full rewrite read through every delete — MoR debris retired
-            "delete_entries": _carried_deletes(cur, None),
-        },
-    )
-    return new_version
 
 
 # ---------------------------------------------------------------------------
@@ -1171,10 +1137,7 @@ def snap_init_zorder(
 def _snap_grid(path: str):
     from docker_based_real_time_etl_project_spark.operators.zorder import ZGrid
 
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    z = _read_manifest(path, versions[-1]).get("zorder")
+    z = _pin(path, "snap_zvalue")[1].get("zorder")
     if z is None:
         raise ValueError(f"{path} is not a z-ordered snapshot table")
     return ZGrid(**z)
@@ -1224,8 +1187,8 @@ def snap_meta(path: str, version: int | None = None) -> dict:
     """Table-level manifest metadata of a version (everything but the
     file entries) — e.g. the z-order grid, or a streaming sink's
     committed batch_id. Same error contract as snap_read/snap_files."""
-    v = _resolve_version(path, version)
-    return {k: val for k, val in _read_manifest(path, v).items() if k != "entries"}
+    _, m = _pin(path, "snap_meta", version)
+    return {k: val for k, val in m.items() if k != "entries"}
 
 
 def snap_as_of(path: str, ts_epoch: float) -> int:
@@ -1236,11 +1199,9 @@ def snap_as_of(path: str, ts_epoch: float) -> int:
     FileNotFoundError when the table is uninitialized or the timestamp
     predates the first commit — same contract as the version APIs.
     Pass the result to snap_read/snap_files as ``version``."""
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
+    _pin(path, "snap_as_of")
     best = None
-    for v in versions:
+    for v in snap_versions(path):
         stamp = _read_manifest(path, v).get("committed_at")
         if stamp is None:  # pre-stamp manifest: fall back to file mtime
             stamp = os.path.getmtime(_manifest_file(path, v))
@@ -1267,41 +1228,10 @@ def snap_compact_partitions(
     this is the only compaction shape that works — whole-table
     snap_compact rewrites everything and is for small tables or
     layout migrations."""
-    import math
-
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"snap_compact_partitions on uninitialized {path}")
-    cur = _read_manifest(path, versions[-1])
-    partition_col, stats_col = cur["partition_col"], cur.get("stats_col")
-    touched = {str(p) for p in partitions}
-    df = snap_read(spark, path, versions[-1], partitions=sorted(touched))
-    rows = df.count()
-    new_version = versions[-1] + 1
-    commit_rel = f"c{new_version:06d}"
-    write_clustered(
-        df,
-        os.path.join(path, commit_rel),
-        partition_by=(partition_col,),
-        sort_by=tuple(sort_by),
-        target_rows_per_file=target_rows_per_file,
-        n_partitions=max(1, math.ceil(rows / target_rows_per_file)),
+    return _compact(
+        spark, path, "snap_compact_partitions", partitions, target_rows_per_file,
+        sort_by,
     )
-    carried = [e for e in cur["entries"] if str(e["partition"]) not in touched]
-    _attach_blooms(spark, path, commit_rel, cur)
-    _publish(
-        path,
-        {
-            **{k: v for k, v in cur.items() if k != "entries"},
-            "version": new_version,
-            "entries": carried
-            + _commit_entries(path, commit_rel, partition_col, stats_col),
-            # compaction materializes the anti-join for these partitions
-            # — this is the MoR promotion path (Iceberg rewrite_data_files)
-            "delete_entries": _carried_deletes(cur, touched),
-        },
-    )
-    return new_version
 
 
 def snap_delete_where(
@@ -1338,14 +1268,43 @@ def snap_delete_where(
     and column-pruned either way; MoR shifts the rewrite tax to an
     anti-join on the read side (reference trade: Iceberg v2 spec
     "position & equality deletes"; Delta deletion vectors)."""
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"snap_delete_where on uninitialized table {path}")
-    base_v = versions[-1]
-    cur = _read_manifest(path, base_v)
+    scope = _match_scope(spark, path, "snap_delete_where", predicate, mode)
+    if scope is None:
+        return None
+    mor, cur, touched, scoped, hit = scope
+    layout = {"sort_by": sort_by, "target_rows_per_file": target_rows_per_file}
+    if mor:
+        # only the matched rows are written, as delete files; data
+        # entries (and their per-file blooms) carry forward untouched
+        return _commit(spark, path, cur, old_images=scoped.filter(hit), **layout)
+    return _commit(
+        spark, path, cur, data=scoped.filter(~hit), rewritten=touched, **layout
+    )
+
+
+def _match_scope(
+    spark: SparkSession,
+    path: str,
+    verb: str,
+    predicate: str,
+    mode: str,
+    set_cols: Sequence[str] = (),
+) -> tuple[bool, dict, set[str], DataFrame, "F.Column"] | None:
+    """The shared head of DELETE/UPDATE WHERE: validate ``mode`` and
+    the SET targets, pin the latest version, and find the partitions
+    holding a row where ``predicate`` is TRUE. Returns (is MoR, base
+    manifest, touched partitions, their rows, the NULL-as-FALSE match
+    column), or None when nothing matched."""
+    mor = _is_mor(mode)
+    base_v, cur = _pin(path, verb)
     partition_col = cur["partition_col"]
+    if partition_col in set_cols:
+        raise ValueError(
+            f"partition column {partition_col!r} is immutable; use a merge"
+        )
+    unknown = [c for c in set_cols if c not in cur["columns"]]
+    if unknown:
+        raise ValueError(f"SET targets not in table schema: {unknown}")
     cond = F.expr(predicate)
     base = snap_read(spark, path, base_v)
     touched = {
@@ -1354,61 +1313,8 @@ def snap_delete_where(
     }
     if not touched:
         return None
-    new_version = base_v + 1
-    if mode == "mor":
-        # write ONLY the matched rows as delete files — data entries
-        # (and their per-file blooms) carry forward untouched
-        matched = snap_read(
-            spark, path, base_v, partitions=sorted(touched)
-        ).filter(F.coalesce(cond, F.lit(False)))
-        commit_rel = f"c{new_version:06d}"
-        write_clustered(
-            matched,
-            os.path.join(path, commit_rel),
-            partition_by=(partition_col,),
-            sort_by=tuple(sort_by),
-            target_rows_per_file=target_rows_per_file,
-        )
-        _publish(
-            path,
-            {
-                **{k: v for k, v in cur.items() if k != "entries"},
-                "version": new_version,
-                "entries": cur["entries"],
-                "delete_entries": (cur.get("delete_entries") or [])
-                + _delete_commit_entries(
-                    path, commit_rel, partition_col,
-                    _commit_seq(cur, new_version),
-                ),
-            },
-        )
-        return new_version
-    keep = snap_read(spark, path, base_v, partitions=sorted(touched)).filter(
-        ~F.coalesce(cond, F.lit(False))
-    )
-    commit_rel = f"c{new_version:06d}"
-    write_clustered(
-        keep,
-        os.path.join(path, commit_rel),
-        partition_by=(partition_col,),
-        sort_by=tuple(sort_by),
-        target_rows_per_file=target_rows_per_file,
-    )
-    carried = [e for e in cur["entries"] if str(e["partition"]) not in touched]
-    _attach_blooms(spark, path, commit_rel, cur)
-    _publish(
-        path,
-        {
-            **{k: v for k, v in cur.items() if k != "entries"},
-            "version": new_version,
-            "entries": carried
-            + _commit_entries(
-                path, commit_rel, partition_col, cur.get("stats_col")
-            ),
-            "delete_entries": _carried_deletes(cur, touched),
-        },
-    )
-    return new_version
+    scoped = snap_read(spark, path, base_v, partitions=sorted(touched))
+    return mor, cur, touched, scoped, F.coalesce(cond, F.lit(False))
 
 
 def snap_repartition(
@@ -1428,11 +1334,8 @@ def snap_repartition(
     z-order grid bound to the old layout is dropped from the manifest
     (box pruning is a property of the zb partitioning); bloom/check
     config carries forward and the new files are re-indexed."""
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"snap_repartition on uninitialized table {path}")
-    cur = _read_manifest(path, versions[-1])
-    df = snap_read(spark, path, versions[-1])
+    base_v, cur = _pin(path, "snap_repartition")
+    df = snap_read(spark, path, base_v)
     if new_partition_col not in df.columns:
         raise ValueError(
             f"new partition column {new_partition_col!r} not in {df.columns}"
@@ -1442,33 +1345,11 @@ def snap_repartition(
             "cannot repartition onto the bloom-indexed column — drop the "
             "index first (partition pruning would make it redundant anyway)"
         )
-    new_version = versions[-1] + 1
-    commit_rel = f"c{new_version:06d}"
-    write_clustered(
-        df,
-        os.path.join(path, commit_rel),
-        partition_by=(new_partition_col,),
-        sort_by=tuple(sort_by),
+    return _commit(
+        spark, path, cur, data=df, rewritten=None, drop=("zorder",),
+        changes={"partition_col": new_partition_col}, sort_by=sort_by,
         target_rows_per_file=target_rows_per_file,
     )
-    _attach_blooms(spark, path, commit_rel, cur)
-    _publish(
-        path,
-        {
-            **{
-                k: v
-                for k, v in cur.items()
-                if k not in ("entries", "zorder")
-            },
-            "version": new_version,
-            "partition_col": new_partition_col,
-            "entries": _commit_entries(
-                path, commit_rel, new_partition_col, cur.get("stats_col")
-            ),
-            "delete_entries": _carried_deletes(cur, None),
-        },
-    )
-    return new_version
 
 
 def snap_restore(spark: SparkSession, path: str, version: int) -> int:
@@ -1479,24 +1360,11 @@ def snap_restore(spark: SparkSession, path: str, version: int) -> int:
     itself is just one more atomic manifest CAS. The old version's
     table-level metadata (columns, z-grid, bloom/check config) comes
     back with it, so a restore also undoes a schema evolution."""
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"snap_restore on uninitialized table {path}")
-    if version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not present under {path} (have {versions})"
-        )
-    old = _read_manifest(path, version)
-    new_version = versions[-1] + 1
-    _publish(
-        path,
-        {
-            **{k: v for k, v in old.items() if k != "version"},
-            "version": new_version,
-            "restored_from": version,
-        },
+    latest, _ = _pin(path, "snap_restore")
+    _, old = _pin(path, "snap_restore", version)
+    return _commit(
+        spark, path, old, version=latest + 1, changes={"restored_from": version}
     )
-    return new_version
 
 
 def snap_clone(
@@ -1521,15 +1389,9 @@ def snap_clone(
     track cross-table references or deep-clone before source
     retention; this module documents the hazard rather than hiding it
     (pinned in tests/test_lakesnap.py)."""
-    versions = snap_versions(src)
-    if not versions:
-        raise FileNotFoundError(f"snap_clone from uninitialized table {src}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(f"version {v} not present under {src}")
+    v, m = _pin(src, "snap_clone", version)
     if snap_versions(dst):
         raise FileExistsError(f"clone target {dst} already has commits")
-    m = _read_manifest(src, v)
 
     def borrow(es):
         return [
@@ -1537,32 +1399,21 @@ def snap_clone(
             for e in es
         ]
 
-    os.makedirs(dst, exist_ok=True)
-    borrowed_seqs = [
-        int(e["seq"])
-        for e in m["entries"] + (m.get("delete_entries") or [])
-        if "seq" in e
-    ]
-    _publish(
-        dst,
-        {
-            **{k: val for k, val in m.items() if k not in ("entries", "version")},
-            "version": 1,
+    dels = m.get("delete_entries") or []
+    # pending delete files are borrowed too — the clone must see the
+    # same merged rows as the source version it forked. Sequence numbers
+    # are preserved (relative order between borrowed deletes and
+    # borrowed update images must hold) and seq_floor lifts every
+    # FUTURE clone-local commit above them (see _commit_seq).
+    seqs = [int(e["seq"]) for e in m["entries"] + dels if "seq" in e]
+    return _commit(
+        spark, dst, m, version=1, entries=borrow(m["entries"]),
+        deletes=borrow(dels), rewritten=None,
+        changes={
             "cloned_from": {"path": os.path.abspath(src), "version": v},
-            "entries": borrow(m["entries"]),
-            # pending delete files are borrowed too — the clone must see
-            # the same merged rows as the source version it forked.
-            # Sequence numbers are preserved (relative order between
-            # borrowed deletes and borrowed update images must hold)
-            # and seq_floor lifts every FUTURE clone-local commit above
-            # them (see _commit_seq).
-            "delete_entries": borrow(m.get("delete_entries") or []),
-            "seq_floor": max(
-                [int(m.get("seq_floor", 0))] + borrowed_seqs
-            ),
+            "seq_floor": max([int(m.get("seq_floor", 0))] + seqs),
         },
     )
-    return 1
 
 
 def snap_update_where(
@@ -1595,31 +1446,12 @@ def snap_update_where(
     delete files (Iceberg v2 sequence ordering — an identity update,
     SET x = x, would otherwise delete its own output). Readers merge
     exactly as for MoR deletes; compaction promotes."""
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"snap_update_where on uninitialized table {path}")
-    base_v = versions[-1]
-    cur = _read_manifest(path, base_v)
-    partition_col = cur["partition_col"]
-    if partition_col in assignments:
-        raise ValueError(
-            f"partition column {partition_col!r} is immutable; use a merge"
-        )
-    unknown = [c for c in assignments if c not in cur["columns"]]
-    if unknown:
-        raise ValueError(f"SET targets not in table schema: {unknown}")
-    cond = F.expr(predicate)
-    base = snap_read(spark, path, base_v)
-    touched = {
-        str(r[0])
-        for r in base.filter(cond).select(partition_col).distinct().collect()
-    }
-    if not touched:
+    scope = _match_scope(
+        spark, path, "snap_update_where", predicate, mode, set_cols=list(assignments)
+    )
+    if scope is None:
         return None
-    hit = F.coalesce(cond, F.lit(False))
-    scoped = snap_read(spark, path, base_v, partitions=sorted(touched))
+    mor, cur, touched, scoped, hit = scope
     changed = scoped.filter(hit).select(
         *[
             F.expr(assignments[c]).alias(c) if c in assignments else F.col(c)
@@ -1627,44 +1459,11 @@ def snap_update_where(
         ]
     )
     _enforce_check(changed, cur, "snap_update_where result")
-    if mode == "mor":
-        new_version = base_v + 1
-        seq = _commit_seq(cur, new_version)
-        old_images = scoped.filter(hit)
-        del_rel = f"c{new_version:06d}d"
-        write_clustered(
-            old_images,
-            os.path.join(path, del_rel),
-            partition_by=(partition_col,),
-            sort_by=tuple(sort_by),
-            target_rows_per_file=target_rows_per_file,
+    layout = {"sort_by": sort_by, "target_rows_per_file": target_rows_per_file}
+    if mor:
+        return _commit(
+            spark, path, cur, data=changed, old_images=scoped.filter(hit), **layout
         )
-        data_rel = f"c{new_version:06d}"
-        write_clustered(
-            changed,
-            os.path.join(path, data_rel),
-            partition_by=(partition_col,),
-            sort_by=tuple(sort_by),
-            target_rows_per_file=target_rows_per_file,
-        )
-        _attach_blooms(spark, path, data_rel, cur)
-        new_entries = [
-            {**e, "seq": seq}
-            for e in _commit_entries(
-                path, data_rel, partition_col, cur.get("stats_col")
-            )
-        ]
-        _publish(
-            path,
-            {
-                **{k: v for k, v in cur.items() if k != "entries"},
-                "version": new_version,
-                "entries": cur["entries"] + new_entries,
-                "delete_entries": (cur.get("delete_entries") or [])
-                + _delete_commit_entries(path, del_rel, partition_col, seq),
-            },
-        )
-        return new_version
     updated = scoped.select(
         *[
             F.when(hit, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
@@ -1673,30 +1472,7 @@ def snap_update_where(
             for c in cur["columns"]
         ]
     )
-    new_version = base_v + 1
-    commit_rel = f"c{new_version:06d}"
-    write_clustered(
-        updated,
-        os.path.join(path, commit_rel),
-        partition_by=(partition_col,),
-        sort_by=tuple(sort_by),
-        target_rows_per_file=target_rows_per_file,
-    )
-    carried = [e for e in cur["entries"] if str(e["partition"]) not in touched]
-    _attach_blooms(spark, path, commit_rel, cur)
-    _publish(
-        path,
-        {
-            **{k: v for k, v in cur.items() if k != "entries"},
-            "version": new_version,
-            "entries": carried
-            + _commit_entries(
-                path, commit_rel, partition_col, cur.get("stats_col")
-            ),
-            "delete_entries": _carried_deletes(cur, touched),
-        },
-    )
-    return new_version
+    return _commit(spark, path, cur, data=updated, rewritten=touched, **layout)
 
 
 # ---------------------------------------------------------------------------
@@ -1706,15 +1482,16 @@ def snap_update_where(
 # same idea as Delta's bloom-filter index / Iceberg's bloom value
 # skipping, built on operators/bloom.py's pinned hash arithmetic.
 #
-# Layout: one sidecar `_blooms.json` per COMMIT DIR (immutable, like
-# the data files it describes) mapping each data file's rel path to
-# its bitmap words. The manifest carries only the table-level config
-# (bloom_col / bloom_bits / bloom_k / bloom_type), so manifests stay
-# O(files) no matter how many bits each file's bloom holds. The build
-# is DISTRIBUTED: one Spark pass over only the new commit's files,
-# per-file numpy OR-folds (the same _fold_hashes_into the contamination
-# screen uses) tree-reduced with bit_or; the driver collects
-# O(files x words) — the sidecar it must write anyway. Probes hash the
+# Layout: one sidecar `_blooms.json` per partition dir of a commit
+# (immutable, like the data files it describes) mapping each data
+# file's basename to its bitmap words; commits written before the
+# shard have one commit-level sidecar instead. The manifest carries
+# only the table-level config (bloom_col / bloom_bits / bloom_k /
+# bloom_type), so manifests stay O(files) no matter how many bits each
+# file's bloom holds. The build is DISTRIBUTED: one Spark pass over
+# only the new commit's files, per-file numpy OR-folds (the same
+# _fold_hashes_into the contamination screen uses), streamed to the
+# driver one partition dir group at a time. Probes hash the
 # lookup values with Spark's own xxhash64 (one tiny job), so build and
 # probe arithmetic cannot drift. Files from commits written before the
 # index existed simply have no sidecar entry and are conservatively
@@ -1832,9 +1609,8 @@ _LAST_MAX_BUFFERED_BITMAPS = 0
 
 def _attach_blooms(spark: SparkSession, path: str, commit_rel: str, manifest: dict) -> None:
     """Write the commit's bloom sidecars when the table has a bloom
-    index configured (manifest carries the config forward, so every
-    commit path — init, merge, concurrent merge, compaction — indexes
-    its new files with one call).
+    index configured. Called only from :func:`_write_dir`, so every
+    commit that writes data files indexes them.
 
     SHARDED PER PARTITION DIR (round-10): one `_blooms.json` inside
     each `<commit>/<partition>=<value>/` dir, keyed by file basename.
@@ -1983,14 +1759,14 @@ def _bloom_prune(
     return kept
 
 
-def _resolve_version(path: str, version: int | None) -> int:
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(f"snapshot version {v} not found at {path}")
-    return v
+def _bloom_scope(
+    spark: SparkSession, path: str, verb: str, values: Sequence, version: int | None
+) -> tuple[int, dict, list[dict]]:
+    """(version, manifest, entries a point lookup of ``values`` opens)."""
+    v, m = _pin(path, verb, version)
+    if not m.get("bloom_col"):
+        raise ValueError(f"{path} has no bloom index configured")
+    return v, m, _bloom_prune(spark, path, m["entries"], m, values)
 
 
 def snap_point_files(
@@ -1999,11 +1775,8 @@ def snap_point_files(
     """The file list a :func:`snap_point_read` for ``values`` would
     open — the bloom-skipping contract, metadata + sidecar reads only
     (test/audit helper, twin of snap_files/snap_box_files)."""
-    v = _resolve_version(path, version)
-    m = _read_manifest(path, v)
-    if not m.get("bloom_col"):
-        raise ValueError(f"{path} has no bloom index configured")
-    return [e["path"] for e in _bloom_prune(spark, path, m["entries"], m, values)]
+    _, _, kept = _bloom_scope(spark, path, "snap_point_files", values, version)
+    return [e["path"] for e in kept]
 
 
 def snap_point_read(
@@ -2018,16 +1791,11 @@ def snap_point_read(
     opens a handful of files instead of a full partition scan, because
     a uniformly distributed key defeats min/max stats but not
     membership bitmaps."""
-    v = _resolve_version(path, version)
-    m = _read_manifest(path, v)
-    if not m.get("bloom_col"):
-        raise ValueError(f"{path} has no bloom index configured")
-    kept = _bloom_prune(spark, path, m["entries"], m, values)
-    col = m["bloom_col"]
+    v, m, kept = _bloom_scope(spark, path, "snap_point_read", values, version)
     if not kept:
         return snap_read(spark, path, v).filter(F.lit(False))
     df = _read_with_deletes(spark, path, kept, m)
-    return df.filter(F.col(col).isin(list(values)))
+    return df.filter(F.col(m["bloom_col"]).isin(list(values)))
 
 
 def snap_maintain(
@@ -2045,11 +1813,8 @@ def snap_maintain(
     commit cadence; incremental merges fragment only the partitions
     they touch, so the maintain cost tracks the write rate, not the
     table size."""
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"snap_maintain on uninitialized table {path}")
     counts: dict[str, int] = {}
-    for e in _read_manifest(path, versions[-1])["entries"]:
+    for e in _pin(path, "snap_maintain")[1]["entries"]:
         counts[str(e["partition"])] = counts.get(str(e["partition"]), 0) + 1
     frag = sorted(p for p, c in counts.items() if c > max_files_per_partition)
     if not frag:
@@ -2091,11 +1856,7 @@ def snap_sync(
     full-row comparison — the partitions rewritten are exactly those
     holding a changed, inserted, or deleted row.
     """
-    versions = snap_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"snap_sync on uninitialized table {path}")
-    cur_manifest = _read_manifest(path, versions[-1])
-    cols = list(cur_manifest["columns"])
+    cols = list(_pin(path, "snap_sync")[1]["columns"])
     if sorted(source.columns) != sorted(cols):
         raise ValueError(
             f"snap_sync source columns {sorted(source.columns)} must equal "

@@ -215,11 +215,12 @@ def pagerank(
         # lineage for deg, edeg, and every per-iteration dangling
         # anti-join. Fail fast (driver-only plan-class check, no job).
         kind = edges._jdf.queryExecution().analyzed().getClass().getSimpleName()
-        assert kind == "LogicalRDD", (
-            f"edges_materialized=True requires the checkpointed edge "
-            f"DataFrame itself (localCheckpoint result), got plan root "
-            f"{kind}"
-        )
+        if kind != "LogicalRDD":
+            raise ValueError(
+                f"edges_materialized=True requires the checkpointed edge "
+                f"DataFrame itself (localCheckpoint result), got plan root "
+                f"{kind}"
+            )
     if weight_col is None:
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         contrib_expr = "rank DIV deg"

@@ -779,6 +779,7 @@ def _ivm_lake_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         snap_update_where,
     )
     from docker_based_real_time_etl_project_spark.queries.materialize import (
+        expect_commit,
         materialize_once,
         table_fingerprint,
     )
@@ -797,7 +798,7 @@ def _ivm_lake_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             "o_orderpriority",
             sort_by=("o_orderkey",),
         )
-        assert snap_merge(
+        v = snap_merge(
             spark, o_lake,
             _merge_updates(spark, sf_dir).select(
                 "o_orderkey", "o_custkey", "o_orderpriority",
@@ -805,7 +806,8 @@ def _ivm_lake_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             ),
             key_cols=("o_orderkey",), delete_col="_delete",
             sort_by=("o_orderkey",),
-        ) == 2
+        )
+        expect_commit("q_lake_ivm_join/q_lake_ivm_minmax", v, 2)
         c_lake = tempfile.mkdtemp(prefix="ivm_customer_lake_")
         snap_init(
             spark,
@@ -816,10 +818,11 @@ def _ivm_lake_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             "c_mktsegment",
             sort_by=("c_custkey",),
         )
-        assert snap_update_where(
+        v = snap_update_where(
             spark, c_lake, _IVM_C_UPD,
             {"c_acctbal": "c_acctbal + 100.0"}, sort_by=("c_custkey",),
-        ) == 2
+        )
+        expect_commit("q_lake_ivm_join/q_lake_ivm_minmax", v, 2)
         return o_lake + "\n" + c_lake
 
     pair = materialize_once(

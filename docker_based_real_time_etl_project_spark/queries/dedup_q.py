@@ -15,6 +15,7 @@ from docker_based_real_time_etl_project_spark.operators.dedup import (
 )
 from docker_based_real_time_etl_project_spark.operators.similarity import cosine
 from docker_based_real_time_etl_project_spark.queries.materialize import (
+    expect_commit,
     materialize_once,
     table_fingerprint,
 )
@@ -957,28 +958,31 @@ def _lsh_index_snap(spark: SparkSession, sf_dir: str) -> str:
         nb = _lsh_nb(sf_dir)
         d = table(spark, sf_dir, "documents")
         rows = _lsh_band_rows(d, nb).localCheckpoint(eager=True)
-        assert snap_init(
+        v = snap_init(
             spark,
             rows.filter("doc_id % 10 != 7"),
             out,
             "bkt",
             sort_by=("band_hash", "doc_id"),
-        ) == 1
-        assert snap_merge(
+        )
+        expect_commit("q_lsh_index_persisted", v, 1)
+        v = snap_merge(
             spark,
             out,
             rows.filter("doc_id % 10 = 7"),
             key_cols=("doc_id", "band_idx"),
             mode="mor",
-        ) == 2
+        )
+        expect_commit("q_lsh_index_persisted", v, 2)
         wrong = rows.filter("doc_id % 10 = 3").withColumn(
             "_del", F.lit(True)
         )
-        assert snap_merge(
+        v = snap_merge(
             spark, out, wrong, key_cols=("doc_id", "band_idx"),
             delete_col="_del", mode="mor",
-        ) == 3
-        assert snap_restore(spark, out, 2) == 4
+        )
+        expect_commit("q_lsh_index_persisted", v, 3)
+        expect_commit("q_lsh_index_persisted", snap_restore(spark, out, 2), 4)
         return out
 
     return materialize_once(

@@ -85,6 +85,17 @@ def buckets_for(n_rows: int, rows_per_bucket: int, floor: int) -> int:
     return max(floor, nb)
 
 
+def expect_commit(query: str, got, want) -> None:
+    """Fail a lake build whose write verb returned ``got`` instead of
+    ``want`` (the committed version, or None for no commit). Builds
+    call their verbs outside any ``assert``, so ``python -O`` still
+    writes the lake; this is the check that stays."""
+    if got != want:
+        raise RuntimeError(
+            f"{query}: lake build committed {got!r}, expected {want!r}"
+        )
+
+
 def materialize_once(key: tuple, build: Callable[[], str]) -> str:
     """``build() -> dir`` runs once per key; the dir is cached for the
     session and cleaned up at exit."""

@@ -318,6 +318,7 @@ def _ivf_index_snap(spark: SparkSession, sf_dir: str) -> str:
         nearest_centroids,
     )
     from docker_based_real_time_etl_project_spark.queries.materialize import (
+        expect_commit,
         materialize_once,
         table_fingerprint,
     )
@@ -334,20 +335,27 @@ def _ivf_index_snap(spark: SparkSession, sf_dir: str) -> str:
             F.col("embedding").cast("array<double>").alias("embedding"),
             nearest_centroids(F.col("embedding"), centroids, 1)[0].alias("_cell"),
         )
-        assert snap_init(
+        v = snap_init(
             spark, assignments, out, "_cell", sort_by=("vec_id",),
             meta={"ivf_centroids": centroids, "ivf_dim": len(centroids[0])},
-        ) == 1
+        )
+        expect_commit("q_ann_ivf_persisted", v, 1)
         # v2: maintenance batch tombstones a vector slice (MoR: the
         # delete files are the only bytes written)
-        assert snap_delete_where(
-            spark, out, "vec_id % 10 = 3", mode="mor"
-        ) == 2
+        v = snap_delete_where(spark, out, "vec_id % 10 = 3", mode="mor")
+        expect_commit("q_ann_ivf_persisted", v, 2)
         n_after = snap_read(spark, out).count()
-        assert n_after < n_full
+        if not n_after < n_full:
+            raise RuntimeError(
+                f"q_ann_ivf_persisted: MoR delete left {n_after} of {n_full} rows"
+            )
         # v3: the batch was wrong — roll the index back, zero data I/O
-        assert snap_restore(spark, out, 1) == 3
-        assert snap_read(spark, out).count() == n_full
+        expect_commit("q_ann_ivf_persisted", snap_restore(spark, out, 1), 3)
+        n_restored = snap_read(spark, out).count()
+        if n_restored != n_full:
+            raise RuntimeError(
+                f"q_ann_ivf_persisted: restore read {n_restored} rows, not {n_full}"
+            )
         return out
 
     return materialize_once(

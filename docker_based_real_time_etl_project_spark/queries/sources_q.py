@@ -867,6 +867,7 @@ def _orders_snap_cas(spark: SparkSession, sf_dir: str) -> str:
         snap_versions,
     )
     from docker_based_real_time_etl_project_spark.queries.materialize import (
+        expect_commit,
         materialize_once,
         table_fingerprint,
     )
@@ -909,7 +910,8 @@ def _orders_snap_cas(spark: SparkSession, sf_dir: str) -> str:
             delete_col="_delete", sort_by=("o_orderkey",),
             writer_id="a", _before_publish=commit_b,
         )
-        assert v == 3 and snap_versions(out) == [1, 2, 3]
+        expect_commit("q_lake_concurrent_merge", v, 3)
+        expect_commit("q_lake_concurrent_merge", snap_versions(out), [1, 2, 3])
         return out
 
     return materialize_once(
@@ -1861,6 +1863,7 @@ def _sync_lake(spark: SparkSession, sf_dir: str) -> str:
         snap_update_where,
     )
     from docker_based_real_time_etl_project_spark.queries.materialize import (
+        expect_commit,
         materialize_once,
         table_fingerprint,
     )
@@ -1873,18 +1876,17 @@ def _sync_lake(spark: SparkSession, sf_dir: str) -> str:
             "o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"
         )
         snap_init(spark, src, lake, "o_orderpriority", sort_by=("o_orderkey",))
-        assert snap_update_where(
+        v = snap_update_where(
             spark, lake, "o_orderpriority = '1-URGENT'",
             {"o_totalprice": "o_totalprice + 1000.0"},
             sort_by=("o_orderkey",),
-        ) == 2
-        assert snap_sync(
-            spark, lake, src, key_cols=("o_orderkey",), sort_by=("o_orderkey",)
-        ) == 3
-        # already-synced: the verb must publish NOTHING
-        assert snap_sync(
-            spark, lake, src, key_cols=("o_orderkey",), sort_by=("o_orderkey",)
-        ) is None
+        )
+        expect_commit("q_lake_sync", v, 2)
+        for want in (3, None):  # already synced: the verb publishes NOTHING
+            v = snap_sync(
+                spark, lake, src, key_cols=("o_orderkey",), sort_by=("o_orderkey",)
+            )
+            expect_commit("q_lake_sync", v, want)
         return lake
 
     return materialize_once(

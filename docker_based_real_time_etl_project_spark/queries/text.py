@@ -515,6 +515,7 @@ def _bm25_index_snap(spark: SparkSession, sf_dir: str) -> str:
         snap_restore,
     )
     from docker_based_real_time_etl_project_spark.queries.materialize import (
+        expect_commit,
         materialize_once,
         table_fingerprint,
     )
@@ -542,26 +543,28 @@ def _bm25_index_snap(spark: SparkSession, sf_dir: str) -> str:
                 "bm25_tot_dl": int(row["t"] or 0),
             }
 
-        assert snap_init(
+        v = snap_init(
             spark,
             post.filter("doc_id % 10 != 7"),
             out,
             "bucket",
             sort_by=("word", "doc_id"),
             meta={**stats("doc_id % 10 != 7"), "bm25_nb": nb},
-        ) == 1
-        assert snap_merge(
+        )
+        expect_commit("q_bm25_index_persisted", v, 1)
+        v = snap_merge(
             spark,
             out,
             post.filter("doc_id % 10 = 7"),
             key_cols=("word", "doc_id"),
             mode="mor",
             meta={**stats(None), "bm25_nb": nb},
-        ) == 2
+        )
+        expect_commit("q_bm25_index_persisted", v, 2)
         wrong = post.filter("doc_id % 10 = 3").withColumn(
             "_del", F.lit(True)
         )
-        assert snap_merge(
+        v = snap_merge(
             spark,
             out,
             wrong,
@@ -569,8 +572,9 @@ def _bm25_index_snap(spark: SparkSession, sf_dir: str) -> str:
             delete_col="_del",
             mode="mor",
             meta={**stats("doc_id % 10 != 3"), "bm25_nb": nb},
-        ) == 3
-        assert snap_restore(spark, out, 2) == 4
+        )
+        expect_commit("q_bm25_index_persisted", v, 3)
+        expect_commit("q_bm25_index_persisted", snap_restore(spark, out, 2), 4)
         return out
 
     return materialize_once(

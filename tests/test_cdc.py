@@ -254,7 +254,7 @@ def test_cdc_snap_restart_no_double_commit(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), "stream did not drain"
 
     run_once()
     mid_versions = snap_versions(lake)
@@ -326,7 +326,7 @@ def test_cdc_snap_sink_maintains_bloom_index(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(600)
+    assert q.awaitTermination(600), "stream did not drain"
     versions = snap_versions(lake)
     assert len(versions) >= 3
     # every commit dir that exists has its sidecar

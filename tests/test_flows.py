@@ -106,7 +106,7 @@ def test_streaming_source_advances_polls(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not drain"
     got = spark.table(name)
     # one poll cycle: 5 endpoint rows for the symbol
     assert got.count() == 5

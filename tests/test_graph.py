@@ -113,7 +113,7 @@ def test_pagerank_materialized_flag_rejects_lazy_edges(spark):
         F.col("id").alias("src"), ((F.col("id") + 1) % 10).alias("dst")
     )
     nodes = spark.range(10).select(F.col("id").alias("node"))
-    with pytest.raises(AssertionError, match="edges_materialized"):
+    with pytest.raises(ValueError, match="edges_materialized"):
         pagerank(nodes, edges, iters=1, edges_materialized=True)
     # the checkpointed form passes the gate and converges
     out = pagerank(

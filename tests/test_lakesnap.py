@@ -766,15 +766,24 @@ def test_bloom_point_lookup_prunes_files_and_matches(spark):
 
 
 def test_bloom_sidecar_written_by_every_commit_path(spark):
-    """Compaction and concurrent merges index their new files too (the
-    manifest carries the config), and vacuum reclaims sidecars of
-    expired commits."""
+    """Every commit that writes data files indexes them (the manifest
+    carries the bloom config) and records their footer stats, and
+    vacuum reclaims sidecars of expired commits. After each verb the
+    new data entries have sidecar bitmaps and ``stats``, and a bloom
+    point read equals the filtered full read."""
+    import json
+
     from docker_based_real_time_etl_project_spark.lakesnap import (
         _bloom_sidecar_files,
+        _read_manifest,
         snap_compact,
+        snap_compact_partitions,
+        snap_delete_where,
         snap_merge_concurrent,
         snap_point_files,
         snap_point_read,
+        snap_repartition,
+        snap_update_where,
     )
 
     path = tempfile.mkdtemp(prefix="snapbloomc_")
@@ -782,8 +791,30 @@ def test_bloom_sidecar_written_by_every_commit_path(spark):
     snap_init(
         spark, orders, path, "o_orderpriority",
         sort_by=("o_orderkey",), target_rows_per_file=200,
-        bloom_col="o_orderkey", bloom_bits=8192,
+        stats_col="o_totalprice", bloom_col="o_orderkey", bloom_bits=8192,
     )
+    # probe keys hit by every verb below (the %7/%11/%13/%17 slices)
+    keys = [
+        r[0]
+        for r in orders.filter(
+            (F.col("o_orderkey") % 7 == 0) | (F.col("o_orderkey") % 11 == 0)
+            | (F.col("o_orderkey") % 13 == 1) | (F.col("o_orderkey") % 17 == 0)
+        ).orderBy("o_orderkey").limit(12).collect()
+    ] + [r[0] for r in orders.select("o_orderkey").limit(2).collect()]
+
+    def check_commit(v):
+        prev = {e["path"] for e in _read_manifest(path, v - 1)["entries"]}
+        new = [e for e in _read_manifest(path, v)["entries"] if e["path"] not in prev]
+        assert new, v
+        for e in new:
+            assert "stats" in e, (v, e)
+            side = os.path.join(path, os.path.dirname(e["path"]), "_blooms.json")
+            with open(side) as fh:
+                assert os.path.basename(e["path"]) in json.load(fh), (v, e)
+        got = snap_point_read(spark, path, keys)
+        want = snap_read(spark, path).filter(F.col("o_orderkey").isin(keys))
+        assert sorted(got.collect()) == sorted(want.collect()), v
+
     upd = (
         orders.filter(F.col("o_orderkey") % 13 == 1)
         .withColumn("o_totalprice", F.col("o_totalprice") + 1.0)
@@ -794,22 +825,43 @@ def test_bloom_sidecar_written_by_every_commit_path(spark):
     )
     assert v2 == 2
     assert _bloom_sidecar_files(path, "c000002ww1a0")
+    check_commit(v2)
     v3 = snap_compact(spark, path, target_rows_per_file=5000)
     assert _bloom_sidecar_files(path, f"c{v3:06d}")
-    keys = [r[0] for r in orders.select("o_orderkey").limit(2).collect()]
-    got = snap_point_read(spark, path, keys)
-    want = snap_read(spark, path).filter(F.col("o_orderkey").isin(keys))
-    assert sorted(got.collect()) == sorted(want.collect())
+    check_commit(v3)
     # post-compaction files are few and indexed: lookup opens a subset
-    assert len(snap_point_files(spark, path, keys)) <= len(
-        snap_point_files(spark, path, keys + [1, 2, 3, 4, 5, 6])
+    assert len(snap_point_files(spark, path, keys[:2])) <= len(
+        snap_point_files(spark, path, keys[:2] + [1, 2, 3, 4, 5, 6])
     )
     # vacuum past versions: expired commits' sidecars go with them
     snap_vacuum(path, keep_last=1, min_age_sec=0.0)
     assert not _bloom_sidecar_files(path, "c000001")
     assert _bloom_sidecar_files(path, f"c{v3:06d}")
     got2 = snap_point_read(spark, path, keys)
-    assert sorted(got2.collect()) == sorted(want.collect())
+    want2 = snap_read(spark, path).filter(F.col("o_orderkey").isin(keys))
+    assert sorted(got2.collect()) == sorted(want2.collect())
+
+    # every other data-writing verb, once each
+    for mode, m in (("cow", 7), ("mor", 11)):
+        batch = orders.filter(F.col("o_orderkey") % m == 0).withColumn(
+            "o_totalprice", F.col("o_totalprice") + 2.0
+        )
+        check_commit(snap_merge(
+            spark, path, batch, key_cols=("o_orderkey",),
+            target_rows_per_file=200, mode=mode,
+        ))
+    check_commit(snap_compact_partitions(
+        spark, path, ["1-URGENT", "2-HIGH"], target_rows_per_file=300
+    ))
+    check_commit(snap_delete_where(spark, path, "o_orderkey % 17 = 0"))
+    for mode, m in (("cow", 3), ("mor", 5)):
+        check_commit(snap_update_where(
+            spark, path, f"o_orderkey % {m} = 1",
+            {"o_totalprice": "o_totalprice + 3.0"}, mode=mode,
+        ))
+    check_commit(snap_repartition(
+        spark, path, "o_orderstatus", target_rows_per_file=400
+    ))
 
 
 def test_delete_where_rewrites_only_touched_partitions(spark):
@@ -1971,3 +2023,24 @@ def test_snap_sync_mor_reads_through_debris(spark):
     # idempotence holds through the debris
     assert snap_sync(spark, path, src, key_cols=("o_orderkey",),
                      mode="mor") is None
+
+
+def test_no_lake_call_inside_assert():
+    """``python -O`` strips ``assert`` statements, so a ``snap_*`` call
+    inside one never runs there and the lake or index it builds is
+    silently left unwritten. Package code calls the verb, then checks."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "docker_based_real_time_etl_project_spark"
+    bad = []
+    for f in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text(), str(f))):
+            if not isinstance(node, ast.Assert):
+                continue
+            for call in ast.walk(node):
+                fn = getattr(call, "func", None)
+                name = getattr(fn, "id", None) or getattr(fn, "attr", "")
+                if isinstance(call, ast.Call) and name.startswith("snap_"):
+                    bad.append(f"{f.relative_to(pkg)}:{node.lineno} {name}")
+    assert not bad, bad

@@ -62,7 +62,7 @@ def test_jdbc_append_via_streaming_foreachbatch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not drain"
     assert _read(spark, "stream_sink").count() == 100
 
 

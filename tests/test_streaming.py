@@ -83,7 +83,7 @@ def test_checkpoint_restart_exactly_once(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), "stream did not drain"
 
     run_once()
     first = spark.read.parquet(sink).count()
@@ -183,8 +183,8 @@ def test_concurrent_streaming_queries(spark, sf_dir):
         .option("checkpointLocation", tempfile.mkdtemp(prefix="c2_")).start()
     )
     # both run at once; both must finish
-    q1.awaitTermination(300)
-    q2.awaitTermination(300)
+    assert q1.awaitTermination(300), "stream did not drain"
+    assert q2.awaitTermination(300), "stream did not drain"
     total = load_table(spark, sf_dir, "events").count()
     assert spark.table(names[1]).count() == total
     assert spark.table(names[0]).count() > 0
@@ -699,7 +699,7 @@ def test_stream_topk_state_survives_checkpoint_restart(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), "stream did not drain"
 
     run_once()
     tmp2 = tempfile.mkdtemp(prefix="topk_more_")
@@ -831,7 +831,7 @@ def test_reorder_buffer_restart_from_checkpoint(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), "stream did not drain"
 
     run_once()
     partial = spark.read.parquet(sink).agg(F.sum("n_events")).first()[0]
@@ -897,7 +897,7 @@ def test_rv_reorder_buffer_restart_from_checkpoint(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), "stream did not drain"
 
     run_once()
     partial = spark.read.parquet(sink).agg(F.sum("n")).first()[0]
