@@ -25,7 +25,9 @@ that core:
 Scale: a manifest row is a file path + partition value, i.e. the
 manifest is O(files), the same metadata a table format keeps; reads
 open only manifest-named files (no listStatus storm on 36k-partition
-tables); merges read only touched-partition files. The snapshot swap
+tables) with the schema the manifest records (``schema_json``), so a
+read starts no schema-inference job and the partition column keeps
+its written type; merges read only touched-partition files. The snapshot swap
 is a one-file CAS publish (exclusive create), so readers resolve a
 manifest once and see a consistent version regardless of concurrent
 merges. Multi-writer coordination is first-class:
@@ -67,8 +69,9 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from docker_based_real_time_etl_project_spark.lakewrite import write_clustered
+from docker_based_real_time_etl_project_spark.lakewrite import persisted, write_clustered
 
 _MANIFEST_DIR = "_manifests"
 
@@ -82,8 +85,6 @@ def _empty_version(spark: SparkSession, path: str, v: int, m: dict) -> DataFrame
     as an empty DataFrame with the manifest-recorded schema, in the
     recorded column order — so downstream merges/updates/reads keep
     working against an empty table instead of a bricked one."""
-    from pyspark.sql import types as T
-
     sj = m.get("schema_json")
     if sj is None:  # pre-schema-recording manifest: the old contract
         raise ValueError(f"version {v} of {path} is empty — no schema to serve")
@@ -297,8 +298,8 @@ def snap_init(
         if bloom_col == partition_col:
             raise ValueError(
                 "bloom_col must not be the partition column: the manifest "
-                "already prunes partitions exactly, and partition-dir type "
-                "inference would desync the build hash from the probe hash"
+                "already prunes partitions exactly, so a bloom on it could "
+                "never skip a file the manifest keeps"
             )
         if bloom_col not in df.columns:
             raise ValueError(f"bloom_col {bloom_col!r} not in {df.columns}")
@@ -337,8 +338,11 @@ def snap_read(
     """Read a snapshot version (default: latest). ``partitions``
     prunes to named partition values USING ONLY THE MANIFEST — no
     directory listing, no footer reads for pruned files. Files are
-    grouped per commit dir so partition-dir inference (basePath) can
-    re-attach the partition column; commits' scans are unioned by
+    read with the version's recorded schema (``schema_json``), so no
+    schema-inference job runs and every column, the partition column
+    included, reads back with the type it was written with; files are
+    grouped per commit dir so the partition column is re-attached from
+    the directory names (basePath), and commits' scans are unioned by
     name. An EMPTY version (e.g. a DELETE that matched every row)
     reads as an empty DataFrame with the manifest-recorded schema —
     the table stays fully usable, it just has no rows."""
@@ -385,9 +389,17 @@ def _read_entry_files(
     spark: SparkSession, path: str, entries: list[dict], manifest: dict
 ) -> DataFrame:
     """Manifest entries -> DataFrame: files grouped per commit dir so
-    partition-dir inference (basePath) re-attaches the partition
-    column; commits' scans are unioned by name with additive-schema
-    back-fill. Shared by snap_read and the bloom point-read path.
+    the partition column is re-attached from the directory names
+    (basePath); commits' scans are unioned by name. Shared by
+    snap_read and the bloom point-read path.
+
+    The reader takes the manifest's recorded schema: no inference job
+    per commit dir, the partition column gets its written type instead
+    of one guessed from directory names (``"007"`` stays a string, a
+    bigint stays a bigint), and files written before an additive
+    evolution read the new columns as NULL. A manifest without
+    ``schema_json`` (written before schemas were recorded) falls back
+    to inference and the by-name NULL back-fill.
 
     The commit root is derived STRUCTURALLY (two levels above the data
     file: <commit>/<partition>=<value>/file.parquet), not from the
@@ -397,10 +409,14 @@ def _read_entry_files(
     for e in entries:
         full = os.path.join(path, e["path"])
         by_commit.setdefault(_entry_commit_root(path, e["path"]), []).append(full)
-    parts = [
-        spark.read.option("basePath", commit).parquet(*files)
-        for commit, files in sorted(by_commit.items())
-    ]
+    sj = manifest.get("schema_json")
+    schema = None if sj is None else T.StructType.fromJson(json.loads(sj))
+    parts = []
+    for commit, files in sorted(by_commit.items()):
+        reader = spark.read.option("basePath", commit)
+        if schema is not None:
+            reader = reader.schema(schema)
+        parts.append(reader.parquet(*files))
     out = parts[0]
     for p in parts[1:]:
         # commits written before a column was added surface NULL for it
@@ -686,26 +702,31 @@ def snap_merge(
     only their old image; inserts only their new row. Readers merge
     exactly as for MoR deletes/updates; snap_compact promotes. This is
     what a high-rate CDC apply wants: per-batch write cost tracks the
-    changelog, not the partitions it touches."""
+    changelog, not the partitions it touches.
+
+    ``updates`` is evaluated once: the touched-partition collect, the
+    CHECK enforcement and the clustered write all read one cached copy,
+    released before the call returns."""
     mor = _is_mor(mode)
     base_v, cur = _pin(path, "snap_merge")
-    matched, incoming, merged, touched = _plan_merge(
-        spark, path, base_v, cur, updates, key_cols, delete_col, "snap_merge",
-        "left_semi" if mor else "left_anti",
-    )
-    return _commit(
-        spark, path, cur,
-        data=incoming if mor else merged,
-        old_images=matched if mor else None,
-        rewritten=frozenset() if mor else touched,
-        changes={
-            **(meta or {}),
-            "columns": list(merged.columns),
-            "schema_json": merged.schema.json(),
-        },
-        sort_by=sort_by,
-        target_rows_per_file=target_rows_per_file,
-    )
+    with persisted(updates):
+        matched, incoming, merged, touched = _plan_merge(
+            spark, path, base_v, cur, updates, key_cols, delete_col, "snap_merge",
+            "left_semi" if mor else "left_anti",
+        )
+        return _commit(
+            spark, path, cur,
+            data=incoming if mor else merged,
+            old_images=matched if mor else None,
+            rewritten=frozenset() if mor else touched,
+            changes={
+                **(meta or {}),
+                "columns": list(merged.columns),
+                "schema_json": merged.schema.json(),
+            },
+            sort_by=sort_by,
+            target_rows_per_file=target_rows_per_file,
+        )
 
 
 def _plan_merge(
@@ -732,8 +753,11 @@ def _plan_merge(
     must carry every base column (full-row upserts — a missing base
     column is an error, not an implicit null overwrite) and may carry
     NEW columns; surviving base rows take NULL for those, the same
-    back-fill untouched partitions' old files get at read time. The
-    incoming rows must pass the base's CHECK constraint."""
+    back-fill untouched partitions' old files get at read time. Values
+    of existing columns take the table's recorded types (store
+    assignment, as in SQL MERGE), so the recorded schema stays the one
+    every file of the table reads back under. The incoming rows must
+    pass the base's CHECK constraint."""
     _enforce_check(
         updates if delete_col is None else updates.filter(~F.col(delete_col)),
         cur,
@@ -762,8 +786,16 @@ def _plan_merge(
         how=how,
     )
     incoming = updates
+    types = dict(base.dtypes)
+    if any(c in types and t != types[c] for c, t in updates.dtypes):
+        incoming = updates.select(
+            *[
+                F.col(c).cast(types[c]).alias(c) if c in types else F.col(c)
+                for c in updates.columns
+            ]
+        )
     if delete_col is not None:
-        incoming = updates.filter(~F.col(delete_col)).drop(delete_col)
+        incoming = incoming.filter(~F.col(delete_col)).drop(delete_col)
     merged = matched.unionByName(incoming, allowMissingColumns=True)
     return matched, incoming, merged, touched
 
@@ -863,58 +895,59 @@ def snap_merge_concurrent(
     import uuid
 
     token = writer_id or uuid.uuid4().hex[:8]
-    for attempt in range(max_attempts):
-        # the CHECK constraint is enforced per attempt, against the
-        # pinned base: a re-execution after a metadata conflict honors
-        # a constraint the intervening commit may have introduced
-        base_v, cur = _pin(path, "snap_merge_concurrent")
-        _, _, merged, touched = _plan_merge(
-            spark, path, base_v, cur, updates, key_cols, delete_col,
-            "snap_merge_concurrent",
-        )
-        commit_rel = f"c{base_v + 1:06d}w{token}a{attempt}"
-        new_entries = _write_dir(
-            spark, path, cur, merged, commit_rel, sort_by=sort_by,
-            target_rows_per_file=target_rows_per_file,
-        )
-        if _before_publish is not None:
-            hook, _before_publish = _before_publish, None
-            hook()
-        changes = {"columns": list(merged.columns), "schema_json": merged.schema.json()}
-        # CAS loop: rebase over disjoint commits without rewriting data.
-        # Entries and deletes carry from the rebase base; its table-level
-        # keys equal the pinned base's, or the rebase is a conflict.
-        rebase_m, target_v = cur, base_v + 1
-        while not _try_publish(
-            path, _next_manifest(rebase_m, target_v, new_entries, touched, changes=changes)
-        ):
-            latest_v, latest_m = _pin(path, "snap_merge_concurrent")
-            footprints = (
-                _touched_partitions(path, v) for v in range(target_v, latest_v + 1)
+    with persisted(updates):
+        for attempt in range(max_attempts):
+            # the CHECK constraint is enforced per attempt, against the
+            # pinned base: a re-execution after a metadata conflict honors
+            # a constraint the intervening commit may have introduced
+            base_v, cur = _pin(path, "snap_merge_concurrent")
+            _, _, merged, touched = _plan_merge(
+                spark, path, base_v, cur, updates, key_cols, delete_col,
+                "snap_merge_concurrent",
             )
-            # Metadata changes are commit conflicts too (Delta/Iceberg
-            # semantics): a rebase republishes the BASE manifest's
-            # table-level metadata, so an intervening commit that
-            # evolved the schema, altered the CHECK constraint, or
-            # retuned bloom/zorder/partition config would be silently
-            # reverted — e.g. an additively-added column's data would
-            # vanish from reads even though its files are carried.
-            # Re-execute against the new base instead, which picks the
-            # evolved metadata up through _plan_merge/snap_read.
-            if any(tp is None or tp & touched for tp in footprints) or (
-                _manifest_meta_fp(cur) != _manifest_meta_fp(latest_m)
+            commit_rel = f"c{base_v + 1:06d}w{token}a{attempt}"
+            new_entries = _write_dir(
+                spark, path, cur, merged, commit_rel, sort_by=sort_by,
+                target_rows_per_file=target_rows_per_file,
+            )
+            if _before_publish is not None:
+                hook, _before_publish = _before_publish, None
+                hook()
+            changes = {"columns": list(merged.columns), "schema_json": merged.schema.json()}
+            # CAS loop: rebase over disjoint commits without rewriting data.
+            # Entries and deletes carry from the rebase base; its table-level
+            # keys equal the pinned base's, or the rebase is a conflict.
+            rebase_m, target_v = cur, base_v + 1
+            while not _try_publish(
+                path, _next_manifest(rebase_m, target_v, new_entries, touched, changes=changes)
             ):
-                # our merged files (or carried metadata) no longer
-                # reflect the new base — first committer wins, we redo
-                shutil.rmtree(os.path.join(path, commit_rel), ignore_errors=True)
-                break
-            rebase_m, target_v = latest_m, latest_v + 1
-        else:
-            return target_v
-    raise SnapshotConflictError(
-        f"merge on {path} lost {max_attempts} optimistic attempts — "
-        "contention too high for optimistic concurrency"
-    )
+                latest_v, latest_m = _pin(path, "snap_merge_concurrent")
+                footprints = (
+                    _touched_partitions(path, v) for v in range(target_v, latest_v + 1)
+                )
+                # Metadata changes are commit conflicts too (Delta/Iceberg
+                # semantics): a rebase republishes the BASE manifest's
+                # table-level metadata, so an intervening commit that
+                # evolved the schema, altered the CHECK constraint, or
+                # retuned bloom/zorder/partition config would be silently
+                # reverted — e.g. an additively-added column's data would
+                # vanish from reads even though its files are carried.
+                # Re-execute against the new base instead, which picks the
+                # evolved metadata up through _plan_merge/snap_read.
+                if any(tp is None or tp & touched for tp in footprints) or (
+                    _manifest_meta_fp(cur) != _manifest_meta_fp(latest_m)
+                ):
+                    # our merged files (or carried metadata) no longer
+                    # reflect the new base — first committer wins, we redo
+                    shutil.rmtree(os.path.join(path, commit_rel), ignore_errors=True)
+                    break
+                rebase_m, target_v = latest_m, latest_v + 1
+            else:
+                return target_v
+        raise SnapshotConflictError(
+            f"merge on {path} lost {max_attempts} optimistic attempts — "
+            "contention too high for optimistic concurrency"
+        )
 
 
 def snap_diff(
@@ -1429,8 +1462,9 @@ def snap_update_where(
     (MERGE/upsert + tombstones) and :func:`snap_delete_where` this
     completes the DML verb set. ``assignments`` maps column -> SQL
     expression, evaluated against the pre-update row (standard UPDATE
-    semantics: all SET expressions see the old values). Rows where
-    ``predicate`` is NULL are not updated (ANSI). The partition column
+    semantics: all SET expressions see the old values); each value is
+    cast to its column's recorded type. Rows where ``predicate`` is
+    NULL are not updated (ANSI). The partition column
     is immutable, as everywhere in this lake (an update that moves
     rows across partitions is a delete + insert — do it as a merge).
     Returns None when nothing matched.
@@ -1452,9 +1486,15 @@ def snap_update_where(
     if scope is None:
         return None
     mor, cur, touched, scoped, hit = scope
+    types = dict(scoped.dtypes)
+
+    def assigned(c: str) -> "F.Column":
+        # store assignment: the column keeps its recorded type
+        return F.expr(assignments[c]).cast(types[c])
+
     changed = scoped.filter(hit).select(
         *[
-            F.expr(assignments[c]).alias(c) if c in assignments else F.col(c)
+            assigned(c).alias(c) if c in assignments else F.col(c)
             for c in cur["columns"]
         ]
     )
@@ -1466,7 +1506,7 @@ def snap_update_where(
         )
     updated = scoped.select(
         *[
-            F.when(hit, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
+            F.when(hit, assigned(c)).otherwise(F.col(c)).alias(c)
             if c in assignments
             else F.col(c)
             for c in cur["columns"]
@@ -1908,19 +1948,19 @@ def snap_sync(
         on=[F.col(f"_t.{k}").eqNullSafe(F.col(f"_s.{k}")) for k in key_cols],
         how="left_anti",
     )
-    # Materialize the diff ONCE: isEmpty() runs both table-wide diff
-    # joins, and without this the merge would recompute the whole
+    # Hold the diff for the call: isEmpty() runs both table-wide diff
+    # joins, and without the cache the merge would recompute the whole
     # lineage from scratch — at 100 TB the sync's dominant cost paid
-    # twice. The checkpoint holds O(actual differences), not O(table).
-    batch = (
-        changed.withColumn("_sync_delete", F.lit(False))
-        .unionByName(gone.withColumn("_sync_delete", F.lit(True)))
-        .localCheckpoint(eager=True)
+    # twice. The cache holds O(actual differences), not O(table), and
+    # is released once the commit is published.
+    batch = changed.withColumn("_sync_delete", F.lit(False)).unionByName(
+        gone.withColumn("_sync_delete", F.lit(True))
     )
-    if batch.isEmpty():
-        return None
-    return snap_merge(
-        spark, path, batch, key_cols=key_cols, delete_col="_sync_delete",
-        sort_by=sort_by, target_rows_per_file=target_rows_per_file,
-        meta=meta, mode=mode,
-    )
+    with persisted(batch):
+        if batch.isEmpty():
+            return None
+        return snap_merge(
+            spark, path, batch, key_cols=key_cols, delete_col="_sync_delete",
+            sort_by=sort_by, target_rows_per_file=target_rows_per_file,
+            meta=meta, mode=mode,
+        )

@@ -43,10 +43,31 @@ import math
 import os
 import shutil
 import uuid
-from collections.abc import Mapping, Sequence
+from collections.abc import Iterator, Mapping, Sequence
+from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` cached for the duration of the block and released on
+    exit, so the several actions a write runs over one input (a
+    partition collect, a range sample, the write itself) evaluate its
+    plan once — Spark's guidance for a ``foreachBatch`` sink that acts
+    on a batch more than once. Releasing on exit keeps a long-running
+    stream from piling up cached blocks. A DataFrame the caller already
+    cached is used as it is and stays cached."""
+    if df.storageLevel != StorageLevel.NONE:
+        yield df
+        return
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def write_clustered(
@@ -236,8 +257,7 @@ def merge_upsert(
     # from the output, so the emptied dir would keep its pre-merge
     # files and a post-write listing could not tell it apart. One
     # persist bounds the cost to the touched-partition footprint.
-    merged = merged.persist()
-    try:
+    with persisted(merged):
         out_parts = {r[0] for r in merged.select(partition_col).distinct().collect()}
         conf = spark.conf
         key = "spark.sql.sources.partitionOverwriteMode"
@@ -253,8 +273,6 @@ def merge_upsert(
                 conf.unset(key)
             else:
                 conf.set(key, prev)
-    finally:
-        merged.unpersist()
     emptied = {str(v) for v in touched if v not in out_parts}
     if emptied:
         from urllib.parse import unquote

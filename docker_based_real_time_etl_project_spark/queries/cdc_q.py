@@ -223,6 +223,38 @@ def _bucket_deltas(ch: DataFrame) -> DataFrame:
     return ch.select((key % 10).alias("bucket"), delta.alias("delta"), dn.alias("dn"))
 
 
+def _latest_image(rows: DataFrame) -> DataFrame:
+    """The winning image per (user_id, bucket) by the Debezium total
+    order (ts_ms, lsn): max_by over the row struct, flattened back."""
+    return rows.groupBy("user_id", "bucket").agg(
+        F.max_by(
+            F.struct("value", "ts_ms", "lsn", "deleted"),
+            F.struct(F.col("ts_ms"), F.col("lsn")),
+        ).alias("_w")
+    ).select(
+        "user_id", "bucket",
+        F.col("_w.value").alias("value"),
+        F.col("_w.ts_ms").alias("ts_ms"),
+        F.col("_w.lsn").alias("lsn"),
+        F.col("_w.deleted").alias("deleted"),
+    )
+
+
+def _change_rows(batch_df: DataFrame) -> DataFrame:
+    """Decoded envelopes -> (user_id, bucket, value, ts_ms, lsn,
+    deleted) rows; the bucket pmod(user_id, 8) is derived from the key,
+    so the immutable-partition-key contract holds by construction."""
+    return (
+        batch_df.withColumn("bucket", F.pmod(F.col("user_id"), F.lit(8)))
+        .withColumn("deleted", F.col("_op") == "d")
+        .select(
+            "user_id", "bucket", "value",
+            F.col("_ts_ms").alias("ts_ms"), F.col("_lsn").alias("lsn"),
+            "deleted",
+        )
+    )
+
+
 # One changelog-slicing pass per sf_dir per session (the input is
 # immutable), mirroring streaming_q._SLICE_CACHE.
 _CDC_SLICE_CACHE: dict[str, str] = {}
@@ -353,30 +385,11 @@ def q_stream_cdc_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
-        rows = (
-            batch_df.withColumn("bucket", F.pmod(F.col("user_id"), F.lit(8)))
-            .withColumn("deleted", F.col("_op") == "d")
-            .select(
-                "user_id", "bucket", "value",
-                F.col("_ts_ms").alias("ts_ms"), F.col("_lsn").alias("lsn"),
-                "deleted",
-            )
-        )
         # latest image per key WITHIN the batch (max_by over the
         # Debezium total order), then resolve against the lake's
         # current row for the key — read-modify-write on touched
         # partitions only
-        order = F.struct(F.col("ts_ms"), F.col("lsn"))
-        batch_latest = rows.groupBy("user_id", "bucket").agg(
-            F.max_by(F.struct("value", "ts_ms", "lsn", "deleted"), order).alias("_w")
-        ).select(
-            "user_id",
-            "bucket",
-            F.col("_w.value").alias("value"),
-            F.col("_w.ts_ms").alias("ts_ms"),
-            F.col("_w.lsn").alias("lsn"),
-            F.col("_w.deleted").alias("deleted"),
-        )
+        batch_latest = _latest_image(_change_rows(batch_df))
         from docker_based_real_time_etl_project_spark.lakewrite import (
             _leaf_parquet_files,
         )
@@ -392,23 +405,7 @@ def q_stream_cdc_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "left_semi",
                 )
             )
-            winners = (
-                cur.unionByName(batch_latest)
-                .groupBy("user_id", "bucket")
-                .agg(
-                    F.max_by(
-                        F.struct("value", "ts_ms", "lsn", "deleted"),
-                        F.struct(F.col("ts_ms"), F.col("lsn")),
-                    ).alias("_w")
-                )
-                .select(
-                    "user_id", "bucket",
-                    F.col("_w.value").alias("value"),
-                    F.col("_w.ts_ms").alias("ts_ms"),
-                    F.col("_w.lsn").alias("lsn"),
-                    F.col("_w.deleted").alias("deleted"),
-                )
-            )
+            winners = _latest_image(cur.unionByName(batch_latest))
         else:
             winners = batch_latest
         merge_upsert(
@@ -456,7 +453,14 @@ def make_cdc_snap_sink(
     it grazes — the shape a high-rate CDC apply needs at 100 TB, with
     snap_compact_partitions retiring the debris on maintenance
     cadence. Same winners computation, same idempotence ledger, same
-    version-per-batch history."""
+    version-per-batch history.
+
+    Each call evaluates the micro-batch once: its latest image per key
+    is cached for the call (the touched-bucket list, the broadcast key
+    set and the winners union all read that copy) and released before
+    the call returns, and ``snap_merge`` likewise evaluates the
+    winners once, so a long-running stream holds no cached blocks
+    between batches."""
     from docker_based_real_time_etl_project_spark.lakesnap import (
         snap_init,
         snap_merge,
@@ -464,6 +468,7 @@ def make_cdc_snap_sink(
         snap_read,
         snap_versions,
     )
+    from docker_based_real_time_etl_project_spark.lakewrite import persisted
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -471,66 +476,31 @@ def make_cdc_snap_sink(
             last = snap_meta(lake).get("batch_id")
             if last is not None and batch_id <= last:
                 return  # replayed batch: already a committed version
-        rows = (
-            batch_df.withColumn("bucket", F.pmod(F.col("user_id"), F.lit(8)))
-            .withColumn("deleted", F.col("_op") == "d")
-            .select(
-                "user_id", "bucket", "value",
-                F.col("_ts_ms").alias("ts_ms"), F.col("_lsn").alias("lsn"),
-                "deleted",
-            )
-        )
-        order = F.struct(F.col("ts_ms"), F.col("lsn"))
-        batch_latest = rows.groupBy("user_id", "bucket").agg(
-            F.max_by(F.struct("value", "ts_ms", "lsn", "deleted"), order).alias("_w")
-        ).select(
-            "user_id", "bucket",
-            F.col("_w.value").alias("value"),
-            F.col("_w.ts_ms").alias("ts_ms"),
-            F.col("_w.lsn").alias("lsn"),
-            F.col("_w.deleted").alias("deleted"),
-        )
-        if not snap_versions(lake):
-            kw = {} if bloom_col is None else {"bloom_col": bloom_col,
-                                               "bloom_bits": 8192}
-            snap_init(
-                s, batch_latest, lake, "bucket", sort_by=("user_id",),
-                meta={"batch_id": batch_id}, **kw,
-            )
-            return
-        touched = [
-            str(r[0]) for r in batch_latest.select("bucket").distinct().collect()
-        ]
-        cur = (
-            snap_read(s, lake, partitions=touched)
-            .join(
+        batch_latest = _latest_image(_change_rows(batch_df))
+        with persisted(batch_latest):
+            if not snap_versions(lake):
+                kw = {} if bloom_col is None else {"bloom_col": bloom_col,
+                                                   "bloom_bits": 8192}
+                snap_init(
+                    s, batch_latest, lake, "bucket", sort_by=("user_id",),
+                    meta={"batch_id": batch_id}, **kw,
+                )
+                return
+            touched = [
+                str(r[0]) for r in batch_latest.select("bucket").distinct().collect()
+            ]
+            cur = snap_read(s, lake, partitions=touched).join(
                 F.broadcast(batch_latest.select("user_id").distinct()),
                 "user_id",
                 "left_semi",
             )
-        )
-        winners = (
-            cur.select(batch_latest.columns)
-            .unionByName(batch_latest)
-            .groupBy("user_id", "bucket")
-            .agg(
-                F.max_by(
-                    F.struct("value", "ts_ms", "lsn", "deleted"),
-                    F.struct(F.col("ts_ms"), F.col("lsn")),
-                ).alias("_w")
+            winners = _latest_image(
+                cur.select(batch_latest.columns).unionByName(batch_latest)
             )
-            .select(
-                "user_id", "bucket",
-                F.col("_w.value").alias("value"),
-                F.col("_w.ts_ms").alias("ts_ms"),
-                F.col("_w.lsn").alias("lsn"),
-                F.col("_w.deleted").alias("deleted"),
+            snap_merge(
+                s, lake, winners, key_cols=("user_id",), sort_by=("user_id",),
+                meta={"batch_id": batch_id}, mode=mode,
             )
-        )
-        snap_merge(
-            s, lake, winners, key_cols=("user_id",), sort_by=("user_id",),
-            meta={"batch_id": batch_id}, mode=mode,
-        )
 
     return sink
 

@@ -16,6 +16,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# the directory holding the package: Python workers import it by name
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -35,15 +38,30 @@ def get_spark(
       this is a floor; AQE coalesces down from a high initial number.
     - ``spark.sql.session.timeZone=UTC``: deterministic event-time
       bucketing (window/date_trunc edges) regardless of host tz.
+    - ``canChangeCachedPlanOutputPartitioning``: a persisted plan runs
+      under AQE too. Without it Spark builds every cached plan with AQE
+      off, so a cached micro-batch aggregate keeps all its shuffle
+      partitions (one task each) instead of coalescing to a few.
     - Arrow: vectorized transfer for the few Pandas-UDF operators.
     - ``parquet.aggregatePushdown``: push MIN/MAX/COUNT to footers.
+    - ``spark.executorEnv.PYTHONPATH``: the package root, ahead of any
+      value ``extra_conf`` gives. Python workers (pandas UDFs,
+      ``mapInPandas``) import the package by name and start in the
+      JVM's working directory, so without it they fail with
+      ModuleNotFoundError whenever the driver runs from outside the
+      repository root without PYTHONPATH.
     """
+    extra_conf = dict(extra_conf or {})
+    extra_conf[_WORKER_PATH] = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, extra_conf.get(_WORKER_PATH)) if p
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
@@ -60,7 +78,7 @@ def get_spark(
         builder = builder.master(master)
     elif "SPARK_MASTER" not in os.environ:
         builder = builder.master(f"local[{DEFAULT_CPUS}]")
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

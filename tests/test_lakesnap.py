@@ -1932,7 +1932,8 @@ def test_snap_sync_diff_pruned_and_idempotent(spark):
     (b) partitions with NO difference carry their manifest rows
     VERBATIM (the null-safe full-row diff prunes them before the
     merge is planned); (c) syncing an already-synced table publishes
-    no commit and returns None."""
+    no commit and returns None. Either way the cached diff is released
+    before the call returns."""
     import json
 
     from docker_based_real_time_etl_project_spark.lakesnap import (
@@ -1959,9 +1960,12 @@ def test_snap_sync_diff_pruned_and_idempotent(spark):
         "o_orderpriority = '1-URGENT' AND o_orderkey % 7 = 0",
         sort_by=("o_orderkey",),
     ) == 3
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    held = rdds().size()
     v = snap_sync(spark, path, src, key_cols=("o_orderkey",),
                   sort_by=("o_orderkey",))
     assert v == 4
+    assert rdds().size() == held  # the diff is released after the commit
     synced = snap_read(spark, path)
     assert synced.exceptAll(src).count() == 0
     assert src.exceptAll(synced).count() == 0
@@ -1980,6 +1984,7 @@ def test_snap_sync_diff_pruned_and_idempotent(spark):
     # (c) idempotence: equal table -> no commit
     assert snap_sync(spark, path, src, key_cols=("o_orderkey",)) is None
     assert snap_versions(path)[-1] == 4
+    assert rdds().size() == held
     # schema contract: a source missing a column is refused
     with pytest.raises(ValueError, match="columns"):
         snap_sync(spark, path, src.drop("o_custkey"), key_cols=("o_orderkey",))
@@ -2044,3 +2049,78 @@ def test_no_lake_call_inside_assert():
                 if isinstance(call, ast.Call) and name.startswith("snap_"):
                     bad.append(f"{f.relative_to(pkg)}:{node.lineno} {name}")
     assert not bad, bad
+
+
+def test_reads_use_recorded_schema_for_partition_column(spark):
+    """Reads take the manifest's recorded schema, so the partition
+    column keeps its written type. Inferring it from directory names
+    read a string column holding "007", "010" and "10" as int 7, 10,
+    10 (two distinct values collided) and a bigint column as int; a
+    merge then carried the corruption into the next version."""
+    df = spark.createDataFrame(
+        [(1, "007", 7, 1.0), (2, "010", 10, 2.0), (3, "10", 10, 3.0)],
+        "id bigint, code string, big bigint, v double",
+    )
+    want = {(1, "007", 7, 9.0), (2, "010", 10, 2.0), (3, "10", 10, 3.0)}
+    for part in ("code", "big"):
+        path = tempfile.mkdtemp(prefix=f"snapptype_{part}_")
+        snap_init(spark, df, path, part)
+        got = snap_read(spark, path)
+        assert got.dtypes == df.dtypes, part
+        assert {tuple(r) for r in got.collect()} == {tuple(r) for r in df.collect()}
+        upd = df.filter("id = 1").withColumn("v", F.lit(9.0))
+        assert snap_merge(spark, path, upd, key_cols=("id",)) == 2
+        got = snap_read(spark, path)
+        assert got.dtypes == df.dtypes, part
+        assert {tuple(r) for r in got.collect()} == want, part
+
+
+def test_manifest_without_recorded_schema_still_reads(spark):
+    """A manifest written before schemas were recorded has no
+    ``schema_json``: its read falls back to schema inference and the
+    by-name NULL back-fill of columns an older commit lacks, and
+    returns the same rows as the recorded-schema read."""
+    import json
+    from collections import Counter
+
+    from docker_based_real_time_etl_project_spark.lakesnap import _manifest_file
+
+    path = tempfile.mkdtemp(prefix="snapnoschema_")
+    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
+    snap_init(spark, orders, path, "o_orderpriority", sort_by=("o_orderkey",))
+    upd = orders.filter(F.col("o_orderkey") % 9 == 1).withColumn(
+        "audit_tag", F.lit("r9")
+    )
+    snap_merge(spark, path, upd, key_cols=("o_orderkey",))
+    recorded = snap_read(spark, path)
+    want = recorded.collect()
+    mf = _manifest_file(path, 2)
+    with open(mf) as fh:
+        m = json.load(fh)
+    del m["schema_json"]
+    with open(mf, "w") as fh:
+        json.dump(m, fh)
+    inferred = snap_read(spark, path)
+    assert inferred.columns == recorded.columns
+    assert Counter(map(tuple, inferred.collect())) == Counter(map(tuple, want))
+
+
+def test_writers_keep_recorded_column_types(spark):
+    """Every file a manifest names reads back under its one recorded
+    schema, so writers store values in the recorded column types (SQL
+    store assignment): a merge batch carrying a double for a bigint
+    column and an UPDATE whose SET expression is a double both write
+    bigints, and the files written before and after read together."""
+    from docker_based_real_time_etl_project_spark.lakesnap import snap_update_where
+
+    path = tempfile.mkdtemp(prefix="snaptypes_")
+    df = spark.createDataFrame(
+        [(1, "a", 10), (2, "b", 20)], "id bigint, part string, n bigint"
+    )
+    snap_init(spark, df, path, "part")
+    upd = spark.createDataFrame([(1, "a", 11.0)], "id bigint, part string, n double")
+    assert snap_merge(spark, path, upd, key_cols=("id",)) == 2
+    assert snap_update_where(spark, path, "id = 2", {"n": "n * 1.5"}) == 3
+    got = snap_read(spark, path)
+    assert got.dtypes == df.dtypes
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "a", 11), (2, "b", 30)]
