@@ -682,6 +682,7 @@ def snap_merge(
     target_rows_per_file: int | None = None,
     meta: dict | None = None,
     mode: str = "cow",
+    order_by: Sequence[str] = (),
 ) -> int:
     """MERGE producing a NEW version: upsert on ``key_cols``, optional
     boolean ``delete_col`` tombstones. Same immutable-partition-key
@@ -689,6 +690,18 @@ def snap_merge(
     carried-forward manifest metadata (e.g. a streaming sink's
     batch_id — the idempotence ledger a restarted query consults to
     skip replayed batches).
+
+    ``order_by`` makes it an ORDERED merge (Hudi's precombine field,
+    Delta's ``WHEN MATCHED AND s.ts > t.ts``): per key, the row with
+    the greatest ``order_by`` tuple among the touched partitions' base
+    rows and ALL incoming rows wins, so ``updates`` may hold several
+    images of one key (a raw changelog) and a late image never
+    overwrites a newer one already in the table. An incoming row wins
+    an equal-order tie. Soft deletes ride as ordinary columns, so
+    ``order_by`` with ``delete_col`` is a ``ValueError``. Scale: the
+    resolution is one ``max_by`` aggregate over base ∪ incoming, so the
+    touched rows shuffle once on the key, next to the clustered
+    write's own range exchange, and the lake is scanned once (CoW).
 
     ``mode="cow"`` (default): touched partitions' files are read,
     merged, and written into a fresh commit dir; untouched partitions
@@ -708,11 +721,16 @@ def snap_merge(
     CHECK enforcement and the clustered write all read one cached copy,
     released before the call returns."""
     mor = _is_mor(mode)
+    if order_by and delete_col is not None:
+        raise ValueError(
+            "order_by and delete_col are exclusive: an ordered merge keeps "
+            "tombstones as rows so a late image cannot resurrect a key"
+        )
     base_v, cur = _pin(path, "snap_merge")
     with persisted(updates):
         matched, incoming, merged, touched = _plan_merge(
             spark, path, base_v, cur, updates, key_cols, delete_col, "snap_merge",
-            "left_semi" if mor else "left_anti",
+            "left_semi" if mor else "left_anti", order_by,
         )
         return _commit(
             spark, path, cur,
@@ -739,6 +757,7 @@ def _plan_merge(
     delete_col: str | None,
     verb: str,
     how: str = "left_anti",
+    order_by: Sequence[str] = (),
 ) -> tuple[DataFrame, DataFrame, DataFrame, set[str]]:
     """The merge plan against a pinned base version: (base rows of the
     touched partitions joined ``how`` on the keys, incoming
@@ -748,6 +767,11 @@ def _plan_merge(
     rows. Shared by every merge path so their row-level semantics
     cannot drift; the union's schema is the merged table schema either
     way.
+
+    With ``order_by`` the incoming rows and the union are both the
+    per-key winners of :func:`_resolve_ordered`: over the whole touched
+    base for CoW (no key join at all — the winners ARE the rewritten
+    partitions), over the ``left_semi`` old images for MoR.
 
     SCHEMA EVOLUTION (additive, the Delta/Iceberg default): ``updates``
     must carry every base column (full-row upserts — a missing base
@@ -796,8 +820,38 @@ def _plan_merge(
         )
     if delete_col is not None:
         incoming = incoming.filter(~F.col(delete_col)).drop(delete_col)
+    if order_by:
+        winners = _resolve_ordered(
+            matched if how == "left_semi" else base, incoming, key_cols, order_by
+        )
+        return matched, winners, winners, touched
     merged = matched.unionByName(incoming, allowMissingColumns=True)
     return matched, incoming, merged, touched
+
+
+_SIDE = "_snap_side"
+
+
+def _resolve_ordered(
+    base: DataFrame,
+    incoming: DataFrame,
+    key_cols: Sequence[str],
+    order_by: Sequence[str],
+) -> DataFrame:
+    """One row per key of ``base ∪ incoming``: the greatest by
+    ``(*order_by, side)`` in one ``max_by`` aggregate, where the side
+    marker (base 0, incoming 1) hands equal-order ties to the incoming
+    row. Columns are the union's: base columns first, then the ones
+    the incoming rows add."""
+    both = base.withColumn(_SIDE, F.lit(0)).unionByName(
+        incoming.withColumn(_SIDE, F.lit(1)), allowMissingColumns=True
+    )
+    cols = [c for c in both.columns if c != _SIDE]
+    return (
+        both.groupBy(*key_cols)
+        .agg(F.max_by(F.struct(*cols), F.struct(*order_by, _SIDE)).alias(_SIDE))
+        .select(f"{_SIDE}.*")
+    )
 
 
 def _manifest_meta_fp(m: dict) -> dict:

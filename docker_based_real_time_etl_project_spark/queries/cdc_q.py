@@ -447,60 +447,48 @@ def make_cdc_snap_sink(
     never double-commit a version. The manifest is the idempotence
     ledger (the same role Delta's txn appId/version pair plays).
 
+    The first batch initializes the lake with its latest image per
+    key. Every later batch is one ordered ``snap_merge`` of its raw
+    change rows on ``user_id`` by the Debezium total order
+    ``(ts_ms, lsn)``: the merge resolves the touched buckets' rows and
+    the batch's images per key in one aggregate, so in-batch
+    duplicates collapse to the newest image, a late image never
+    overwrites a newer one already in the lake, and tombstones stay as
+    ``deleted`` rows. The batch and the touched lake partitions are
+    each read once per call, and nothing stays cached between batches.
+
     ``mode="mor"`` commits each batch MERGE-ON-READ (round 10): old
     images -> delete files, winners -> seq-stamped data files, so the
     per-batch write cost tracks the CHANGELOG instead of the buckets
     it grazes — the shape a high-rate CDC apply needs at 100 TB, with
     snap_compact_partitions retiring the debris on maintenance
-    cadence. Same winners computation, same idempotence ledger, same
-    version-per-batch history.
-
-    Each call evaluates the micro-batch once: its latest image per key
-    is cached for the call (the touched-bucket list, the broadcast key
-    set and the winners union all read that copy) and released before
-    the call returns, and ``snap_merge`` likewise evaluates the
-    winners once, so a long-running stream holds no cached blocks
-    between batches."""
+    cadence. Same ordered merge, same idempotence ledger, same
+    version-per-batch history."""
     from docker_based_real_time_etl_project_spark.lakesnap import (
         snap_init,
         snap_merge,
         snap_meta,
-        snap_read,
         snap_versions,
     )
-    from docker_based_real_time_etl_project_spark.lakewrite import persisted
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
-        if snap_versions(lake):
-            last = snap_meta(lake).get("batch_id")
-            if last is not None and batch_id <= last:
-                return  # replayed batch: already a committed version
-        batch_latest = _latest_image(_change_rows(batch_df))
-        with persisted(batch_latest):
-            if not snap_versions(lake):
-                kw = {} if bloom_col is None else {"bloom_col": bloom_col,
-                                                   "bloom_bits": 8192}
-                snap_init(
-                    s, batch_latest, lake, "bucket", sort_by=("user_id",),
-                    meta={"batch_id": batch_id}, **kw,
-                )
-                return
-            touched = [
-                str(r[0]) for r in batch_latest.select("bucket").distinct().collect()
-            ]
-            cur = snap_read(s, lake, partitions=touched).join(
-                F.broadcast(batch_latest.select("user_id").distinct()),
-                "user_id",
-                "left_semi",
+        changes = _change_rows(batch_df)
+        if not snap_versions(lake):
+            kw = {} if bloom_col is None else {"bloom_col": bloom_col,
+                                               "bloom_bits": 8192}
+            snap_init(
+                s, _latest_image(changes), lake, "bucket", sort_by=("user_id",),
+                meta={"batch_id": batch_id}, **kw,
             )
-            winners = _latest_image(
-                cur.select(batch_latest.columns).unionByName(batch_latest)
-            )
-            snap_merge(
-                s, lake, winners, key_cols=("user_id",), sort_by=("user_id",),
-                meta={"batch_id": batch_id}, mode=mode,
-            )
+            return
+        last = snap_meta(lake).get("batch_id")
+        if last is not None and batch_id <= last:
+            return  # replayed batch: already a committed version
+        snap_merge(
+            s, lake, changes, key_cols=("user_id",), order_by=("ts_ms", "lsn"),
+            sort_by=("user_id",), meta={"batch_id": batch_id}, mode=mode,
+        )
 
     return sink
 
@@ -568,8 +556,8 @@ def q_stream_cdc_snap_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_stream_cdc_mor_merge", oracle=_ORACLE, tags=("cdc", "streaming", "sink", "lakesnap"))
 def q_stream_cdc_mor_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC stream -> snapshot lake with every micro-batch committed
-    MERGE-ON-READ (the round-10 O(changes) CDC-apply shape): identical
-    winners computation and batch-id idempotence ledger as
+    MERGE-ON-READ (the round-10 O(changes) CDC-apply shape): the same
+    ordered merge and batch-id idempotence ledger as
     q_stream_cdc_snap_merge, but each commit writes only old-image
     delete files + the batch's winner rows — per-batch I/O tracks the
     changelog, never the bucket partitions it grazes. The final state

@@ -21,6 +21,14 @@ _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 
 
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 16g,
+    or half the box's physical RAM (whole GiB, at least 1) if that is
+    smaller, so two sessions on one box cannot claim all of it."""
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(16, ram_gib // 2))}g"
+
+
 def get_spark(
     app_name: str = "docker_based_real_time_etl_project_spark",
     master: str | None = None,
@@ -44,6 +52,8 @@ def get_spark(
       partitions (one task each) instead of coalescing to a few.
     - Arrow: vectorized transfer for the few Pandas-UDF operators.
     - ``parquet.aggregatePushdown``: push MIN/MAX/COUNT to footers.
+    - ``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM``, else
+      :func:`default_driver_memory` (16g capped at half the RAM).
     - ``spark.executorEnv.PYTHONPATH``: the package root, ahead of any
       value ``extra_conf`` gives. Python workers (pandas UDFs,
       ``mapInPandas``) import the package by name and start in the
@@ -72,7 +82,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     if master is not None:
         builder = builder.master(master)

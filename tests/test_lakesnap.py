@@ -1803,7 +1803,11 @@ def test_mor_merge_matches_cow_all_fates(spark):
     """snap_merge(mode='mor') — the Hudi MoR upsert: upsert/delete/
     insert fates all land as delete files + seq-stamped new images,
     base entries carried verbatim, final state identical to the CoW
-    merge of the same batch; compaction promotes the debris."""
+    merge of the same batch; compaction promotes the debris. The same
+    holds for an ordered merge (``order_by``): late images lose,
+    newer ones and equal-order incoming ones win, in-batch duplicates
+    resolve to the max, untouched partitions' entries carry verbatim,
+    and ``order_by`` with ``delete_col`` is rejected."""
     from docker_based_real_time_etl_project_spark.lakesnap import (
         _read_manifest,
         snap_compact,
@@ -1859,6 +1863,61 @@ def test_mor_merge_matches_cow_all_fates(spark):
     assert not _read_manifest(paths["mor"], v3).get("delete_entries")
     c = snap_read(spark, paths["mor"]).select(*orders.columns)
     assert c.exceptAll(a).count() == 0 and a.exceptAll(c).count() == 0
+
+    # ORDERED merge (order_by): per key, the greatest (ts, lsn) among the
+    # touched base rows and every incoming row wins; incoming wins ties
+    cols = "k long, part string, v string, ts long, lsn long"
+    base = spark.createDataFrame(
+        [
+            (1, "a", "base1", 5, 1),  # late update below loses
+            (2, "a", "base2", 5, 1),  # newer update wins
+            (3, "b", "base3", 1, 1),  # in-batch duplicates resolve to the max
+            (4, "b", "base4", 5, 2),  # equal-order tie -> incoming
+            (6, "a", "base6", 1, 1),  # touched partition, key not in batch
+            (10, "z", "base10", 1, 1),  # untouched partition
+        ],
+        cols,
+    )
+    batch = spark.createDataFrame(
+        [
+            (1, "a", "late1", 3, 9),
+            (2, "a", "new2", 7, 1),
+            (3, "b", "dup3a", 4, 1),
+            (3, "b", "dup3max", 9, 1),
+            (3, "b", "dup3b", 6, 1),
+            (4, "b", "tie4", 5, 2),
+            (5, "a", "ins5", 1, 1),
+        ],
+        cols,
+    )
+    want = {
+        (1, "base1"), (2, "new2"), (3, "dup3max"), (4, "tie4"),
+        (5, "ins5"), (6, "base6"), (10, "base10"),
+    }
+    ordered = {}
+    for mode in ("cow", "mor"):
+        p = tempfile.mkdtemp(prefix=f"ordmerge_{mode}_")
+        snap_init(spark, base, p, "part", sort_by=("k",))
+        with pytest.raises(ValueError, match="order_by"):
+            snap_merge(
+                spark, p, batch.withColumn("_delete", F.lit(False)),
+                key_cols=("k",), delete_col="_delete", order_by=("ts", "lsn"),
+                mode=mode,
+            )
+        assert snap_versions(p) == [1]
+        assert snap_merge(
+            spark, p, batch, key_cols=("k",), order_by=("ts", "lsn"), mode=mode
+        ) == 2
+        got = snap_read(spark, p).select(*base.columns)
+        assert {(r.k, r.v) for r in got.collect()} == want, mode
+        assert got.count() == len(want)  # one row per key
+        m1, m2 = _read_manifest(p, 1), _read_manifest(p, 2)
+        assert [e for e in m2["entries"] if e["partition"] == "z"] == [
+            e for e in m1["entries"] if e["partition"] == "z"
+        ]
+        ordered[mode] = got
+    a, b = ordered["cow"], ordered["mor"]
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_mor_merge_additive_schema_evolution(spark):

@@ -41,3 +41,19 @@ def test_python_workers_import_package_outside_repo_root(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "rows 3" in out.stdout
+
+
+def test_default_driver_memory_fits_the_box():
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap is 16g or half
+    the physical RAM, whichever is smaller, so it never exceeds the
+    box's memory and two sessions fit side by side."""
+    from docker_based_real_time_etl_project_spark.session import (
+        default_driver_memory,
+    )
+
+    mem = default_driver_memory()
+    assert mem.endswith("g")
+    gib = int(mem[:-1])
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 1 <= gib <= 16
+    assert gib * 2**30 <= max(ram / 2, 2**30)
