@@ -16,8 +16,10 @@ pair of composable operators:
   (``cassandra-init.cql:4``).
 
 Works identically on a batch DataFrame of envelopes and on a streaming
-one (materialize via ``foreachBatch`` + idempotent rewrite -- see
-``sinks.upsert_parquet_sink``).
+one. A stream materializes incrementally: each ``foreachBatch`` call
+commits one ordered ``lakesnap.snap_merge`` of its decoded changes by
+``(ts_ms, lsn)``, with deletes kept as tombstone rows so a late older
+image cannot resurrect a key (``queries.cdc_q.make_cdc_snap_sink``).
 """
 
 from __future__ import annotations
@@ -121,31 +123,23 @@ def decode_envelope_images(
     )
 
 
-def materialize_latest(
-    changes: DataFrame,
-    key_cols: Sequence[str],
-    drop_meta: bool = True,
-    keep_tombstones: bool = False,
-) -> DataFrame:
+def materialize_latest(changes: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """A4: changelog -> current state. Last change per key wins, ordered
     by (ts_ms, lsn) -- lsn is the total-order tiebreaker within a
     millisecond, exactly Debezium's delivery order; a surviving 'd'
     removes the key.
 
-    One shuffle on the key. At 100 TB this runs per micro-batch over
-    the DELTA only, merged into a bucketed state table (see
-    sinks.upsert_parquet_sink), never over the full history.
+    One shuffle on the key, over the whole changelog given: the batch
+    form. A stream applies only each micro-batch's DELTA to a
+    partitioned snapshot lake (``queries.cdc_q.make_cdc_snap_sink``),
+    never the full history.
     """
     from docker_based_real_time_etl_project_spark.operators.aggregates import latest_per_key
 
     latest = latest_per_key(
         changes, list(key_cols), [F.col("_ts_ms").desc(), F.col("_lsn").desc()]
     )
-    # keep_tombstones: an incremental state store must retain the delete
-    # marker, or a replayed older update would resurrect the key; a
-    # final/read-side materialization drops them.
-    out = latest if keep_tombstones else latest.filter(F.col("_op") != "d")
-    return out.drop("_op", "_ts_ms", "_lsn") if drop_meta else out
+    return latest.filter(F.col("_op") != "d").drop("_op", "_ts_ms", "_lsn")
 
 
 def snapshot_envelopes(
@@ -153,7 +147,7 @@ def snapshot_envelopes(
 ) -> DataFrame:
     """S6 snapshot.mode=initial: the connector first emits every existing
     row as a read event (op='r', ts_ms=0 -- before any WAL change), then
-    streams changes. Feeding these through the same upsert store gives
+    streams changes. Feeding these through the same CDC lake sink gives
     backfill-then-stream: the snapshot seeds state and any subsequent
     change (real ts_ms > 0) wins by the (ts_ms, lsn) order."""
     return encode_envelope(

@@ -1,14 +1,13 @@
-"""Snapshot-versioned parquet lake: manifest-pointer time travel on
-top of the CoW write path (the transactional upgrade lakewrite.py's
-docstrings point at, built with stock Spark + JSON manifests).
+"""Snapshot-versioned parquet lake: the package's one keyed-upsert
+store, with manifest-pointer time travel, built with stock Spark +
+JSON manifests over lakewrite's clustered writer.
 
-``lakewrite.merge_upsert`` rewrites touched partition directories in
-place — correct, but readers racing the swap can see a half-merged
-table, and yesterday's state is gone the moment the merge lands. The
-fix is the one every table format (Delta/Iceberg/Hudi) converges on:
-**data files are immutable; a tiny manifest names the live set; a
-commit is one atomic manifest swap.** This module implements exactly
-that core:
+A MERGE that rewrote touched partition directories in place would let
+readers racing the swap see a half-merged table, and yesterday's state
+would be gone the moment the merge landed. This module takes the
+design every table format (Delta/Iceberg/Hudi) converges on: **data
+files are immutable; a tiny manifest names the live set; a commit is
+one atomic manifest swap.** Its core:
 
 - every write lands in a fresh ``c{version}/`` commit directory
   (partition-dir layout inside, so scans still prune);
@@ -685,8 +684,12 @@ def snap_merge(
     order_by: Sequence[str] = (),
 ) -> int:
     """MERGE producing a NEW version: upsert on ``key_cols``, optional
-    boolean ``delete_col`` tombstones. Same immutable-partition-key
-    contract as ``lakewrite.merge_upsert``. ``meta`` keys overlay the
+    boolean ``delete_col`` tombstones. The partition column is
+    immutable per key (the contract of partitioned CoW tables without
+    a global index, e.g. Hudi non-global): an update must arrive in the
+    partition its key already lives in, otherwise the old row survives
+    in its old partition. A partition whose rows are all deleted has
+    no entries in the new version. ``meta`` keys overlay the
     carried-forward manifest metadata (e.g. a streaming sink's
     batch_id — the idempotence ledger a restarted query consults to
     skip replayed batches).
@@ -1043,7 +1046,7 @@ def snap_vacuum(
     then delete data files no retained manifest references (subject to
     ``min_age_sec``, the retention guard against racing readers of a
     just-expired version — Delta VACUUM's retention interval, default
-    1 h to match lakewrite.vacuum_dir; pass 0.0 explicitly for tests).
+    1 h; pass 0.0 explicitly for tests).
     Time travel contracts shrink accordingly; the latest version is
     never touched."""
     versions = snap_versions(path)
@@ -1134,7 +1137,7 @@ def snap_compact(
     """Compaction AS A COMMIT: rewrite the latest version's data into
     target-sized clustered files in a fresh commit dir and publish it
     as version N+1 whose manifest references ONLY the new files. Unlike
-    lakewrite.compact_dir's rename swap, this needs no maintenance
+    a plain-parquet directory rename swap, this needs no maintenance
     window — readers of any committed version are untouched (their
     files are immutable), the swap is the usual one-rename manifest
     publish, and the small-file debris disappears for good when

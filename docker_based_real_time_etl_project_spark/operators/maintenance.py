@@ -48,10 +48,10 @@ def compact_parquet_dir(
 ) -> dict:
     """Rewrite `path` into ~target-sized files if it has >= min_files.
 
-    Write-new + atomic rename (the directory swap pattern the CDC
-    upsert store also uses); the old directory is retained alongside as
-    `.pre_compact_*` until the caller's retention policy removes it --
-    readers holding the old file listing finish unharmed.
+    Write-new + atomic rename (a directory swap); the old directory is
+    retained alongside as `.pre_compact_*` until the caller's retention
+    policy removes it -- readers holding the old file listing finish
+    unharmed.
     Returns the plan dict plus what was done.
     """
     plan = compaction_plan(path, target_file_bytes)

@@ -76,48 +76,6 @@ def q_cdc_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_cdc_stream_upsert", oracle=_ORACLE, tags=("cdc", "streaming"))
-def q_cdc_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8+A4+S10 streaming: the same changelog replayed as a 4-batch
-    stream through foreachBatch + the idempotent parquet upsert store;
-    the final state hash-matches the batch oracle however the batches
-    split."""
-    import os
-
-    from pyspark.sql import Window
-
-    from docker_based_real_time_etl_project_spark.sinks import read_state, upsert_parquet_sink
-
-    envelopes = _changelog(spark, sf_dir)
-    src = tempfile.mkdtemp(prefix="cdc_src_")
-    # 4 deterministic micro-batches in envelope-string order -- i.e. NOT
-    # in lsn order, so changes for a key may arrive across batches out of
-    # order; the idempotent (ts_ms, lsn) merge must still converge
-    envelopes.withColumn(
-        "_bucket", F.ntile(4).over(Window.orderBy("value"))
-    ).write.partitionBy("_bucket").mode("overwrite").parquet(src)
-
-    state_dir = tempfile.mkdtemp(prefix="cdc_state_")
-    stream = (
-        spark.readStream.schema(T.StructType([T.StructField("value", T.StringType())]))
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    decoded = decode_envelope(stream, ROW_SCHEMA)
-    q = (
-        decoded.writeStream.foreachBatch(upsert_parquet_sink(state_dir, ["user_id"]))
-        .option("checkpointLocation", os.path.join(state_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return read_state(spark, state_dir).select(
-        "user_id", F.col("value").alias("current_value")
-    )
-
-
 @register(
     "q_cdc_agg_incremental",
     oracle="""
@@ -255,47 +213,49 @@ def _change_rows(batch_df: DataFrame) -> DataFrame:
     )
 
 
-# One changelog-slicing pass per sf_dir per session (the input is
-# immutable), mirroring streaming_q._SLICE_CACHE.
-_CDC_SLICE_CACHE: dict[str, str] = {}
-
-
 def _cdc_slices(spark: SparkSession, sf_dir: str, n_slices: int = 4) -> str:
     """Write the before-image changelog as time-ordered text slices so a
     file-source stream replays it as realistic micro-batches (envelope
-    JSON lines, one slice per trigger, mtimes stamped in slice order)."""
+    JSON lines, one slice per trigger, mtimes stamped in slice order).
+    Built once per (sf_dir, n_slices, events fingerprint)."""
     import os
-    import tempfile
     import time as _time
 
-    if sf_dir in _CDC_SLICE_CACHE:
-        return _CDC_SLICE_CACHE[sf_dir]
-    env = _before_image_changelog(spark, sf_dir, keep_cols=("ts",))
-    qs = [str((i + 1) / n_slices) for i in range(n_slices - 1)]
-    bounds = env.selectExpr(
-        f"percentile_approx(unix_millis(ts), array({','.join(qs)}), 10000) p"
-    ).collect()[0]["p"]
-    ms = F.unix_millis("ts")
-    slice_idx = F.lit(n_slices - 1)
-    for i in range(n_slices - 2, -1, -1):
-        slice_idx = F.when(ms <= bounds[i], i).otherwise(slice_idx)
-    out = tempfile.mkdtemp(prefix="cdc_stream_")
-    (
-        env.withColumn("slice", F.format_string("%03d", slice_idx))
-        .repartition(n_slices, "slice")
-        .select("value", "slice")
-        .write.partitionBy("slice")
-        .mode("append")
-        .text(out)
+    from docker_based_real_time_etl_project_spark.queries.materialize import (
+        materialize_once,
+        table_fingerprint,
     )
-    base = _time.time()
-    for rank in range(n_slices):
-        d = os.path.join(out, f"slice={rank:03d}")
-        if os.path.isdir(d):
-            for f in os.listdir(d):
-                os.utime(os.path.join(d, f), (base + 2 * rank, base + 2 * rank))
-    _CDC_SLICE_CACHE[sf_dir] = out
-    return out
+
+    def build() -> str:
+        env = _before_image_changelog(spark, sf_dir, keep_cols=("ts",))
+        qs = [str((i + 1) / n_slices) for i in range(n_slices - 1)]
+        bounds = env.selectExpr(
+            f"percentile_approx(unix_millis(ts), array({','.join(qs)}), 10000) p"
+        ).collect()[0]["p"]
+        ms = F.unix_millis("ts")
+        slice_idx = F.lit(n_slices - 1)
+        for i in range(n_slices - 2, -1, -1):
+            slice_idx = F.when(ms <= bounds[i], i).otherwise(slice_idx)
+        out = tempfile.mkdtemp(prefix="cdc_stream_")
+        (
+            env.withColumn("slice", F.format_string("%03d", slice_idx))
+            .repartition(n_slices, "slice")
+            .select("value", "slice")
+            .write.partitionBy("slice")
+            .mode("append")
+            .text(out)
+        )
+        base = _time.time()
+        for rank in range(n_slices):
+            d = os.path.join(out, f"slice={rank:03d}")
+            if os.path.isdir(d):
+                for f in os.listdir(d):
+                    os.utime(os.path.join(d, f), (base + 2 * rank, base + 2 * rank))
+        return out
+
+    return materialize_once(
+        ("cdc_slices", sf_dir, n_slices, table_fingerprint(sf_dir, "events")), build
+    )
 
 
 @register(
@@ -350,88 +310,6 @@ def q_stream_cdc_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = run_to_memory(agg, output_mode="complete", state_partitions=8)
     return final.filter(F.col("n_keys") > 0).select(
         "bucket", "n_keys", (F.col("total_cents") / 100.0).alias("total_value")
-    )
-
-
-@register("q_stream_cdc_lake_merge", oracle=_ORACLE, tags=("cdc", "streaming", "sink"))
-def q_stream_cdc_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC stream -> copy-on-write LAKE: the changelog replayed as a
-    4-batch stream lands in a partitioned parquet lake via foreachBatch
-    + lakewrite.merge_upsert — the production shape for "keep a 100 TB
-    lake table in sync with an OLTP source". Per batch: reduce the
-    batch to its latest image per key, read back ONLY the touched
-    partition dirs (read-modify-write at partition granularity),
-    resolve winners by the Debezium total order (ts_ms, lsn), and CoW
-    the winners in. Deletes are SOFT (a tombstone column, the
-    Hudi/Delta delete-marker practice): the replay deliberately splits
-    out of lsn order, so a hard delete could be resurrected by an
-    older image arriving in a later batch — the tombstone retains the
-    delete's (ts_ms, lsn) so ordering resolves it like any other
-    update. Final state filters tombstones and hash-matches the same
-    batch oracle as q_cdc_materialize, however the batches split.
-    Partition key = pmod(user_id, 8): derived from the key, so the
-    CoW immutable-partition-key contract holds by construction."""
-    import os
-
-    from docker_based_real_time_etl_project_spark.lakewrite import merge_upsert
-
-    envelopes = _changelog(spark, sf_dir)
-    src = tempfile.mkdtemp(prefix="cdc_lake_src_")
-    envelopes.withColumn(
-        "_bucket", F.ntile(4).over(Window.orderBy("value"))
-    ).write.partitionBy("_bucket").mode("overwrite").parquet(src)
-
-    lake = tempfile.mkdtemp(prefix="cdc_lake_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        # latest image per key WITHIN the batch (max_by over the
-        # Debezium total order), then resolve against the lake's
-        # current row for the key — read-modify-write on touched
-        # partitions only
-        batch_latest = _latest_image(_change_rows(batch_df))
-        from docker_based_real_time_etl_project_spark.lakewrite import (
-            _leaf_parquet_files,
-        )
-
-        if _leaf_parquet_files(lake):
-            touched = batch_latest.select("bucket").distinct()
-            cur = (
-                s.read.parquet(lake)
-                .join(F.broadcast(touched), "bucket", "left_semi")
-                .join(
-                    F.broadcast(batch_latest.select("user_id").distinct()),
-                    "user_id",
-                    "left_semi",
-                )
-            )
-            winners = _latest_image(cur.unionByName(batch_latest))
-        else:
-            winners = batch_latest
-        merge_upsert(
-            s, lake, winners,
-            key_cols=("user_id",), partition_col="bucket",
-        )
-
-    stream = (
-        spark.readStream.schema(T.StructType([T.StructField("value", T.StringType())]))
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(src)
-    )
-    decoded = decode_envelope(stream, ROW_SCHEMA)
-    q = (
-        decoded.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(lake, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return (
-        spark.read.option("pathGlobFilter", "*.parquet").parquet(lake)
-        .filter(~F.col("deleted"))
-        .select("user_id", F.col("value").alias("current_value"))
     )
 
 
@@ -493,10 +371,33 @@ def make_cdc_snap_sink(
     return sink
 
 
+def _cdc_envelope_batches(spark: SparkSession, sf_dir: str) -> str:
+    """The changelog's envelopes as 4 parquet files, one micro-batch
+    each under ``maxFilesPerTrigger=1``, built once per (sf_dir, events
+    fingerprint). The split follows envelope-string order, NOT lsn
+    order, so changes for a key arrive across batches out of order and
+    the sink's (ts_ms, lsn) merge must still converge."""
+    from docker_based_real_time_etl_project_spark.queries.materialize import (
+        materialize_once,
+        table_fingerprint,
+    )
+
+    def build() -> str:
+        src = tempfile.mkdtemp(prefix="cdc_snap_src_")
+        _changelog(spark, sf_dir).withColumn(
+            "_bucket", F.ntile(4).over(Window.orderBy("value"))
+        ).write.partitionBy("_bucket").mode("overwrite").parquet(src)
+        return src
+
+    return materialize_once(
+        ("cdc_envelope_batches", sf_dir, table_fingerprint(sf_dir, "events")), build
+    )
+
+
 def _cdc_snap_pipeline(
     spark: SparkSession, sf_dir: str, mode: str = "cow"
 ) -> str:
-    """The q_stream_cdc_lake_merge pipeline retargeted at the SNAPSHOT
+    """The changelog replayed as a 4-batch stream into the SNAPSHOT
     lake (lakesnap): every micro-batch commits one immutable version,
     so the sink leaves behind not just the synced table but its entire
     replayable history — version k IS the lake after changelog batch k
@@ -505,12 +406,7 @@ def _cdc_snap_pipeline(
     the LATEST version, tests walk the history."""
     import os
 
-    envelopes = _changelog(spark, sf_dir)
-    src = tempfile.mkdtemp(prefix="cdc_snap_src_")
-    envelopes.withColumn(
-        "_bucket", F.ntile(4).over(Window.orderBy("value"))
-    ).write.partitionBy("_bucket").mode("overwrite").parquet(src)
-
+    src = _cdc_envelope_batches(spark, sf_dir)
     lake = tempfile.mkdtemp(prefix="cdc_snap_lake_")
     sink = make_cdc_snap_sink(lake, mode=mode)
 
@@ -532,17 +428,22 @@ def _cdc_snap_pipeline(
     return lake
 
 
+@register("q_cdc_stream_upsert", oracle=_ORACLE, tags=("cdc", "streaming"))
+@register("q_stream_cdc_lake_merge", oracle=_ORACLE, tags=("cdc", "streaming", "sink"))
 @register("q_stream_cdc_snap_merge", oracle=_ORACLE, tags=("cdc", "streaming", "sink", "lakesnap"))
 def q_stream_cdc_snap_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC stream -> SNAPSHOT lake: q_stream_cdc_lake_merge's
-    out-of-lsn-order replay and soft-delete tombstone resolution, but
-    every micro-batch is one atomic manifest commit — the sink
+    """S8+A4+S10 streaming: the changelog replayed as a 4-batch stream,
+    out of lsn order, through foreachBatch into the SNAPSHOT lake —
+    one ordered copy-on-write ``snap_merge`` per micro-batch, deletes
+    kept as tombstone rows so a late older image cannot resurrect a
+    key, and every micro-batch one atomic manifest commit. The sink
     produces the synced table AND its full version history (batch k's
     state = version k, time-travel-readable until vacuumed; pinned in
     tests/test_lakesnap.py). The final tombstone-filtered state
-    hash-matches the same oracle as q_cdc_materialize, so correctness
-    of the versioned path is held to the identical bar as the
-    plain-parquet CoW sink."""
+    hash-matches the same oracle as q_cdc_materialize however the
+    batches split. This is the package's one keyed-upsert store, so
+    the streaming-upsert (q_cdc_stream_upsert) and CDC lake-merge
+    (q_stream_cdc_lake_merge) entries run this same pipeline."""
     from docker_based_real_time_etl_project_spark.lakesnap import snap_read
 
     lake = _cdc_snap_pipeline(spark, sf_dir)
@@ -564,8 +465,7 @@ def q_stream_cdc_mor_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     is read STRAIGHT THROUGH the accumulated delete debris (no
     compaction first — the read-side anti-join is the semantics under
     test) and hash-matches the same q_cdc_materialize oracle, holding
-    the MoR sink to the identical bar as the CoW versioned sink and
-    the plain-parquet sink."""
+    the MoR sink to the identical bar as the CoW sink."""
     from docker_based_real_time_etl_project_spark.lakesnap import snap_read
 
     lake = _cdc_snap_pipeline(spark, sf_dir, mode="mor")
@@ -746,7 +646,7 @@ def _ivm_lake_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
 
     def build() -> str:
-        o_lake = tempfile.mkdtemp(prefix="ivm_orders_lake_")
+        o_lake = tempfile.mkdtemp(prefix="ivm_orders_snap_")
         snap_init(
             spark,
             table(spark, sf_dir, "orders").select(
@@ -766,7 +666,7 @@ def _ivm_lake_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             sort_by=("o_orderkey",),
         )
         expect_commit("q_lake_ivm_join/q_lake_ivm_minmax", v, 2)
-        c_lake = tempfile.mkdtemp(prefix="ivm_customer_lake_")
+        c_lake = tempfile.mkdtemp(prefix="ivm_customer_snap_")
         snap_init(
             spark,
             table(spark, sf_dir, "customer").select(

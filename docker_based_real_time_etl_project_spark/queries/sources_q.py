@@ -418,34 +418,6 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _orders_lake(spark: SparkSession, sf_dir: str) -> str:
-    """Pristine clustered-lake copy of orders (partition dirs on
-    o_orderpriority, sorted on o_orderkey), once per (sf_dir, data
-    fingerprint). q_lake_merge copies this artifact before mutating —
-    the cached original is never written to twice."""
-    from docker_based_real_time_etl_project_spark.lakewrite import write_clustered
-    from docker_based_real_time_etl_project_spark.queries.materialize import (
-        materialize_once,
-        table_fingerprint,
-    )
-
-    def build() -> str:
-        out = tempfile.mkdtemp(prefix="lake_orders_")
-        write_clustered(
-            table(spark, sf_dir, "orders"),
-            out,
-            partition_by=("o_orderpriority",),
-            sort_by=("o_orderkey",),
-            target_rows_per_file=20_000,
-        )
-        return out
-
-    return materialize_once(
-        ("lake_clustered_orders", sf_dir, table_fingerprint(sf_dir, "orders")),
-        build,
-    )
-
-
 def _merge_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic MERGE batch derived from orders itself so a SQL
     oracle can restate it exactly: key%97==0 rows are upserted with a
@@ -502,39 +474,39 @@ def _merge_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sink", "layout", "cdc", "scale"),
 )
 def q_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Copy-on-write MERGE INTO a plain-parquet lake — the Delta/Hudi
-    upsert pattern with stock Spark (lakewrite.merge_upsert): a derived
-    update batch (price-corrections + deletes + new keys) is merged
-    into a partitioned clustered copy of orders via broadcast anti-join
-    + dynamic partition overwrite, then the MUTATED LAKE is read back
-    and aggregated per partition. The oracle restates the merge
-    relationally over the original table, so the hash proves upsert
-    (replaced, not duplicated), delete (gone), insert (present
-    exactly once) and that untouched rows survived the rewrite
-    byte-faithfully. I/O at scale ∝ touched partitions: see the
-    mtime-pinned pruning proof in tests/test_lakewrite.py. Reference
-    parity: this is the idempotent keyed-upsert delivery semantic of
-    the Cassandra sink (cassandra-sink-config.json:19-20) re-expressed
-    as a lake maintenance operator."""
-    import shutil
-
-    from docker_based_real_time_etl_project_spark.lakewrite import merge_upsert
+    """Copy-on-write MERGE INTO the snapshot lake — the Delta/Hudi
+    upsert pattern (lakesnap.snap_merge): a zero-copy clone of the
+    pristine orders version (version 1 of _orders_snap) takes a
+    derived update batch (price-corrections + deletes + new keys) as
+    one commit, then the MERGED VERSION is read back and aggregated per
+    partition. The oracle restates the merge relationally over the
+    original table, so the hash proves upsert (replaced, not
+    duplicated), delete (gone), insert (present exactly once) and that
+    untouched rows survived the rewrite byte-faithfully. I/O at scale
+    ∝ touched partitions: untouched partitions' manifest entries carry
+    forward (tests/test_lakesnap.py). Reference parity: this is the
+    idempotent keyed-upsert delivery semantic of the Cassandra sink
+    (cassandra-sink-config.json:19-20) re-expressed as a lake
+    maintenance operator."""
+    from docker_based_real_time_etl_project_spark.lakesnap import (
+        snap_clone,
+        snap_merge,
+        snap_read,
+    )
 
     work = tempfile.mkdtemp(prefix="lake_merge_")
-    shutil.rmtree(work)
-    shutil.copytree(_orders_lake(spark, sf_dir), work)
-    merge_upsert(
+    snap_clone(spark, _orders_snap(spark, sf_dir), work, version=1)
+    snap_merge(
         spark,
         work,
         _merge_updates(spark, sf_dir),
         key_cols=("o_orderkey",),
-        partition_col="o_orderpriority",
         delete_col="_delete",
         sort_by=("o_orderkey",),
         target_rows_per_file=20_000,
     )
     return (
-        spark.read.parquet(work)
+        snap_read(spark, work)
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

@@ -5,17 +5,17 @@ column-mapped Cassandra writer (``cassandra-sink-config.json:14-18``).
 Both are expressed here as ``foreachBatch`` adapters so the same code
 serves batch writes and checkpointed streaming writes (at-least-once
 from the checkpoint, exactly-once when the target write is idempotent
--- S10). External-system connectors are import-gated: everything is
-testable without a Postgres/Cassandra container via the parquet upsert
-sink, which is also the CDC state store.
+-- S10). External-system connectors are import-gated. The keyed
+upsert-by-PK the Cassandra sink performs for CDC is the snapshot
+lake's ordered merge (``queries.cdc_q.make_cdc_snap_sink`` over
+``lakesnap.snap_merge``), testable without any container.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable, Mapping, Sequence
+from collections.abc import Callable, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -94,54 +94,3 @@ def cassandra_mapped_writer(
             ) from e
 
     return write
-
-
-def upsert_parquet_sink(
-    state_dir: str,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str] = ("_ts_ms", "_lsn"),
-) -> Callable[[DataFrame, int], None]:
-    """S10 exactly-once CDC state store on plain parquet: each batch
-    merges the delta into the keyed state by last-writer-wins and
-    atomically swaps the state dir (write-new + rename). Replayed
-    batches (restart between write and checkpoint commit) are absorbed
-    because the merge is idempotent on (key, order) -- the parquet
-    analog of Delta MERGE / Cassandra upsert-by-PK.
-
-    At scale the state table would be bucketed by key so the merge
-    shuffles only the delta; the swap stays atomic per partition dir.
-    """
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        from docker_based_real_time_etl_project_spark.cdc import materialize_latest
-
-        spark = batch_df.sparkSession
-        cur_path = os.path.join(state_dir, "current")
-        nxt_path = os.path.join(state_dir, f"epoch={epoch_id}")
-        if os.path.exists(cur_path):
-            cur = spark.read.parquet(cur_path)
-            # existing state re-enters the merge as op='u' rows; real
-            # changes with equal (ts_ms, lsn) dedupe against it
-            merged_src = cur.unionByName(batch_df, allowMissingColumns=True)
-        else:
-            merged_src = batch_df
-        merged = materialize_latest(
-            merged_src, key_cols, drop_meta=False, keep_tombstones=True
-        )
-        merged.write.mode("overwrite").parquet(nxt_path)
-        # atomic swap: 'current' is always a symlink; os.replace of a
-        # fresh symlink is atomic on POSIX
-        tmp_link = os.path.join(state_dir, ".current.tmp")
-        if os.path.lexists(tmp_link):
-            os.unlink(tmp_link)
-        os.symlink(nxt_path, tmp_link)
-        os.replace(tmp_link, cur_path)
-
-    return write
-
-
-def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Read the upsert sink's current state as the user-facing table
-    (tombstones and envelope meta removed)."""
-    cur = spark.read.parquet(os.path.join(state_dir, "current"))
-    return cur.filter(F.col("_op") != "d").drop("_op", "_ts_ms", "_lsn")

@@ -1,4 +1,4 @@
-"""CDC round-trip + upsert-store edge cases (SURVEY.md 5.2 item 5):
+"""CDC round-trip + lake-sink edge cases (SURVEY.md 5.2 item 5):
 envelope encode/decode fidelity, delete tombstones, idempotent replay.
 """
 
@@ -13,19 +13,27 @@ from docker_based_real_time_etl_project_spark.cdc import (
     decode_envelope,
     encode_envelope,
     materialize_latest,
+    snapshot_envelopes,
 )
-from docker_based_real_time_etl_project_spark.sinks import read_state, upsert_parquet_sink
+from docker_based_real_time_etl_project_spark.lakesnap import snap_read, snap_versions
+from docker_based_real_time_etl_project_spark.queries.cdc_q import (
+    ROW_SCHEMA,
+    make_cdc_snap_sink,
+)
 
 ROW = T.StructType(
     [T.StructField("k", T.LongType()), T.StructField("v", T.DoubleType())]
 )
 
 
-def _envelopes(spark, rows):
-    """rows: (k, v, op, ts_ms, lsn)"""
-    df = spark.createDataFrame(rows, "k long, v double, op string, ts_ms long, lsn long")
+def _envelopes(spark, rows, cols=("k", "v")):
+    """rows: (key, value, op, ts_ms, lsn); ``cols`` names key and value."""
+    k, v = cols
+    df = spark.createDataFrame(
+        rows, f"{k} long, {v} double, op string, ts_ms long, lsn long"
+    )
     return encode_envelope(
-        df, ["k", "v"], op=F.col("op"), ts_ms=F.col("ts_ms"), lsn=F.col("lsn"), table="t"
+        df, [k, v], op=F.col("op"), ts_ms=F.col("ts_ms"), lsn=F.col("lsn"), table="t"
     )
 
 
@@ -53,54 +61,75 @@ def test_materialize_last_writer_wins_and_deletes(spark):
     assert [(r.k, r.v) for r in state] == [(1, 11.0), (3, 31.0)]  # 2 deleted
 
 
-def test_upsert_store_absorbs_out_of_order_replay(spark):
-    """A delete must survive a later-arriving OLDER update (tombstone),
-    and re-delivering a whole batch must not change the state."""
-    state_dir = tempfile.mkdtemp(prefix="cdc_ut_")
-    sink = upsert_parquet_sink(state_dir, ["k"])
-    b1 = decode_envelope(
-        _envelopes(spark, [(1, 10.0, "c", 100, 1), (2, 20.0, "c", 100, 2), (2, 20.0, "d", 300, 5)]),
-        ROW,
+def _sink_batch(spark, rows):
+    """rows: (user_id, value, op, ts_ms, lsn) -> a decoded micro-batch in
+    the CDC lake sink's row schema."""
+    return decode_envelope(_envelopes(spark, rows, ("user_id", "value")), ROW_SCHEMA)
+
+
+def _live(spark, lake):
+    return {
+        (r.user_id, r.value)
+        for r in snap_read(spark, lake).filter(~F.col("deleted")).collect()
+    }
+
+
+def test_cdc_lake_sink_delete_beats_late_update_and_redelivery_is_idempotent(spark):
+    """A delete must survive a later-arriving OLDER update (its
+    tombstone row keeps the delete's (ts_ms, lsn)), and re-delivering
+    that batch under a NEW batch_id, which the sink's ledger does not
+    skip, must leave the state unchanged: the merge itself is
+    idempotent by (ts_ms, lsn) order."""
+    lake = tempfile.mkdtemp(prefix="cdc_ooo_")
+    sink = make_cdc_snap_sink(lake)
+    b1 = _sink_batch(
+        spark, [(1, 10.0, "c", 100, 1), (2, 20.0, "c", 100, 2), (2, 20.0, "d", 300, 5)]
     )
-    b2 = decode_envelope(
-        _envelopes(spark, [(2, 25.0, "u", 200, 3), (1, 12.0, "u", 400, 6)]),  # k=2 update OLDER than its delete
-        ROW,
-    )
+    # k=2's update is OLDER than its delete in b1
+    b2 = _sink_batch(spark, [(2, 25.0, "u", 200, 3), (1, 12.0, "u", 400, 6)])
     sink(b1, 0)
     sink(b2, 1)
-    got = {(r.k, r.v) for r in read_state(spark, state_dir).collect()}
-    assert got == {(1, 12.0)}  # k=2 stays deleted despite late old update
-    sink(b2, 2)  # exact re-delivery (restart replay): idempotent
-    got2 = {(r.k, r.v) for r in read_state(spark, state_dir).collect()}
-    assert got2 == got
+    assert _live(spark, lake) == {(1, 12.0)}  # k=2 stays deleted
+    sink(b2, 2)  # the same changes again, past the ledger
+    assert snap_versions(lake) == [1, 2, 3]
+
+    def rows(v):
+        cols = ("user_id", "value", "ts_ms", "lsn", "deleted")
+        return sorted(tuple(r) for r in snap_read(spark, lake, v).select(*cols).collect())
+
+    assert rows(3) == rows(2)
+    assert (2, 20.0, 300, 5, True) in rows(3)
 
 
-def test_snapshot_then_stream_backfill(spark):
-    """S6 snapshot.mode=initial: snapshot (op='r', ts_ms=0) seeds the
-    store; later WAL changes override; an unchanged snapshot row
-    survives. Exactly Debezium's backfill-then-stream contract."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from docker_based_real_time_etl_project_spark.cdc import snapshot_envelopes
-
-    state_dir = tempfile.mkdtemp(prefix="cdc_snap_")
-    sink = upsert_parquet_sink(state_dir, ["k"])
-    # snapshot of current table state: k=1 -> 10.0, k=2 -> 20.0
-    snap_df = spark.createDataFrame([(1, 10.0), (2, 20.0)], "k long, v double")
-    snap = decode_envelope(
-        snapshot_envelopes(snap_df, ["k", "v"], lsn=F.col("k"), table="t"), ROW
+def test_cdc_lake_sink_snapshot_then_stream_backfill(spark):
+    """S6 snapshot.mode=initial: snapshot read events (op='r', ts_ms=0)
+    seed the lake; later WAL changes override; unchanged snapshot rows
+    survive, in an untouched bucket and in a rewritten one. Exactly
+    Debezium's backfill-then-stream contract."""
+    lake = tempfile.mkdtemp(prefix="cdc_backfill_")
+    sink = make_cdc_snap_sink(lake)
+    # bucket = user_id % 8: user 9 shares user 1's bucket, user 4 has
+    # a bucket of its own that the WAL batch never touches
+    snap_df = spark.createDataFrame(
+        [(1, 10.0), (2, 20.0), (4, 40.0), (9, 90.0)], "user_id long, value double"
     )
-    sink(snap, 0)
+    sink(
+        decode_envelope(
+            snapshot_envelopes(snap_df, ["user_id", "value"], lsn=F.col("user_id"), table="t"),
+            ROW_SCHEMA,
+        ),
+        0,
+    )
+    assert _live(spark, lake) == {(1, 10.0), (2, 20.0), (4, 40.0), (9, 90.0)}
     # then the WAL stream: k=1 updated, k=3 created, k=2 deleted
-    wal = decode_envelope(
-        _envelopes(spark, [(1, 11.0, "u", 100, 10), (3, 30.0, "c", 150, 11), (2, 20.0, "d", 200, 12)]),
-        ROW,
+    sink(
+        _sink_batch(
+            spark,
+            [(1, 11.0, "u", 100, 10), (3, 30.0, "c", 150, 11), (2, 20.0, "d", 200, 12)],
+        ),
+        1,
     )
-    sink(wal, 1)
-    got = {(r.k, r.v) for r in read_state(spark, state_dir).collect()}
-    assert got == {(1, 11.0), (3, 30.0)}  # k=2 deleted, k=1 updated, k=3 new
+    assert _live(spark, lake) == {(1, 11.0), (3, 30.0), (4, 40.0), (9, 90.0)}
 
 
 def test_incremental_agg_equals_state_recompute_under_batch_splits(spark):

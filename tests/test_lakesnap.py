@@ -1137,6 +1137,37 @@ def test_delete_all_rows_leaves_usable_empty_table(spark):
     assert [r["id"] for r in snap_read(spark, path).collect()] == [3]
 
 
+def test_merge_deleting_a_whole_partition_drops_its_entries(spark):
+    """A tombstone merge that deletes every row of one partition
+    publishes a version with no entries for it: the CoW rewrite of an
+    emptied partition writes nothing, and nothing of it carries
+    forward. The other partitions' entries carry over verbatim, and
+    the previous version still reads the emptied partition's rows."""
+    from docker_based_real_time_etl_project_spark.lakesnap import _read_manifest
+
+    path = tempfile.mkdtemp(prefix="snapempty_")
+    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
+    snap_init(spark, orders, path, "o_orderpriority", sort_by=("o_orderkey",))
+    part = "1-URGENT"
+    gone = orders.filter(F.col("o_orderpriority") == part)
+    n_part = gone.count()
+    assert n_part > 0
+    v = snap_merge(
+        spark, path, gone.withColumn("_delete", F.lit(True)),
+        key_cols=("o_orderkey",), delete_col="_delete",
+    )
+    assert v == 2
+    m1, m2 = _read_manifest(path, 1), _read_manifest(path, 2)
+    assert not [e for e in m2["entries"] if e["partition"] == part]
+    kept = [e for e in m1["entries"] if e["partition"] != part]
+    assert kept and m2["entries"] == kept
+    latest = snap_read(spark, path)
+    assert latest.filter(F.col("o_orderpriority") == part).count() == 0
+    assert latest.count() == orders.count() - n_part
+    v1_part = snap_read(spark, path, 1).filter(F.col("o_orderpriority") == part)
+    assert v1_part.count() == n_part
+
+
 def test_bloom_on_partition_col_is_rejected_before_write(spark, tmp_path):
     """Config errors (bloom on the partition key, bad bits, unknown
     column) must fail BEFORE any data is written."""

@@ -2,11 +2,10 @@
 
 write_clustered must produce (a) partition directories the reader
 prunes, (b) range-clustered files whose row-group min/max are
-disjoint (the skipping contract), (c) no file above the row target;
-compact_dir must collapse a fragmented directory into that same
-layout without losing a row. Negative controls pin that a naive
-write does NOT have these properties — the assertions measure the
-layout, not the test's optimism.
+disjoint (the skipping contract), (c) no file above the row target.
+Negative controls pin that a naive write does NOT have these
+properties — the assertions measure the layout, not the test's
+optimism.
 """
 
 from __future__ import annotations
@@ -18,13 +17,36 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from docker_based_real_time_etl_project_spark.lakewrite import (
-    _leaf_parquet_files,
-    compact_dir,
-    row_group_ranges,
-    write_clustered,
-)
+from docker_based_real_time_etl_project_spark.lakewrite import write_clustered
 from docker_based_real_time_etl_project_spark.queries.registry import table
+
+
+def _leaf_parquet_files(path: str) -> list[str]:
+    return [
+        os.path.join(root, f)
+        for root, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
+
+
+def row_group_ranges(path: str, column: str) -> list[tuple]:
+    """(min, max) of ``column`` for every row group under ``path``,
+    straight from parquet footer statistics — the same metadata a
+    scan's skipping logic reads. A clustered write is proven by these
+    ranges being (near-)disjoint, an unclustered one by every range
+    spanning the whole domain."""
+    out: list[tuple] = []
+    for f in sorted(_leaf_parquet_files(path)):
+        md = pq.ParquetFile(f).metadata
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        if column not in idx:
+            continue
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx[column]).statistics
+            if st is not None and st.has_min_max:
+                out.append((st.min, st.max))
+    return out
 
 
 def _checksum(df):
@@ -104,24 +126,6 @@ def test_row_groups_disjoint_on_sort_key(spark, sf_dir, clustered_dir):
     assert noverlaps > 0, "negative control: naive layout should interleave"
 
 
-def test_compact_dir_collapses_fragments(spark, sf_dir):
-    frag = tempfile.mkdtemp(prefix="t_lake_frag_")
-    src = table(spark, sf_dir, "events")
-    # a streaming sink's typical damage: many tiny files, no ordering
-    src.repartition(64).write.mode("overwrite").parquet(frag)
-    before = _checksum(spark.read.parquet(frag))
-    stats = compact_dir(
-        spark, frag, target_rows_per_file=1000, sort_by=("ts", "event_id")
-    )
-    assert stats["files_before"] >= 64
-    assert stats["files_after"] < stats["files_before"] // 4
-    assert stats["rows"] == before["n"]
-    back = spark.read.parquet(frag).select(*src.columns)
-    assert _checksum(back) == before
-    for f in _leaf_parquet_files(frag):
-        assert pq.ParquetFile(f).metadata.num_rows <= 1000
-
-
 def test_bloom_filter_option_grows_footer(spark, sf_dir):
     # same rows, same order (single range partition, total sort), and
     # the baseline also writes user_id without dictionary — so the only
@@ -148,192 +152,3 @@ def test_bloom_filter_option_grows_footer(spark, sf_dir):
     sb = sum(os.path.getsize(f) for f in _leaf_parquet_files(base))
     sz = sum(os.path.getsize(f) for f in _leaf_parquet_files(blm))
     assert sz >= sb + 512, "bloom-enabled file should carry the bitmap bytes"
-
-
-def test_streaming_sink_then_compact(spark, sf_dir):
-    """The reference's whole shape — stream in, queryable store out —
-    landed on a lake: Spark's exactly-once file sink (manifest-commit)
-    produces one small file per trigger; compact_dir promotes the
-    fragmented ingest dir to a clustered serving layout, dropping the
-    manifest (the compacted dir is a plain parquet table; the sink's
-    checkpoint must not keep writing into it — single-writer
-    maintenance window, as documented)."""
-    from docker_based_real_time_etl_project_spark.schemas import TESTDATA_SCHEMAS
-    from docker_based_real_time_etl_project_spark.streaming.replay import (
-        slice_table_to_dir,
-    )
-
-    src_dir = slice_table_to_dir(
-        spark, sf_dir, "events", "ts", n_slices=8, prefix="t_lake_stream_src_"
-    )
-    stream = (
-        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
-    )
-    sink = tempfile.mkdtemp(prefix="t_lake_sink_")
-    ck = tempfile.mkdtemp(prefix="t_lake_ck_")
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300), "stream did not drain"
-    assert os.path.isdir(os.path.join(sink, "_spark_metadata"))
-    assert len(_leaf_parquet_files(sink)) >= 8  # one per trigger: fragmented
-    src = table(spark, sf_dir, "events")
-    want = _checksum(src)
-    stats = compact_dir(
-        spark, sink, target_rows_per_file=1000, sort_by=("ts", "event_id")
-    )
-    assert stats["rows"] == want["n"]
-    back = spark.read.parquet(sink).select(*src.columns)
-    assert _checksum(back) == want
-    assert not os.path.exists(os.path.join(sink, "_spark_metadata"))
-
-
-# ---------------------------------------------------------------------------
-# merge_upsert: copy-on-write MERGE contracts
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture()
-def merge_lake(spark, sf_dir):
-    """Fresh orders lake partitioned on o_orderpriority per test."""
-    out = tempfile.mkdtemp(prefix="t_merge_")
-    write_clustered(
-        table(spark, sf_dir, "orders"),
-        out,
-        partition_by=("o_orderpriority",),
-        sort_by=("o_orderkey",),
-        target_rows_per_file=200,
-    )
-    return out
-
-
-def test_merge_upsert_semantics(spark, sf_dir, merge_lake):
-    """Upsert replaces (not duplicates), delete removes, insert adds."""
-    from docker_based_real_time_etl_project_spark.lakewrite import merge_upsert
-
-    o = table(spark, sf_dir, "orders")
-    first = o.orderBy("o_orderkey").limit(3).collect()
-    k_up, k_del = first[0]["o_orderkey"], first[1]["o_orderkey"]
-    template = o.filter(F.col("o_orderkey") == k_up)
-    updates = (
-        template.withColumn("o_totalprice", F.lit(123.25)).withColumn(
-            "_delete", F.lit(False)
-        )
-        .unionByName(
-            o.filter(F.col("o_orderkey") == k_del).withColumn("_delete", F.lit(True))
-        )
-        .unionByName(
-            template.withColumn("o_orderkey", F.lit(999_999_999))
-            .withColumn("o_totalprice", F.lit(7.5))
-            .withColumn("_delete", F.lit(False))
-        )
-    )
-    stats = merge_upsert(
-        spark, merge_lake, updates,
-        key_cols=("o_orderkey",), partition_col="o_orderpriority",
-        delete_col="_delete",
-    )
-    back = spark.read.parquet(merge_lake)
-    n_before = o.count()
-    assert stats["delete_rows"] == 1
-    assert back.count() == n_before  # -1 delete +1 insert
-    up = back.filter(F.col("o_orderkey") == k_up).collect()
-    assert len(up) == 1 and up[0]["o_totalprice"] == 123.25
-    assert back.filter(F.col("o_orderkey") == k_del).count() == 0
-    ins = back.filter(F.col("o_orderkey") == 999_999_999).collect()
-    assert len(ins) == 1 and ins[0]["o_totalprice"] == 7.5
-
-
-def test_merge_upsert_prunes_untouched_partitions(spark, sf_dir, merge_lake):
-    """CoW I/O ∝ touched partitions: files in partitions absent from
-    the update batch are NOT rewritten (byte-identical mtimes), while
-    the touched partition's files are."""
-    from docker_based_real_time_etl_project_spark.lakewrite import (
-        _leaf_parquet_files,
-        merge_upsert,
-    )
-
-    o = table(spark, sf_dir, "orders")
-    target = o.orderBy("o_orderkey").limit(1).collect()[0]
-    tp = target["o_orderpriority"]
-    before = {f: os.path.getmtime(f) for f in _leaf_parquet_files(merge_lake)}
-    updates = (
-        o.filter(F.col("o_orderkey") == target["o_orderkey"])
-        .withColumn("o_totalprice", F.lit(1.0))
-        .withColumn("_delete", F.lit(False))
-    )
-    merge_upsert(
-        spark, merge_lake, updates,
-        key_cols=("o_orderkey",), partition_col="o_orderpriority",
-        delete_col="_delete",
-    )
-    touched_prefix = os.path.join(merge_lake, f"o_orderpriority={tp}")
-    untouched = [f for f in before if not f.startswith(touched_prefix)]
-    assert untouched, "fixture must span >1 partition"
-    for f in untouched:
-        assert os.path.getmtime(f) == before[f], f"untouched file rewritten: {f}"
-    new_files = set(_leaf_parquet_files(merge_lake))
-    old_touched = {f for f in before if f.startswith(touched_prefix)}
-    assert not (old_touched & new_files), "touched partition must be rewritten"
-
-
-def test_merge_upsert_removes_emptied_partition(spark, sf_dir, merge_lake):
-    """Deleting every row of a partition removes its directory —
-    dynamic overwrite alone cannot express 'overwrite with nothing'."""
-    from docker_based_real_time_etl_project_spark.lakewrite import merge_upsert
-
-    o = table(spark, sf_dir, "orders")
-    tp = o.orderBy("o_orderkey").limit(1).collect()[0]["o_orderpriority"]
-    updates = o.filter(F.col("o_orderpriority") == tp).withColumn(
-        "_delete", F.lit(True)
-    )
-    merge_upsert(
-        spark, merge_lake, updates,
-        key_cols=("o_orderkey",), partition_col="o_orderpriority",
-        delete_col="_delete",
-    )
-    from urllib.parse import unquote
-
-    dirs = [
-        unquote(d.split("=", 1)[1])
-        for d in os.listdir(merge_lake)
-        if d.startswith("o_orderpriority=")
-    ]
-    assert tp not in dirs
-    back = spark.read.parquet(merge_lake)
-    assert back.filter(F.col("o_orderpriority") == tp).count() == 0
-    assert back.count() == o.filter(F.col("o_orderpriority") != tp).count()
-
-
-def test_vacuum_removes_orphans_keeps_live_data(spark, sf_dir, merge_lake):
-    """vacuum_dir removes aged compaction staging dirs and crc debris,
-    never live data; young staging dirs (a racing job) survive."""
-    from docker_based_real_time_etl_project_spark.lakewrite import vacuum_dir
-
-    old_stage = f"{merge_lake}.__compact_deadbeef"
-    young_stage = f"{merge_lake}.__old_cafebabe"
-    os.makedirs(old_stage)
-    os.makedirs(young_stage)
-    tmp_dir = os.path.join(merge_lake, "_temporary")
-    os.makedirs(tmp_dir)
-    crc = os.path.join(merge_lake, ".part-0000.crc")
-    open(crc, "w").close()
-    past = os.path.getmtime(merge_lake) - 7200
-    for p in (old_stage, tmp_dir, crc):
-        os.utime(p, (past, past))
-
-    before = _checksum(spark.read.parquet(merge_lake))
-    stats = vacuum_dir(merge_lake, min_age_sec=3600)
-    assert stats == {"removed_dirs": 2, "removed_files": 1}
-    assert not os.path.exists(old_stage)
-    assert not os.path.exists(tmp_dir)
-    assert not os.path.exists(crc)
-    assert os.path.isdir(young_stage)  # younger than retention: kept
-    assert _checksum(spark.read.parquet(merge_lake)) == before
