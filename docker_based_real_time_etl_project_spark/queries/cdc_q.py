@@ -20,6 +20,7 @@ from docker_based_real_time_etl_project_spark.cdc import (
     encode_envelope,
     materialize_latest,
 )
+from docker_based_real_time_etl_project_spark.queries.materialize import scratch_dir
 from docker_based_real_time_etl_project_spark.queries.registry import (
     dsum, register, sql_dsum, table,
 )
@@ -407,7 +408,7 @@ def _cdc_snap_pipeline(
     import os
 
     src = _cdc_envelope_batches(spark, sf_dir)
-    lake = tempfile.mkdtemp(prefix="cdc_snap_lake_")
+    lake = scratch_dir("cdc_snap_lake_")
     sink = make_cdc_snap_sink(lake, mode=mode)
 
     stream = (
@@ -645,8 +646,10 @@ def _ivm_lake_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         _merge_updates,
     )
 
+    # the build returns two paths in one string, which the
+    # materialization cleanup cannot remove: each lake is a scratch dir
     def build() -> str:
-        o_lake = tempfile.mkdtemp(prefix="ivm_orders_snap_")
+        o_lake = scratch_dir("ivm_orders_snap_")
         snap_init(
             spark,
             table(spark, sf_dir, "orders").select(
@@ -666,7 +669,7 @@ def _ivm_lake_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             sort_by=("o_orderkey",),
         )
         expect_commit("q_lake_ivm_join/q_lake_ivm_minmax", v, 2)
-        c_lake = tempfile.mkdtemp(prefix="ivm_customer_snap_")
+        c_lake = scratch_dir("ivm_customer_snap_")
         snap_init(
             spark,
             table(spark, sf_dir, "customer").select(
@@ -1167,7 +1170,7 @@ def run_scd2_pipeline(
         replay_events,
     )
 
-    lake = tempfile.mkdtemp(prefix="scd2_lake_")
+    lake = scratch_dir("scd2_lake_")
     q = (
         replay_events(spark, slices_dir)
         .writeStream.foreachBatch(make_scd2_sink(lake, mode=mode))

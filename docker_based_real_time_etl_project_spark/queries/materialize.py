@@ -5,7 +5,8 @@ fingerprint) — the fingerprint (mtime_ns, size) means regenerating
 testdata under the same path mid-session rebuilds instead of serving
 a stale artifact, and every parameter a build depends on is in the
 key so two callers with different settings never share one. All temp
-dirs are removed at interpreter exit.
+dirs, and those made with :func:`scratch_dir`, are removed at
+interpreter exit.
 
 Shared by the streaming replay slices / static-index builds
 (queries/streaming_q.py) and the dedup cluster artifact
@@ -21,6 +22,7 @@ from __future__ import annotations
 import atexit
 import os
 import shutil
+import tempfile
 from typing import Callable
 
 _MATERIALIZATION_CACHE: dict[tuple, str] = {}
@@ -31,8 +33,23 @@ _MATERIALIZATION_CACHE: dict[tuple, str] = {}
 BUILD_COUNTS: dict[tuple, int] = {}
 
 
+# dirs from scratch_dir: per-call lakes, checkpoints and session copies
+# that no materialize_once key owns
+_SCRATCH_DIRS: list[str] = []
+
+
+def scratch_dir(prefix: str, dir: str | None = None) -> str:
+    """``tempfile.mkdtemp(prefix=prefix, dir=dir)``, removed at
+    interpreter exit like the materializations. For a temp dir made
+    outside a ``materialize_once`` build: a returned DataFrame may
+    still read it lazily, so it lives until the process ends."""
+    d = tempfile.mkdtemp(prefix=prefix, dir=dir)
+    _SCRATCH_DIRS.append(d)
+    return d
+
+
 def _cleanup_materializations() -> None:
-    for d in _MATERIALIZATION_CACHE.values():
+    for d in [*_MATERIALIZATION_CACHE.values(), *_SCRATCH_DIRS]:
         shutil.rmtree(d, ignore_errors=True)
 
 

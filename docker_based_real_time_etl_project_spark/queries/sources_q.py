@@ -25,6 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from docker_based_real_time_etl_project_spark.queries.materialize import scratch_dir
 from docker_based_real_time_etl_project_spark.queries.registry import (
     dsum, register, sql_dsum, table,
 )
@@ -38,7 +39,7 @@ def _text_copy(spark: SparkSession, sf_dir: str, name: str, fmt: str) -> str:
     """Write `name` as CSV/JSON once per session; return the dir."""
     key = (sf_dir, name, fmt)
     if key not in _COPY_CACHE:
-        out = tempfile.mkdtemp(prefix=f"{name}_{fmt}_")
+        out = scratch_dir(f"{name}_{fmt}_")
         w = table(spark, sf_dir, name).write.mode("overwrite").option(
             "timestampFormat", _TS_FMT
         )
@@ -152,7 +153,7 @@ def q_source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     to hold."""
     key = (sf_dir, "orders", "orc")
     if key not in _COPY_CACHE:
-        out = tempfile.mkdtemp(prefix="orders_orc_")
+        out = scratch_dir("orders_orc_")
         table(spark, sf_dir, "orders").write.mode("overwrite").orc(out)
         _COPY_CACHE[key] = out
     o = read_orc(spark, _COPY_CACHE[key])
@@ -177,7 +178,7 @@ def _zordered_lineitem(spark: SparkSession, sf_dir: str):
     if sf_dir not in _ZLAYOUT_CACHE:
         li = table(spark, sf_dir, "lineitem")
         grid = fit_grid(li, "l_partkey", "l_suppkey", bits=3)
-        out = tempfile.mkdtemp(prefix="lineitem_zorder_")
+        out = scratch_dir("lineitem_zorder_")
         zorder_write(li, out, grid)
         _ZLAYOUT_CACHE[sf_dir] = (out, grid)
     out, grid = _ZLAYOUT_CACHE[sf_dir]
@@ -494,7 +495,7 @@ def q_lake_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap_read,
     )
 
-    work = tempfile.mkdtemp(prefix="lake_merge_")
+    work = scratch_dir("lake_merge_")
     snap_clone(spark, _orders_snap(spark, sf_dir), work, version=1)
     snap_merge(
         spark,
@@ -1155,7 +1156,7 @@ def _zordered3_lineitem(spark: SparkSession, sf_dir: str):
         li = table(spark, sf_dir, "lineitem").withColumn(
             "l_qty_i", F.col("l_quantity").cast("bigint")
         )
-        out = tempfile.mkdtemp(prefix="lineitem_z3_")
+        out = scratch_dir("lineitem_z3_")
         grid = write_clustered(
             li, out, layout="zorder",
             zorder_by=("l_partkey", "l_suppkey", "l_qty_i"), zorder_bits=2,

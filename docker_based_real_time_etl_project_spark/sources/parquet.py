@@ -99,7 +99,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     target = spark.sparkContext.defaultParallelism
     if _RECHUNK and df.rdd.getNumPartitions() < max(2, target // 4):
-        import tempfile
+        # lazy: the queries package imports this module
+        from docker_based_real_time_etl_project_spark.queries.materialize import (
+            scratch_dir,
+        )
 
         # chunk count scales with bytes (32 KB/file, >=2, <=cores): a
         # 25-row dim stays 2 files so its size STATISTICS stay near
@@ -107,7 +110,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # output estimates (products of side sizes) then cross the
         # broadcast threshold and flip star joins to sort-merge
         n_chunks = min(target, max(2, os.path.getsize(path) // 32768))
-        out = tempfile.mkdtemp(prefix=f"rechunk_{name}_")
+        out = scratch_dir(f"rechunk_{name}_")
         # timestamps are written post-normalization (ns already truncated
         # to us), so the cached copy reads back with the declared types
         df.repartition(n_chunks).write.mode("overwrite").parquet(out)

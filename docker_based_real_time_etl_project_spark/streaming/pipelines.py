@@ -10,7 +10,6 @@ production -- reference cadence ``etl.py:240`` -- vs ``availableNow``
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -210,6 +209,9 @@ def run_to_memory(
     executor memory. Results are partition-count independent (cent-sum
     / decimal aggregation throughout). The session value is restored
     after the stream drains."""
+    # lazy: the queries package imports this module
+    from docker_based_real_time_etl_project_spark.queries.materialize import scratch_dir
+
     spark = sdf.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -222,7 +224,7 @@ def run_to_memory(
             .outputMode(output_mode)
             .option(
                 "checkpointLocation",
-                checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_", dir=_fast_tmp()),
+                checkpoint_dir or scratch_dir("ckpt_", dir=_fast_tmp()),
             )
             .trigger(availableNow=True)
             .start()

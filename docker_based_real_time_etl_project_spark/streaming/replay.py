@@ -13,7 +13,6 @@ so watermarks advance realistically and a held-back slice is genuinely
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,8 +70,11 @@ def slice_table_to_dir(
     kept slice indexes): slices then ARRIVE in that order while each
     still carries its own time range — a genuinely out-of-order stream
     for exercising watermark-delayed re-sort operators."""
+    # lazy: the queries package imports this module
+    from docker_based_real_time_etl_project_spark.queries.materialize import scratch_dir
+
     ev = load_table(spark, sf_dir, table)
-    out = out_dir or tempfile.mkdtemp(prefix=prefix or f"{table}_stream_")
+    out = out_dir or scratch_dir(prefix or f"{table}_stream_")
     bounds = ev.selectExpr(
         f"percentile_approx(cast({order_col} as double), array({','.join(str((i + 1) / n_slices) for i in range(n_slices - 1))}), 10000) p"
     ).collect()[0]["p"]

@@ -5,6 +5,8 @@ a CDC feed, and vacuum retention."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import tempfile
 
 import pyspark.sql.functions as F
@@ -2214,3 +2216,32 @@ def test_writers_keep_recorded_column_types(spark):
     got = snap_read(spark, path)
     assert got.dtypes == df.dtypes
     assert sorted(tuple(r) for r in got.collect()) == [(1, "a", 11), (2, "b", 30)]
+
+
+_LAKE_MERGE_RUN = """
+import glob, os, sys
+sys.path.insert(0, {root!r})
+from docker_based_real_time_etl_project_spark.queries.sources_q import q_lake_merge
+from docker_based_real_time_etl_project_spark.session import get_spark
+
+spark = get_spark("lake-merge-tmp", master="local[2]")
+print("groups", q_lake_merge(spark, {sf!r}).count())
+print("lakes", len(glob.glob(os.path.join(os.environ["TMPDIR"], "lake_merge_*"))))
+"""
+
+
+def test_lake_merge_leaves_no_temp_lake(tmp_path, sf_dir):
+    """q_lake_merge writes its merged lake under the temp dir; the
+    process removes it at exit, so repeated gate and bench runs leave
+    no lake_merge_* dirs behind."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = dict(os.environ, TMPDIR=str(tmp), SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _LAKE_MERGE_RUN.format(root=root, sf=sf_dir)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "lakes 1" in out.stdout, out.stdout
+    assert not list(tmp.glob("lake_merge_*"))

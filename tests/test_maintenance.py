@@ -1,49 +1,9 @@
-"""Compaction: preserves rows exactly, reduces file count, no-ops
-below threshold, readers of the old listing unaffected (backup dir).
+"""LSH index maintenance: the persisted index's version history is
+load-bearing, and compacting the streamed index keeps its pair set.
+Compaction itself is ``lakesnap.snap_compact`` (tests/test_lakesnap.py).
 """
 
 from __future__ import annotations
-
-import os
-import tempfile
-
-from docker_based_real_time_etl_project_spark.operators.maintenance import (
-    compact_parquet_dir,
-    compaction_plan,
-    drop_compaction_backups,
-)
-from docker_based_real_time_etl_project_spark.sources.parquet import load_table
-
-
-def _fragmented_copy(spark, sf_dir, n_files=32):
-    out = os.path.join(tempfile.mkdtemp(prefix="compact_"), "events")
-    load_table(spark, sf_dir, "events").repartition(n_files).write.parquet(out)
-    return out
-
-
-def test_compaction_preserves_rows(spark, sf_dir):
-    path = _fragmented_copy(spark, sf_dir)
-    before = spark.read.parquet(path)
-    n_before = before.count()
-    ids_before = before.selectExpr("sum(event_id)").collect()[0][0]
-
-    res = compact_parquet_dir(spark, path, target_file_bytes=64 * 1024 * 1024)
-    assert res["compacted"] and res["n_files"] >= 32
-
-    after = spark.read.parquet(path)
-    assert after.count() == n_before
-    assert after.selectExpr("sum(event_id)").collect()[0][0] == ids_before
-    assert compaction_plan(path)["n_files"] < res["n_files"]
-    # backup dir still readable (old listings finish), then retention
-    assert spark.read.parquet(res["backup"]).count() == n_before
-    assert drop_compaction_backups(path) == 1
-
-
-def test_compaction_noop_below_threshold(spark, sf_dir):
-    path = _fragmented_copy(spark, sf_dir, n_files=4)
-    res = compact_parquet_dir(spark, path, min_files=8)
-    assert res["compacted"] is False
-    assert compaction_plan(path)["n_files"] == 4
 
 
 def test_lsh_index_restore_matters(spark, sf_dir):
